@@ -35,7 +35,11 @@ CREDIT_CARD_RE = (
 )
 SSN_RE = r"\b\d{3}-\d{2}-\d{4}\b"
 EMAIL_RE = r"\b[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}\b"
-PII_FREE_TEXT_RE = re.compile(f"(?:{CREDIT_CARD_RE})|(?:{SSN_RE})|(?:{EMAIL_RE})")
+# re.ASCII: the reference's Java regexes match ASCII digits only for \d, so
+# e.g. Arabic-Indic digits are not an SSN there and must not be here.
+PII_FREE_TEXT_RE = re.compile(
+    f"(?:{CREDIT_CARD_RE})|(?:{SSN_RE})|(?:{EMAIL_RE})", re.ASCII
+)
 
 
 def mask_it(

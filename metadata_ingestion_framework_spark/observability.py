@@ -1,18 +1,33 @@
 """Observability tables (reference parity: Task.scala:52-142, LocalCreate:38-80).
 
 Three append tables: ``pipeline_status`` (per-task state + offsets),
-``pipeline_fact`` (row-count facts, mergeSchema on), ``pipeline_error_logs``
-(failed rows serialized + stacktrace). The reference writes status via raw
-SQL INSERT string interpolation (Task.scala:57) — we use DataFrame appends
-(parameterized, injection-free; SURVEY.md §7.4).
+``pipeline_fact`` (row-count facts), ``pipeline_error_logs`` (failed rows
+serialized + stacktrace). The reference writes status via raw SQL INSERT
+string interpolation (Task.scala:57); here every value is a typed column,
+never SQL text (injection-free; SURVEY.md §7.4).
+
+Status and fact rows are a handful per call, so they are built on the
+driver and written with pyarrow as one small parquet file per call: no
+Spark job. A Spark append would cost a job and several files for each such
+row, on the blocking path of every batch. Each file is written under a
+hidden name (``.<name>.tmp``, which Spark's reader skips) and moved into
+place with ``os.replace``, so a reader never sees a partial file. That
+assumes ``root`` is a local (POSIX) path, as ``VersionedParquetStore``'s
+pointer swap does; on an object store use a conditional put. Error rows
+are data-sized and stay a Spark append.
 """
 
 from __future__ import annotations
 
+import os
 import time
 import traceback
+import uuid
 from dataclasses import dataclass
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -30,19 +45,41 @@ ERROR_SCHEMA = (
     "batch_id long, last_update timestamp"
 )
 
+# On-disk layouts: the column order and types the earlier Spark appends
+# wrote, so old and new files read back as one table. Timestamps are
+# microseconds, never nanoseconds: get_spark() reads parquet nanos as long.
+_TS = pa.timestamp("us", tz="UTC")
+_STATUS_FILE = pa.schema([
+    ("pipeline_id", pa.string()), ("task_name", pa.string()),
+    ("status", pa.string()), ("batch_id", pa.int64()),
+    ("run_id", pa.string()), ("message", pa.string()),
+    ("topic", pa.string()), ("partition", pa.int32()),
+    ("startOffset", pa.int64()), ("endOffset", pa.int64()),
+    ("last_update", _TS),
+])
+_FACT_FILE = pa.schema([
+    ("pipeline_id", pa.string()), ("task_name", pa.string()),
+    ("metric", pa.string()), ("value", pa.int64()),
+    ("batch_id", pa.int64()), ("last_update", _TS),
+])
+
 
 @dataclass
 class ObservabilityStore:
-    """Parquet-backed status/fact/error sinks under one root path."""
+    """Parquet-backed status/fact/error sinks under one local root path."""
 
     spark: SparkSession
     root: str
 
-    def _append(self, df: DataFrame, name: str, merge_schema: bool = False) -> None:
-        writer = df.write.mode("append")
-        if merge_schema:
-            writer = writer.option("mergeSchema", "true")
-        writer.parquet(f"{self.root}/{name}")
+    def _write_rows(self, name: str, rows: list[tuple], schema: pa.Schema) -> None:
+        """Land driver-side rows as one parquet file, atomically."""
+        table = pa.table([list(col) for col in zip(*rows)], schema=schema)
+        d = os.path.join(self.root, name)
+        os.makedirs(d, exist_ok=True)
+        fname = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(d, f".{fname}.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(d, fname))
 
     def _read(self, name: str, schema: str) -> DataFrame:
         try:
@@ -56,40 +93,41 @@ class ObservabilityStore:
         pipeline_id: str,
         task_name: str,
         status: str,
-        offset_ranges: DataFrame | None = None,
+        offset_ranges: DataFrame | list[tuple] | None = None,
         batch_id: int = -1,
         run_id: str = "",
         message: str = "",
     ) -> None:
-        base = self.spark.createDataFrame(
-            [(pipeline_id, task_name, status, batch_id, run_id, message)],
-            "pipeline_id string, task_name string, status string, batch_id long, run_id string, message string",
+        """One status row per offset range, each ``(topic, partition,
+        startOffset, endOffset)``. ``offset_ranges`` is a DataFrame with
+        those columns (collected once; one row per source partition) or a
+        list of such tuples. No or empty offsets still land one row, with
+        null offsets."""
+        if isinstance(offset_ranges, DataFrame):
+            offset_ranges = offset_ranges.select(
+                "topic", "partition", "startOffset", "endOffset"
+            ).collect()
+        offsets = offset_ranges or [(None, None, None, None)]
+        now = datetime.now(timezone.utc)
+        self._write_rows(
+            "pipeline_status",
+            [(pipeline_id, task_name, status, batch_id, run_id, message, *o, now)
+             for o in offsets],
+            _STATUS_FILE,
         )
-        # empty offsets must not swallow the status row (crossJoin with an
-        # empty frame yields zero rows) — fall back to the null-offset shape
-        if offset_ranges is not None and not offset_ranges.isEmpty():
-            row = base.crossJoin(offset_ranges)
-        else:
-            row = (
-                base.withColumn("topic", F.lit(None).cast("string"))
-                .withColumn("partition", F.lit(None).cast("int"))
-                .withColumn("startOffset", F.lit(None).cast("long"))
-                .withColumn("endOffset", F.lit(None).cast("long"))
-            )
-        self._append(row.withColumn("last_update", F.current_timestamp()), "pipeline_status")
 
     def read_status(self) -> DataFrame:
         return self._read("pipeline_status", STATUS_SCHEMA)
 
-    # -- facts (Task.scala:76,96 — mergeSchema append) --------------------
+    # -- facts (Task.scala:76,96) ---------------------------------------
     def write_fact(
         self, pipeline_id: str, task_name: str, metric: str, value: int, batch_id: int = -1
     ) -> None:
-        df = self.spark.createDataFrame(
-            [(pipeline_id, task_name, metric, value, batch_id)],
-            "pipeline_id string, task_name string, metric string, value long, batch_id long",
-        ).withColumn("last_update", F.current_timestamp())
-        self._append(df, "pipeline_fact", merge_schema=True)
+        self._write_rows(
+            "pipeline_fact",
+            [(pipeline_id, task_name, metric, value, batch_id, datetime.now(timezone.utc))],
+            _FACT_FILE,
+        )
 
     def read_facts(self) -> DataFrame:
         return self._read("pipeline_fact", FACT_SCHEMA)
@@ -109,7 +147,7 @@ class ObservabilityStore:
             .withColumn("batch_id", F.lit(batch_id).cast("long"))
             .withColumn("last_update", F.current_timestamp())
         )
-        self._append(out, "pipeline_error_logs")
+        out.write.mode("append").parquet(f"{self.root}/pipeline_error_logs")
 
     def read_errors(self) -> DataFrame:
         return self._read("pipeline_error_logs", ERROR_SCHEMA)

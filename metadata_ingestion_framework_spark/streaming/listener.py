@@ -10,8 +10,9 @@ the engine already emits), and ``Dataset.observe`` metrics on streaming
 plans land through the same channel (``observedMetrics``).
 
 Scale posture: listener callbacks run on the driver's event bus — the
-writes here are 1-row/``n_sources``-row appends per micro-batch,
-independent of data volume. Never put per-row work in a listener.
+writes here are 1-row/``n_sources``-row driver-side files per
+micro-batch, independent of data volume, and run no Spark job. Never put
+per-row work in a listener.
 """
 
 from __future__ import annotations
@@ -94,20 +95,15 @@ class PipelineStatusListener(StreamingQueryListener):
         task = p.name or str(p.id)
         self._run_names[str(p.runId)] = task
         sources = list(p.sources or [])
-        offsets = None
-        if sources:
-            offsets = self.store.spark.createDataFrame(
-                [
-                    (
-                        (s.description or "")[:120],
-                        i,
-                        _offset_long(s.startOffset),
-                        _offset_long(s.endOffset),
-                    )
-                    for i, s in enumerate(sources)
-                ],
-                "topic string, partition int, startOffset long, endOffset long",
+        offsets = [
+            (
+                (s.description or "")[:120],
+                i,
+                _offset_long(s.startOffset),
+                _offset_long(s.endOffset),
             )
+            for i, s in enumerate(sources)
+        ]
         self.store.write_status(
             self.pipeline_id, task, "RUNNING",
             offset_ranges=offsets,

@@ -73,6 +73,17 @@ def test_anonymize_replaces_pii_with_sha256(spark):
     assert out.startswith("ssn ") and out.endswith(" end")  # non-PII untouched
 
 
+def test_anonymize_digits_follow_java_ascii_rule(spark):
+    """Java's \\d matches ASCII digits only: an SSN written in Arabic-Indic
+    digits is not PII to the reference and stays as written."""
+    ascii_ssn, arabic_ssn = "123-45-6789", "١٢٣-٤٥-٦٧٨٩"
+    df = spark.createDataFrame([(f"a {arabic_ssn} b {ascii_ssn}",)], "t string")
+    out = anonymize_free_text(df, "t").collect()[0]["t"]
+    assert arabic_ssn in out
+    assert ascii_ssn not in out
+    assert hashlib.sha256(ascii_ssn.encode()).hexdigest() in out
+
+
 def test_encrypt_decrypt_roundtrip(spark):
     df = spark.createDataFrame([(1, "secret"), (2, None)], "id int, v string")
     enc = encrypt_it(df, "v", key="k1")

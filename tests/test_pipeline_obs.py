@@ -519,3 +519,162 @@ def test_store_health_trends_orders_by_ingest_time(spark):
         "r10": (2, 200000, 100000),
         "r11": (3, 400000, 200000),
     }
+
+
+def _jobs_in_group(spark, group, fn) -> int:
+    """Spark jobs ``fn`` runs, read from its job group. Job events reach
+    the status tracker asynchronously but in order, so the count is read
+    after a fence job in a second group has become visible."""
+    import time
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setJobGroup(f"{group}-fence", "fence")
+        spark.range(1).collect()
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    deadline = time.time() + 60
+    while not tracker.getJobIdsForGroup(f"{group}-fence"):
+        assert time.time() < deadline, "fence job never reached the tracker"
+        time.sleep(0.05)
+    return len(tracker.getJobIdsForGroup(group))
+
+
+def test_status_and_fact_writes_run_no_spark_job(spark, tmp_path):
+    from metadata_ingestion_framework_spark.streaming.offsets import (
+        offset_ranges_for_batch,
+    )
+
+    obs = ObservabilityStore(spark, str(tmp_path / "obs"))
+    assert _jobs_in_group(spark, "obs-status", lambda: obs.write_status("p", "t", "Finished")) == 0
+    assert _jobs_in_group(spark, "obs-fact", lambda: obs.write_fact("p", "t", "rows", 3)) == 0
+    batch = spark.createDataFrame(
+        [("k", p, o) for p in range(2) for o in range(5)],
+        "topic string, partition int, offset long",
+    )
+    # DataFrame offsets cost exactly the one collect of their own plan
+    collect_only = _jobs_in_group(
+        spark, "obs-offsets-ref",
+        lambda: offset_ranges_for_batch(batch).select(
+            "topic", "partition", "startOffset", "endOffset"
+        ).collect(),
+    )
+    with_offsets = _jobs_in_group(
+        spark, "obs-offsets",
+        lambda: obs.write_status(
+            "p", "t", "Finished", offset_ranges=offset_ranges_for_batch(batch), batch_id=1
+        ),
+    )
+    assert with_offsets == collect_only >= 1
+    got = {
+        (r.partition, r.startOffset, r.endOffset)
+        for r in obs.read_status().filter("batch_id = 1").collect()
+    }
+    assert got == {(0, 0, 4), (1, 0, 4)}
+
+
+def test_list_offsets_land_one_row_per_range(spark, tmp_path):
+    obs = ObservabilityStore(spark, str(tmp_path / "obs"))
+    obs.write_status(
+        "p", "t", "RUNNING", offset_ranges=[("src", 0, 1, 5), ("src", 1, None, None)],
+        batch_id=4, run_id="r", message="m",
+    )
+    rows = sorted(obs.read_status().collect(), key=lambda r: r.partition)
+    assert [(r.topic, r.partition, r.startOffset, r.endOffset) for r in rows] == [
+        ("src", 0, 1, 5), ("src", 1, None, None)
+    ]
+    assert {(r.status, r.batch_id, r.run_id, r.message) for r in rows} == {
+        ("RUNNING", 4, "r", "m")
+    }
+
+
+def test_old_spark_files_and_new_files_read_as_one_table(spark, tmp_path):
+    """A store whose first rows were Spark appends (the earlier write path)
+    keeps reading as one table once driver-written files join them."""
+    import glob
+    import os
+
+    root = str(tmp_path / "obs")
+    base = spark.createDataFrame(
+        [("p0", "t0", "Finished", 1, "", "")],
+        "pipeline_id string, task_name string, status string, batch_id long, "
+        "run_id string, message string",
+    )
+    offs = spark.createDataFrame(
+        [("k", 0, 5, 9)], "topic string, partition int, startOffset long, endOffset long"
+    )
+    base.crossJoin(offs).withColumn("last_update", F.current_timestamp()).write.mode(
+        "append"
+    ).parquet(f"{root}/pipeline_status")
+    spark.createDataFrame(
+        [("p0", "t0", "input_rows", 5, 1)],
+        "pipeline_id string, task_name string, metric string, value long, batch_id long",
+    ).withColumn("last_update", F.current_timestamp()).write.mode("append").parquet(
+        f"{root}/pipeline_fact"
+    )
+
+    obs = ObservabilityStore(spark, root)
+    obs.write_status("p1", "t1", "Finished", offset_ranges=[("k", 1, 10, 19)], batch_id=2)
+    obs.write_status("p1", "t1", "Finished", batch_id=3)
+    obs.write_fact("p1", "t1", "input_rows", 7, batch_id=2)
+
+    status = obs.read_status()
+    types = dict(status.dtypes)
+    assert types["last_update"] == "timestamp" and types["partition"] == "int"
+    assert types["batch_id"] == types["startOffset"] == types["endOffset"] == "bigint"
+    got = {
+        (r.pipeline_id, r.batch_id, r.topic, r.partition, r.startOffset, r.endOffset)
+        for r in status.collect()
+    }
+    assert got == {
+        ("p0", 1, "k", 0, 5, 9), ("p1", 2, "k", 1, 10, 19), ("p1", 3, None, None, None, None)
+    }
+    assert all(r.last_update is not None for r in status.collect())
+    facts = obs.read_facts()
+    assert dict(facts.dtypes)["last_update"] == "timestamp"
+    assert {(r.pipeline_id, r.value) for r in facts.collect()} == {("p0", 5), ("p1", 7)}
+    # every file, read alone, has the same schema: whichever footer Spark
+    # infers the table schema from, the result is the same
+    for table in ("pipeline_status", "pipeline_fact"):
+        files = glob.glob(os.path.join(root, table, "*.parquet"))
+        assert len(files) >= 2
+        assert len({tuple(spark.read.parquet(f).dtypes) for f in files}) == 1
+
+
+def test_concurrent_writers_land_every_row_and_leave_no_tmp(spark, tmp_path):
+    """Threads share one store, as run_pipelines_parallel's pipelines do;
+    more threads than cores and a short switch interval force interleaving."""
+    import os
+    import sys
+    from concurrent.futures import ThreadPoolExecutor
+
+    root = str(tmp_path / "obs")
+    obs = ObservabilityStore(spark, root)
+    n_threads, n_writes = 8, 5
+
+    def work(i):
+        for b in range(n_writes):
+            obs.write_status(f"p{i}", "t", "Finished", batch_id=b)
+            obs.write_fact(f"p{i}", "t", "rows", b, batch_id=b)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            futures = [pool.submit(work, i) for i in range(n_threads)]
+            for f in futures:
+                f.result(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    want = sorted((f"p{i}", b) for i in range(n_threads) for b in range(n_writes))
+    status = [(r.pipeline_id, r.batch_id) for r in obs.read_status().collect()]
+    facts = [(r.pipeline_id, r.value) for r in obs.read_facts().collect()]
+    assert sorted(status) == want and sorted(facts) == want
+    leftovers = [
+        f for _, _, names in os.walk(root) for f in names if f.endswith(".tmp")
+    ]
+    assert leftovers == []
