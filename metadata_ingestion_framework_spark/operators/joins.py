@@ -63,21 +63,19 @@ def build_inner_join_condition(
     return out
 
 
-def build_partition_pruning_filter(
-    updates: DataFrame, partition_col: str, target_alias: str = "target", max_values: int = 10000
-) -> Column | None:
-    """Manual dynamic partition pruning for MERGE (Utility.scala:339-348).
+def collect_partition_values(
+    updates: DataFrame, partition_col: str, max_values: int = 10000
+) -> list | None:
+    """The distinct ``partition_col`` values of the update batch — the one
+    bounded collect behind manual partition pruning (Utility.scala:339-348).
 
-    Collect the distinct partition values present in the update batch and
-    return ``target.<col> IN (...)`` so the merge only touches affected
-    target partitions. This is the reference's flagship optimization: merge
-    conditions without partition literals scan the whole target otherwise.
-
-    Scale posture: the collect is bounded — it is a distinct over the
-    *partition* column of the (already deduped) update micro-batch, i.e. at
-    most a few thousand values; ``max_values`` guards against a mis-declared
-    partition column exploding the IN-list (returns None -> no pruning,
-    correct but unpruned, rather than an OOM driver).
+    Scale posture: the collect is a distinct over the *partition* column of
+    the (already deduped) update micro-batch, i.e. at most a few thousand
+    values; ``max_values`` guards against a mis-declared partition column
+    exploding the IN-list. Returns None — no pruning, correct but unpruned,
+    rather than an OOM driver — when the column is missing, the batch is
+    empty or it holds more than ``max_values`` values. A NULL partition
+    value comes back as None.
     """
     if partition_col not in updates.columns:
         return None
@@ -87,8 +85,16 @@ def build_partition_pruning_filter(
     ]
     if not vals or len(vals) > max_values:
         return None
-    has_null = any(v is None for v in vals)
-    non_null = [v for v in vals if v is not None]
+    return vals
+
+
+def partition_in_filter(
+    values: list, partition_col: str, target_alias: str = "target"
+) -> Column:
+    """``target.<col> IN (values)``, NULL-aware: a None in ``values`` also
+    selects the NULL partition."""
+    has_null = any(v is None for v in values)
+    non_null = [v for v in values if v is not None]
     col = F.col(f"{target_alias}.{partition_col}")
     cond = col.isin(non_null) if non_null else F.lit(False)
     if has_null:
@@ -98,6 +104,24 @@ def build_partition_pruning_filter(
         # silent duplicate-key corruption.
         cond = cond | col.isNull()
     return cond
+
+
+def build_partition_pruning_filter(
+    updates: DataFrame, partition_col: str, target_alias: str = "target", max_values: int = 10000
+) -> Column | None:
+    """Manual dynamic partition pruning for MERGE (Utility.scala:339-348).
+
+    Collect the distinct partition values present in the update batch
+    (``collect_partition_values``) and return ``target.<col> IN (...)``
+    (``partition_in_filter``) so the merge only touches affected target
+    partitions. This is the reference's flagship optimization: merge
+    conditions without partition literals scan the whole target otherwise.
+    Returns None (no pruning) where ``collect_partition_values`` does.
+    """
+    vals = collect_partition_values(updates, partition_col, max_values)
+    if vals is None:
+        return None
+    return partition_in_filter(vals, partition_col, target_alias)
 
 
 def build_merge_key_projections(

@@ -20,7 +20,12 @@ Scale posture (100 TB):
 - manual partition pruning (Utility.scala:339-348) is reproduced by
   splitting the target into affected/unaffected partitions with the
   IN-list filter and joining ONLY the affected slice — the unaffected
-  slice is unioned back untouched (no shuffle, no rewrite);
+  slice is unioned back with no shuffle. The result is a ``MergeResult``
+  that also carries the affected slice alone and the touched partition
+  values, so ``VersionedParquetStore.write`` rewrites only the touched
+  partitions and hard-links the rest from the version the merge read
+  (Delta's touched-files-only rewrite); any other consumer sees the full
+  state;
 - the join itself is a plain equi/theta join Catalyst can plan (sort-merge
   w/ AQE skew splitting; broadcast when the update batch is small).
 
@@ -34,11 +39,13 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
 from metadata_ingestion_framework_spark.operators.dedup import dedup_window
 from metadata_ingestion_framework_spark.operators.joins import (
     build_inner_join_condition,
-    build_partition_pruning_filter,
+    collect_partition_values,
+    partition_in_filter,
 )
 
 _T_MARK = "__t_present"
@@ -65,6 +72,47 @@ DEFAULT_SCD1_CLAUSES = [
     MergeClause(when="matched", action="update"),
     MergeClause(when="not_matched", action="insert"),
 ]
+
+
+class MergeResult(ClassicDataFrame):
+    """The full post-merge state of a partition-pruned MERGE, plus what a
+    store needs to commit only the partitions the merge touched:
+
+    - ``base``: the target frame the merge was given;
+    - ``partition_col``: the pruning column;
+    - ``touched``: the update batch's distinct ``partition_col`` values
+      (None for the NULL partition) — the affected partitions;
+    - ``changed``: the merged affected slice alone, before the untouched
+      slice is unioned back.
+
+    Every rewritten row should land in a ``touched`` partition, and every
+    other partition of ``base`` is unchanged, so a store holding ``base``
+    can keep those partitions as they are on disk. Any transformation
+    (``filter``, ``select``, ...) returns a plain DataFrame and so drops
+    this carry: the untouched partitions on disk are then no longer known
+    to equal the result.
+    """
+
+    base: DataFrame
+    partition_col: str
+    touched: list
+    changed: DataFrame
+
+    @classmethod
+    def of(
+        cls,
+        full: DataFrame,
+        base: DataFrame,
+        partition_col: str,
+        touched: list,
+        changed: DataFrame,
+    ) -> MergeResult:
+        # PySpark's DataFrame.__new__ runs __init__(jdf, session) itself, so
+        # the carry is attached here rather than in an __init__ override.
+        out = cls(full._jdf, full.sparkSession)
+        out.base, out.partition_col = base, partition_col
+        out.touched, out.changed = touched, changed
+        return out
 
 
 def _clause_cond(c: MergeClause) -> Column:
@@ -123,8 +171,12 @@ def merge_apply(
     for existing history — Delta's ``withSchemaEvolution``. Off (default),
     extra update-side columns are silently dropped, exactly like Delta's
     updateAll/insertAll without autoMerge.
+
+    With ``partition_col`` and a prunable update batch the result is a
+    ``MergeResult`` (same rows, plus the touched partitions).
     """
     clauses = clauses if clauses is not None else DEFAULT_SCD1_CLAUSES
+    base = target
     # Columns the update batch NATIVELY carries, before any evolution
     # null-fill. Delta's updateAll under withSchemaEvolution leaves target
     # columns absent from the source UNCHANGED (only insertAll writes NULL
@@ -136,16 +188,17 @@ def merge_apply(
     out_cols = target.columns
 
     untouched = None
-    if partition_col:
-        prune = build_partition_pruning_filter(updates, partition_col, target_alias="target")
-        if prune is not None:
-            # Null / not-in-list partitions can never match the update batch:
-            # keep them verbatim (no join, no rewrite) — the join only sees
-            # the affected partition slice. NULL-safe: coalesce, don't drop.
-            affected = F.coalesce(prune, F.lit(False))
-            t = target.alias("target")
-            untouched = t.filter(~affected).select("target.*")
-            target = t.filter(affected).select("target.*")
+    touched = collect_partition_values(updates, partition_col) if partition_col else None
+    if touched is not None:
+        # Null / not-in-list partitions can never match the update batch:
+        # keep them verbatim (no join) — the join only sees the affected
+        # partition slice. NULL-safe: coalesce, don't drop.
+        affected = F.coalesce(
+            partition_in_filter(touched, partition_col, "target"), F.lit(False)
+        )
+        t = target.alias("target")
+        untouched = t.filter(~affected).select("target.*")
+        target = t.filter(affected).select("target.*")
 
     t = target.withColumn(_T_MARK, F.lit(True)).alias("target")
     u = updates.withColumn(_U_MARK, F.lit(True)).alias("updates")
@@ -220,9 +273,11 @@ def merge_apply(
 
     keep = (target_only | matched | inserted) & ~deleted
     result = joined.filter(keep).select(*[value_of(c).alias(c) for c in out_cols])
-    if untouched is not None:
-        result = untouched.unionByName(result)
-    return result
+    if untouched is None:
+        return result
+    return MergeResult.of(
+        untouched.unionByName(result), base, partition_col, touched, result
+    )
 
 
 def _dedup_updates(

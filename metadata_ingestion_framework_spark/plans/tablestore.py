@@ -23,6 +23,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DataType, IntegralType, StringType
 
 
 # Characters Spark escapes in partition directory names (public behavior of
@@ -71,6 +72,27 @@ def unescape_partition_value(raw: str) -> str:
             buf.extend(ch.encode("utf-8"))
             i += 1
     return buf.decode("utf-8")
+
+
+_HIVE_DEFAULT = "__HIVE_DEFAULT_PARTITION__"
+
+
+def partition_dir(partition_col: str, value) -> str:
+    """The ``col=value`` directory name Spark writes for a partition value
+    (NULL -> the Hive default dir)."""
+    raw = _HIVE_DEFAULT if value is None else escape_partition_value(str(value))
+    return f"{partition_col}={raw}"
+
+
+def _dir_value_type(dtype: DataType) -> type | None:
+    """The Python type whose ``str`` is exactly the directory name Spark
+    writes for a partition column of ``dtype`` (None: no such type here —
+    e.g. booleans write ``true``, floats and dates have several spellings)."""
+    if isinstance(dtype, IntegralType):
+        return int
+    if isinstance(dtype, StringType):
+        return str
+    return None
 
 
 class VersionedParquetStore:
@@ -122,7 +144,7 @@ class VersionedParquetStore:
             if not name.startswith(prefix):
                 continue
             raw = name[len(prefix):]
-            if raw == "__HIVE_DEFAULT_PARTITION__":
+            if raw == _HIVE_DEFAULT:
                 out.append(None)
             else:
                 out.append(unescape_partition_value(raw))
@@ -166,12 +188,7 @@ class VersionedParquetStore:
         base = self._version_path(table, v)
         paths = []
         for val in values:
-            raw = (
-                "__HIVE_DEFAULT_PARTITION__"
-                if val is None
-                else escape_partition_value(str(val))
-            )
-            p = os.path.join(base, f"{partition_col}={raw}")
+            p = os.path.join(base, partition_dir(partition_col, val))
             if os.path.isdir(p):
                 paths.append(p)
         reader = self.spark.read.option("basePath", base)
@@ -210,7 +227,21 @@ class VersionedParquetStore:
         per leaf; distinct leaves parallelize across tasks, and a leaf is
         bucket-bounded by the store sizing rules so the single writer per
         leaf is the intended unit of work. ``cluster=False`` opts out for
-        tables whose leaves are NOT bucket-bounded."""
+        tables whose leaves are NOT bucket-bounded.
+
+        A ``MergeResult`` (``operators/merge.py``) partitioned by its own
+        pruning column commits only the partitions its merge touched:
+        ``df.changed`` goes through the partition-delta path and every other
+        partition directory is hard-linked from the current version, so a
+        merge touching 3 of 4 partitions writes 3 partitions of bytes. The
+        carry is taken only when the untouched slice provably IS the current
+        version's other partitions on disk (``_write_touched``); otherwise —
+        and for any other frame — the whole frame is rewritten. Both paths
+        commit the same rows."""
+        if partition_by:
+            nxt = self._write_touched(df, table, partition_by, cluster)
+            if nxt is not None:
+                return nxt
         cur = self.current_version(table)
         nxt = (cur or 0) + 1
         path = self._version_path(table, nxt)
@@ -222,6 +253,62 @@ class VersionedParquetStore:
         writer.parquet(path)
         self._swap_pointer(table, nxt)
         return nxt
+
+    def _write_touched(
+        self, df: DataFrame, table: str, partition_by: list[str], cluster: bool
+    ) -> int | None:
+        """``write``'s touched-only commit of a MergeResult, or None (nothing
+        written) when the carry does not apply. It applies only when:
+
+        - ``partition_by[0]`` is the merge's partition column;
+        - ``df.base`` is this store's cached ``read`` of the CURRENT version
+          (identity: a target from ``read_partitions``, another store or an
+          older version — e.g. a second writer committed in between — fails);
+        - the data columns keep their names and types (no schema evolution:
+          carried files would lack the new columns);
+        - every touched value names its directory exactly (NULL, or an int /
+          non-empty str on a partition column of that type) and every
+          existing directory carries the canonical name of the value Spark
+          reads back from it (``part=03`` reads as 3 and is refused);
+        - the current layout is partitioned by ``partition_by``;
+        - no merged row lands outside the touched set (a clause ``set`` that
+          moves the partition column, or an insert that leaves it NULL) —
+          checked on the written directories before the pointer swap.
+        """
+        from metadata_ingestion_framework_spark.operators.merge import MergeResult
+
+        if not (isinstance(df, MergeResult) and partition_by[0] == df.partition_col):
+            return None
+        cur = self.current_version(table)
+        if cur is None or df.base is not self._read_cache.get((table, cur)):
+            return None
+
+        def data_cols(frame: DataFrame) -> list:
+            return [(f.name, f.dataType) for f in frame.schema if f.name not in partition_by]
+
+        if data_cols(df) != data_cols(df.base):
+            return None
+        col = df.partition_col
+        kind = _dir_value_type(df.base.schema[col].dataType)
+        if kind is None or any(
+            v is not None and (type(v) is not kind or v == "") for v in df.touched
+        ):
+            return None
+        if self.partition_cols_of(table, cur) != list(partition_by):
+            return None
+        prefix = f"{col}="
+        for name in os.listdir(self._version_path(table, cur)):
+            if not name.startswith(prefix) or name == prefix + _HIVE_DEFAULT:
+                continue
+            try:
+                value = kind(unescape_partition_value(name[len(prefix):]))
+            except ValueError:
+                return None
+            if partition_dir(col, value) != name:
+                return None
+        return self._write_delta(
+            df.changed, table, list(partition_by), df.touched, cluster, strict=True
+        )
 
     def write_partition_delta(
         self,
@@ -258,10 +345,25 @@ class VersionedParquetStore:
         part_cols = (
             [partition_col] if isinstance(partition_col, str) else list(partition_col)
         )
+        if self.current_version(table) is None:
+            return self.write(df, table, partition_by=part_cols, cluster=cluster)
+        return self._write_delta(df, table, part_cols, touched_values, cluster)
+
+    def _write_delta(
+        self,
+        df: DataFrame,
+        table: str,
+        part_cols: list[str],
+        touched_values: list,
+        cluster: bool,
+        strict: bool = False,
+    ) -> int | None:
+        """``write_partition_delta`` on an existing table. ``strict``: if
+        ``df`` wrote any partition outside ``touched_values``, discard the
+        new version and return None instead of letting its fresh contents
+        win over the carried partition."""
         partition_col = part_cols[0]
         cur = self.current_version(table)
-        if cur is None:
-            return self.write(df, table, partition_by=part_cols, cluster=cluster)
         # Validate the PREVIOUS version's layout before paying for the new
         # write: if it is not laid out as '{partition_col}=...' dirs
         # (unpartitioned, or partitioned by a different column), nothing
@@ -326,15 +428,7 @@ class VersionedParquetStore:
         # would be both rewritten and linked (duplicated). Non-null values
         # go through Spark's path escaping so specials like '=' / ':' / '%'
         # match the directory Spark actually wrote (ADVICE r8).
-        touched = {
-            f"{partition_col}="
-            + (
-                "__HIVE_DEFAULT_PARTITION__"
-                if v is None
-                else escape_partition_value(str(v))
-            )
-            for v in touched_values
-        }
+        touched = {partition_dir(partition_col, v) for v in touched_values}
         nxt = cur + 1
         path = self._version_path(table, nxt)
         # Cluster the delta on its partition columns before writing (r14):
@@ -353,6 +447,12 @@ class VersionedParquetStore:
             df.repartition(*[_F.col(c) for c in part_cols]) if cluster else df
         )
         clustered.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
+        if strict and any(
+            n.startswith(f"{partition_col}=") and n not in touched
+            for n in os.listdir(path)
+        ):
+            shutil.rmtree(path)
+            return None
         for name in carry:
             if name in touched:
                 continue

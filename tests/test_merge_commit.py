@@ -1,0 +1,329 @@
+"""Touched-only commits of partition-pruned merges.
+
+A ``MergeResult`` written by ``VersionedParquetStore.write`` rewrites only
+the partitions its merge touched and hard-links the others from the
+version the merge read. These tests check that the committed rows equal a
+full rewrite of the same frame, that untouched partitions share inodes with
+the previous version, and that every case where the carry would be wrong
+falls back to the full rewrite.
+"""
+
+from __future__ import annotations
+
+import os
+
+import pytest
+from pyspark.sql import functions as F
+
+from metadata_ingestion_framework_spark.operators.merge import (
+    MergeClause,
+    MergeResult,
+    merge_apply,
+    scd1_merge,
+    scd2_merge,
+    scd4_merge,
+)
+from metadata_ingestion_framework_spark.plans.tablestore import (
+    VersionedParquetStore,
+    partition_dir,
+)
+
+COLS = ["id", "name", "v", "part"]
+
+
+def _seed(spark, store, table="t"):
+    """40 rows in int partitions 0..3 (ten ids each)."""
+    rows = [(i, f"n{i}", float(i), i // 10) for i in range(40)]
+    store.write(
+        spark.createDataFrame(rows, "id long, name string, v double, part int"),
+        table, partition_by=["part"],
+    )
+
+
+def _updates(spark, rows):
+    return spark.createDataFrame(rows, "id long, name string, v double, part int")
+
+
+def _rows(df, cols=COLS):
+    return sorted(map(tuple, df.select(*cols).collect()), key=repr)
+
+
+def _linked(store, table, version):
+    """Partition dirs of ``version`` whose files all share an inode with
+    the previous version (hard-linked, not rewritten)."""
+    def inodes(v):
+        out = {}
+        vdir = store._version_path(table, v)
+        for part in os.listdir(vdir):
+            if "=" not in part:
+                continue
+            for root, _dirs, files in os.walk(os.path.join(vdir, part)):
+                for f in files:
+                    if f.endswith(".parquet"):
+                        out.setdefault(part, set()).add(os.stat(os.path.join(root, f)).st_ino)
+        return out
+
+    prev, cur = inodes(version - 1), inodes(version)
+    return {p for p, ino in cur.items() if ino <= prev.get(p, set())}
+
+
+def _parts(store, table, version):
+    return sorted(n for n in os.listdir(store._version_path(table, version)) if "=" in n)
+
+
+@pytest.fixture()
+def store(spark, tmp_path):
+    s = VersionedParquetStore(spark, str(tmp_path / "store"))
+    _seed(spark, s)
+    return s
+
+
+def test_touched_only_commit_equals_full_write(spark, store, tmp_path):
+    upd = _updates(spark, [(12, "x", 99.0, 1), (200, "new", 1.0, 2)])
+    merged = scd1_merge(store.read("t"), upd, ["id"], partition_col="part")
+    assert isinstance(merged, MergeResult)
+    assert sorted(merged.touched) == [1, 2]
+    full = VersionedParquetStore(spark, str(tmp_path / "full"))
+    full.write(merged.select("*"), "t", partition_by=["part"])  # plain frame
+
+    v = store.write(merged, "t", partition_by=["part"])
+    assert _rows(store.read("t")) == _rows(full.read("t"))
+    assert _linked(store, "t", v) == {"part=0", "part=3"}
+    assert _parts(store, "t", v) == ["part=0", "part=1", "part=2", "part=3"]
+    # the next merge reads the carried version and carries again
+    merged2 = scd1_merge(
+        store.read("t"), _updates(spark, [(35, "y", 5.0, 3)]), ["id"], partition_col="part"
+    )
+    v2 = store.write(merged2, "t", partition_by=["part"])
+    assert _linked(store, "t", v2) == {"part=0", "part=1", "part=2"}
+    assert store.read("t").filter("id = 35").collect()[0]["name"] == "y"
+    assert store.read("t").count() == 41
+
+
+def _full_fallback(spark, store, frame, tmp_path):
+    """Write ``frame`` and assert the store took the full rewrite: no
+    partition hard-linked, and rows equal a forced full write."""
+    ref = VersionedParquetStore(spark, str(tmp_path / "ref"))
+    ref.write(frame.select("*"), "t", partition_by=["part"])
+    cols = frame.columns
+    v = store.write(frame, "t", partition_by=["part"])
+    assert _linked(store, "t", v) == set()
+    assert _rows(store.read("t"), cols) == _rows(ref.read("t"), cols)
+    return v
+
+
+def test_partition_moving_set_falls_back(spark, store, tmp_path):
+    clauses = [MergeClause(when="matched", action="update", set={"part": "updates.part + 10"})]
+    merged = merge_apply(
+        store.read("t"), _updates(spark, [(12, "x", 0.0, 1)]), ["id"], clauses,
+        partition_col="part",
+    )
+    v = _full_fallback(spark, store, merged, tmp_path)
+    # the moved row left part=1; the rest of part=1 is still there
+    assert "part=11" in _parts(store, "t", v)
+    assert store.read("t").filter("part = 1").count() == 9
+
+
+def test_insert_without_partition_column_falls_back(spark, store, tmp_path):
+    clauses = [
+        MergeClause(when="matched", action="update"),
+        MergeClause(when="not_matched", action="insert",
+                    set={"id": "updates.id", "name": "updates.name", "v": "updates.v"}),
+    ]
+    merged = merge_apply(
+        store.read("t"), _updates(spark, [(12, "x", 0.0, 1), (300, "n", 1.0, 2)]), ["id"],
+        clauses, partition_col="part",
+    )
+    v = _full_fallback(spark, store, merged, tmp_path)
+    assert "part=__HIVE_DEFAULT_PARTITION__" in _parts(store, "t", v)
+    assert store.read("t").count() == 41
+
+
+def test_schema_evolution_falls_back(spark, store, tmp_path):
+    upd = _updates(spark, [(12, "x", 0.0, 1)]).withColumn("extra", F.lit("e"))
+    merged = scd1_merge(
+        store.read("t"), upd, ["id"], partition_col="part", allow_schema_evolution=True
+    )
+    assert isinstance(merged, MergeResult)
+    _full_fallback(spark, store, merged, tmp_path)
+    out = store.read("t")
+    assert "extra" in out.columns
+    assert out.filter("id = 12").collect()[0]["extra"] == "e"
+    assert out.filter("extra IS NULL").count() == 39
+
+
+def test_read_partitions_target_falls_back(spark, store, tmp_path):
+    """A target holding only some partitions: a carry would resurrect the
+    others, so the frame is written as given."""
+    target = store.read_partitions("t", "part", [1])
+    merged = scd1_merge(target, _updates(spark, [(12, "x", 0.0, 1)]), ["id"],
+                        partition_col="part")
+    v = _full_fallback(spark, store, merged, tmp_path)
+    assert _parts(store, "t", v) == ["part=1"]
+
+
+def test_moved_store_version_falls_back(spark, store, tmp_path):
+    """A second writer committed between the read and the write: the
+    merge's untouched slice is no longer the current version's."""
+    merged = scd1_merge(store.read("t"), _updates(spark, [(12, "x", 0.0, 1)]), ["id"],
+                        partition_col="part")
+    other = VersionedParquetStore(spark, store.root)
+    other.write(
+        _updates(spark, [(0, "other", 0.0, 0), (30, "other", 0.0, 3)]), "t",
+        partition_by=["part"],
+    )
+    _full_fallback(spark, store, merged, tmp_path)
+    assert store.read("t").count() == 40  # last writer wins, as for full writes
+
+
+def test_transformed_merge_result_falls_back(spark, store, tmp_path):
+    merged = scd1_merge(store.read("t"), _updates(spark, [(12, "x", 0.0, 1)]), ["id"],
+                        partition_col="part")
+    kept = merged.filter("id <> 35")
+    assert not isinstance(kept, MergeResult)
+    _full_fallback(spark, store, kept, tmp_path)
+    assert store.read("t").filter("id = 35").count() == 0
+
+
+def test_unpartitioned_current_version_falls_back(spark, tmp_path):
+    s = VersionedParquetStore(spark, str(tmp_path / "flat"))
+    s.write(_updates(spark, [(1, "a", 1.0, 1), (2, "b", 2.0, 2)]), "t")
+    merged = scd1_merge(s.read("t"), _updates(spark, [(1, "x", 9.0, 1)]), ["id"],
+                        partition_col="part")
+    assert isinstance(merged, MergeResult)
+    v = s.write(merged, "t", partition_by=["part"])
+    assert _parts(s, "t", v) == ["part=1", "part=2"]
+    assert _rows(s.read("t")) == [(1, "x", 9.0, 1), (2, "b", 2.0, 2)]
+
+
+def test_zero_padded_partition_dirs_fall_back(spark, tmp_path):
+    """``part=03`` reads back as int 3, so touched value 3 does not name
+    its directory: no carry, and no duplicate of the old rows."""
+    s = VersionedParquetStore(spark, str(tmp_path / "pad"))
+    s.write(
+        spark.createDataFrame([(1, "a", 1.0, "03"), (2, "b", 2.0, "04")],
+                              "id long, name string, v double, part string"),
+        "t", partition_by=["part"],
+    )
+    merged = scd1_merge(s.read("t"), _updates(spark, [(1, "x", 9.0, 3)]), ["id"],
+                        partition_col="part")
+    v = s.write(merged, "t", partition_by=["part"])
+    assert _linked(s, "t", v) == set()
+    assert _rows(s.read("t")) == [(1, "x", 9.0, 3), (2, "b", 2.0, 4)]
+
+
+def test_partition_value_type_mismatch_falls_back(spark, store, tmp_path):
+    """String update values on an int partition column: "01" selects the
+    int partition 1 but names no directory of it. Deleting all of part 1
+    must not carry it back."""
+    upd = spark.createDataFrame([(i, "d", 0.0, "01") for i in range(10, 20)],
+                                "id long, name string, v double, part string")
+    merged = merge_apply(store.read("t"), upd, ["id"],
+                         [MergeClause(when="matched", action="delete")], partition_col="part")
+    assert merged.touched == ["01"]
+    v = _full_fallback(spark, store, merged, tmp_path)
+    assert _parts(store, "t", v) == ["part=0", "part=2", "part=3"]
+
+
+def test_emptied_partition_disappears(spark, store):
+    """A delete clause that empties a touched partition: the partition is
+    not carried back from the old version."""
+    clauses = [
+        MergeClause(when="matched", action="delete"),
+        MergeClause(when="not_matched", action="insert"),
+    ]
+    upd = _updates(spark, [(i, "d", 0.0, 1) for i in range(10, 20)] + [(29, "d", 0.0, 2)])
+    merged = merge_apply(store.read("t"), upd, ["id"], clauses, partition_col="part")
+    v = store.write(merged, "t", partition_by=["part"])
+    assert _parts(store, "t", v) == ["part=0", "part=2", "part=3"]
+    assert _linked(store, "t", v) == {"part=0", "part=3"}
+    assert _rows(store.read("t")) == _rows(merge_apply(store.read("t", v - 1), upd, ["id"], clauses))
+
+
+EDGE_PARTS = [None, "a=b", "x:y", "50%", "plain"]
+
+
+@pytest.mark.parametrize(
+    "touch",
+    [[None], ["a=b"], ["x:y", "50%"], [None, "plain"]],
+    ids=["null", "equals", "colon-percent", "null-plain"],
+)
+def test_edge_partition_values_pruned_equals_unpruned(spark, tmp_path, touch):
+    """NULL (Hive default dir) and escaped string partitions: the pruned
+    merge equals the unpruned one, and its carry commit equals both."""
+    schema = "id long, name string, v double, part string"
+    s = VersionedParquetStore(spark, str(tmp_path / "edge"))
+    s.write(
+        spark.createDataFrame(
+            [(10 * j + i, f"n{j}{i}", float(i), p) for j, p in enumerate(EDGE_PARTS)
+             for i in range(3)],
+            schema,
+        ),
+        "t", partition_by=["part"],
+    )
+    j_of = {p: j for j, p in enumerate(EDGE_PARTS)}
+    # one update and one delete per touched partition, plus one insert
+    upd = spark.createDataFrame(
+        [(10 * j_of[p], "upd", -1.0, p) for p in touch]
+        + [(10 * j_of[p] + 1, "del", -1.0, p) for p in touch]
+        + [(999, "ins", -1.0, touch[0])],
+        schema,
+    )
+    clauses = [
+        MergeClause(when="matched", action="delete", condition="updates.name = 'del'"),
+        MergeClause(when="matched", action="update"),
+        MergeClause(when="not_matched", action="insert"),
+    ]
+    target = s.read("t")
+    plain = merge_apply(target, upd, ["id"], clauses)
+    pruned = merge_apply(target, upd, ["id"], clauses, partition_col="part")
+    assert _rows(plain) == _rows(pruned)
+
+    v = s.write(pruned, "t", partition_by=["part"])
+    assert _rows(s.read("t")) == _rows(plain)
+    assert _linked(s, "t", v) == {partition_dir("part", p) for p in EDGE_PARTS if p not in touch}
+
+
+def _scd2_seed(spark, store):
+    rows = [(i, f"p{i}", True, None, 0, i // 10) for i in range(30)]
+    store.write(
+        spark.createDataFrame(
+            rows,
+            "id long, place string, current_flag boolean, expiry_at long, "
+            "updated_at long, part int",
+        ),
+        "t", partition_by=["part"],
+    )
+
+
+def test_scd2_partitioned_merge_carries(spark, tmp_path):
+    s = VersionedParquetStore(spark, str(tmp_path / "scd2"))
+    _scd2_seed(spark, s)
+    upd = spark.createDataFrame(
+        [(5, "moved", 1, 0), (100, "new", 1, 0)],
+        "id long, place string, updated_at long, part int",
+    ).withColumn("current_flag", F.lit(True)).withColumn(
+        "expiry_at", F.lit(None).cast("long"))
+    cond = "target.current_flag = true AND target.place <> updates.place"
+    target = s.read("t")
+    plain = scd2_merge(target, upd, ["id"], cond, updated_at_col="updated_at")
+    merged = scd2_merge(target, upd, ["id"], cond, updated_at_col="updated_at",
+                        partition_col="part")
+    assert isinstance(merged, MergeResult)
+    cols = sorted(plain.columns)
+    v = s.write(merged, "t", partition_by=["part"])
+    assert _linked(s, "t", v) == {"part=1", "part=2"}
+    assert _rows(s.read("t"), cols) == _rows(plain, cols)
+    assert s.read("t").filter("id = 5").count() == 2  # expired + new current
+
+
+def test_scd4_current_partitioned_merge_carries(spark, store):
+    upd = _updates(spark, [(12, "x", 99.0, 1), (400, "new", 1.0, 3)])
+    target = store.read("t")
+    plain, _ = scd4_merge(target, None, upd, ["id"])
+    current, history = scd4_merge(target, None, upd, ["id"], partition_col="part")
+    assert isinstance(current, MergeResult)
+    v = store.write(current, "t", partition_by=["part"])
+    assert _linked(store, "t", v) == {"part=0", "part=2"}
+    assert _rows(store.read("t")) == _rows(plain)
+    assert [r["id"] for r in history.collect()] == [12]
