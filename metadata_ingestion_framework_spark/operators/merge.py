@@ -50,6 +50,7 @@ from metadata_ingestion_framework_spark.operators.joins import (
 
 _T_MARK = "__t_present"
 _U_MARK = "__u_present"
+_INS_MARK = "__as_insert"
 
 
 @dataclass
@@ -158,6 +159,7 @@ def merge_apply(
     extra_join_condition: str | None = None,
     partition_col: str | None = None,
     allow_schema_evolution: bool = False,
+    insert_on_match: str | None = None,
 ) -> DataFrame:
     """Pure MERGE: return the post-merge state of ``target``.
 
@@ -171,6 +173,10 @@ def merge_apply(
     for existing history — Delta's ``withSchemaEvolution``. Off (default),
     extra update-side columns are silently dropped, exactly like Delta's
     updateAll/insertAll without autoMerge.
+
+    ``insert_on_match``: SQL over the same aliases. A matched pair for
+    which it holds also emits the update row as an insert (insertAll),
+    through one ``explode`` after the join: SCD2's expire-and-insert.
 
     With ``partition_col`` and a prunable update batch the result is a
     ``MergeResult`` (same rows, plus the touched partitions).
@@ -272,7 +278,15 @@ def merge_apply(
             inserted = inserted | ap
 
     keep = (target_only | matched | inserted) & ~deleted
-    result = joined.filter(keep).select(*[value_of(c).alias(c) for c in out_cols])
+    values = [value_of(c) for c in out_cols]
+    if insert_on_match is not None:
+        as_insert = F.col(_INS_MARK)
+        twice = F.when(matched & F.expr(insert_on_match), F.array(F.lit(False), F.lit(True)))
+        joined = joined.withColumn(_INS_MARK, F.explode(twice.otherwise(F.array(F.lit(False)))))
+        keep = keep | as_insert
+        values = [F.when(as_insert, F.col(f"updates.{c}")).otherwise(v)
+                  for c, v in zip(out_cols, values)]
+    result = joined.filter(keep).select(*[v.alias(c) for c, v in zip(out_cols, values)])
     if untouched is None:
         return result
     return MergeResult.of(
@@ -341,20 +355,20 @@ def scd2_merge(
 ) -> DataFrame:
     """SCD Type 2 (versioned history in one table). Returns the new state.
 
-    Parity: Utility.scala:493-608 (`writeSCD2`), three stages:
-      1. J3 pre-join: updates x current-target rows where ``match_condition``
-         holds (i.e. the tracked attributes changed) -> these need a fresh
-         'current' version row.
-      2. staged union (J6, Utility.scala:283-323): stage-1 rows get NULL merge
-         keys so they fail the match and are inserted as new versions; the
-         original updates keep real keys so they expire the old version.
-      3. single ordered MERGE: matched & changed -> expire (current_flag=false,
-         expiry_at=updates.<effective>); matched & row_active=false ->
-         deleted_flag=true (soft delete, Utility.scala:574-581); not matched
-         -> insert as current.
+    Parity: Utility.scala:493-608 (`writeSCD2`) as one ordered MERGE over
+    one full outer join: matched & ``match_condition`` (tracked attributes
+    changed) -> expire (current_flag=false, expiry_at=updates.<effective>)
+    and, through ``insert_on_match``, insert the update as the new current
+    row; matched & row_active=false -> deleted_flag=true (soft delete,
+    Utility.scala:574-581); not matched -> insert. The reference's J3
+    pre-join and J6 NULL-keyed staged union (Utility.scala:283-323) exist
+    only because a Delta clause cannot both expire and insert.
 
     ``match_condition`` is SQL over ``target.``/``updates.`` aliases, e.g.
     ``"target.current_flag = true AND target.place <> updates.place"``.
+    ``partition_col`` pruning assumes a key never changes partition: an
+    update whose key moved is inserted once, and its old version stays
+    current.
     """
     u = _dedup_updates(updates, join_keys, updated_at_col)
     if target is None:
@@ -366,19 +380,6 @@ def scd2_merge(
         # value) to cover it
         target, u = _evolve_schemas(target, u)
 
-    cond = build_inner_join_condition(join_keys, "updates", "target")
-    # Stage 1: rows whose tracked attributes changed vs the current version.
-    changed = (
-        u.alias("updates")
-        .join(target.alias("target"), cond, "inner")
-        .where(F.expr(match_condition))
-        .select("updates.*")
-    )
-    # Stage 2: staged union — changed rows with a NULL staging key never match.
-    staged = changed.withColumn("__stage_insert", F.lit(True)).unionByName(
-        u.withColumn("__stage_insert", F.lit(False))
-    )
-
     eff = effective_col or updated_at_col
     expire_set = {c: f"target.{c}" for c in target.columns}
     expire_set[current_flag_col] = "false"
@@ -386,13 +387,9 @@ def scd2_merge(
         expire_set[expiry_col] = f"updates.{eff}"
 
     clauses = [
-        MergeClause(
-            when="matched", action="update",
-            condition=f"updates.__stage_insert = false AND ({match_condition})",
-            set=expire_set,
-        ),
-        MergeClause(when="not_matched", action="insert",
-                    set={c: f"updates.{c}" for c in target.columns}),
+        MergeClause(when="matched", action="update", condition=match_condition,
+                    set=expire_set),
+        MergeClause(when="not_matched", action="insert"),
     ]
     if soft_delete and "row_active" in u.columns:
         # Clause ORDER parity (Utility.scala:556-581): the reference registers
@@ -402,19 +399,13 @@ def scd2_merge(
         # current row (first-winning clause) instead of leaving two current
         # rows per key.
         clauses.insert(1, MergeClause(
-            when="matched", action="update",
-            condition="updates.__stage_insert = false AND updates.row_active = false",
+            when="matched", action="update", condition="updates.row_active = false",
             set={**{c: f"target.{c}" for c in target.columns}, "deleted_flag": "true"},
         ))
-
-    # The staging key: real keys merge (expire), NULL keys insert.
-    keys_with_stage = list(join_keys)
-    merged = merge_apply(
-        target, staged, keys_with_stage, clauses,
-        extra_join_condition="updates.__stage_insert = false",
-        partition_col=partition_col,
+    return merge_apply(
+        target, u, join_keys, clauses,
+        partition_col=partition_col, insert_on_match=match_condition,
     )
-    return merged
 
 
 def scd4_merge(

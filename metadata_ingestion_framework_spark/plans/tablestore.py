@@ -23,7 +23,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import DataType, IntegralType, StringType
+from pyspark.sql.types import DataType, IntegralType, StringType, StructType
 
 
 # Characters Spark escapes in partition directory names (public behavior of
@@ -158,7 +158,9 @@ class VersionedParquetStore:
         driver-side listing that an ingest used to pay 2-3x per touched
         table (measured r15: 3.4s per read at a 10x image band table —
         the whole "flat ingest" growth). Versions are immutable, so the
-        cached frame can never go stale; a new version is a new key."""
+        cached frame can never go stale; a new version is a new key. A
+        version this store commits is usually cached at commit time
+        (``_cache_commit``), so its first read runs no Spark job either."""
         v = version if version is not None else self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"table {table} does not exist in {self.root}")
@@ -252,7 +254,33 @@ class VersionedParquetStore:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
         self._swap_pointer(table, nxt)
+        self._cache_commit(df, table, partition_by or [], cur, nxt)
         return nxt
+
+    def _cache_commit(
+        self, df: DataFrame, table: str, part_cols: list[str], prev: int | None, nxt: int
+    ) -> None:
+        """Cache the read of version ``nxt``, just committed from ``df``, so
+        the next ``read`` of it runs no parquet footer (schema-inference)
+        job. Done only when the replaced version ``prev`` is cached and
+        ``df``'s data columns (names and types, partition columns aside)
+        equal its data columns, which are then the user schema; partition
+        columns are still inferred from the directory names (a bigint value
+        above 2^31 after an int-typed version reads as bigint). Otherwise
+        ``read`` infers the schema when first called."""
+        old = self._read_cache.get((table, prev))
+        if old is None:
+            return
+        data = [f for f in old.schema if f.name not in part_cols]
+        written = [(f.name, f.dataType) for f in df.schema if f.name not in part_cols]
+        if [(f.name, f.dataType) for f in data] != written:
+            return
+        new = self.spark.read.schema(StructType(data)).parquet(
+            self._version_path(table, nxt)
+        )
+        # a version with no partition directory (no rows) infers none
+        if new.columns == [f.name for f in data] + part_cols:
+            self._read_cache[(table, nxt)] = new
 
     def _write_touched(
         self, df: DataFrame, table: str, partition_by: list[str], cluster: bool
@@ -441,10 +469,8 @@ class VersionedParquetStore:
         # leaves still parallelize across tasks — and a leaf's rewrite is
         # bucket-bounded by the store sizing rule, so the single writer
         # per leaf is the intended unit of work.
-        from pyspark.sql import functions as _F
-
         clustered = (
-            df.repartition(*[_F.col(c) for c in part_cols]) if cluster else df
+            df.repartition(*[F.col(c) for c in part_cols]) if cluster else df
         )
         clustered.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
         if strict and any(
@@ -478,6 +504,7 @@ class VersionedParquetStore:
                     except OSError:  # cross-device / fs without hard links
                         shutil.copy2(s, d)
         self._swap_pointer(table, nxt)
+        self._cache_commit(df, table, part_cols, cur, nxt)
         return nxt
 
     def delete_partitions(

@@ -14,12 +14,18 @@ from pyspark.sql import functions as F
 
 
 def offset_ranges_for_batch(batch: DataFrame) -> DataFrame:
-    """Per-(topic, partition) offset ranges of one Kafka micro-batch.
+    """Per-(topic, partition) offset ranges of one Kafka micro-batch, with
+    the range's row count as ``rows``.
 
     Parity: Task.scala:99-100 (A1) — groupBy(topic, partition) min/max offset.
+    The counts sum to the batch's row count (NULL topic and partition form
+    one range of their own), so ``guarded_batch_fn`` takes its
+    ``input_rows`` fact from the same collect instead of a ``count()``.
     """
     return batch.groupBy("topic", "partition").agg(
-        F.min("offset").alias("startOffset"), F.max("offset").alias("endOffset")
+        F.min("offset").alias("startOffset"),
+        F.max("offset").alias("endOffset"),
+        F.count(F.lit(1)).alias("rows"),
     )
 
 

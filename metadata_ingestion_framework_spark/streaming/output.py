@@ -63,13 +63,28 @@ def guarded_batch_fn(
     facts; failure serializes the batch rows to ``pipeline_error_logs``
     with the stacktrace, writes an Error status, and re-raises (the stream
     stops, matching the reference's fail-fast behavior).
+
+    The offset ranges are collected once, after ``batch_fn``. When they
+    carry a per-range ``rows`` count (``offset_ranges_for_batch`` does), the
+    ``input_rows`` fact is their sum; only without ``offset_fn``, or with
+    ranges that have no count, does the guard run ``batch.count()``.
     """
 
     def run(batch: DataFrame, batch_id: int) -> None:
         try:
-            n_in = batch.count()
             batch_fn(batch, batch_id)
-            offsets = offset_fn(batch) if offset_fn is not None else None
+            offsets = n_in = None
+            if offset_fn is not None:
+                ranges_df = offset_fn(batch)
+                ranges = ranges_df.collect()
+                offsets = [
+                    (r["topic"], r["partition"], r["startOffset"], r["endOffset"])
+                    for r in ranges
+                ]
+                if "rows" in ranges_df.columns:
+                    n_in = sum(r["rows"] for r in ranges)
+            if n_in is None:
+                n_in = batch.count()
             obs.write_status(
                 pipeline_id, task_name, "Finished",
                 offset_ranges=offsets, batch_id=batch_id,

@@ -32,3 +32,34 @@ def emp(spark):
         ],
         "empid int, ename string, sal double, deptno int, comm int",
     )
+
+
+@pytest.fixture()
+def jobs_in_group(spark):
+    """``jobs_in_group(group, fn)``: the Spark jobs ``fn`` runs, read from
+    its job group. Job events reach the status tracker asynchronously but
+    in order, so the count is read after a fence job in a second group has
+    become visible."""
+    import time
+    import uuid
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def count(group, fn) -> int:
+        group = f"{group}-{uuid.uuid4().hex}"  # groups outlive a test
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setJobGroup(f"{group}-fence", "fence")
+            spark.range(1).collect()
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        deadline = time.time() + 60
+        while not tracker.getJobIdsForGroup(f"{group}-fence"):
+            assert time.time() < deadline, "fence job never reached the tracker"
+            time.sleep(0.05)
+        return len(tracker.getJobIdsForGroup(group))
+
+    return count

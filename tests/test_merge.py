@@ -134,6 +134,25 @@ def test_scd2_no_change_no_new_version(spark):
     assert out.filter("empid = 1 AND current_flag = true").count() == 1
 
 
+def test_scd2_key_moving_partition_inserts_once(spark):
+    """Partition pruning assumes a key never changes partition. An update
+    whose key moved partition matches nothing in the pruned target: it is
+    inserted once, and the old version stays current."""
+    ddl = "empid int, place string, current_flag boolean, expiry_at int, updated_at int, part int"
+    target = spark.createDataFrame(
+        [(1, "A", True, None, 1, 0), (2, "B", True, None, 1, 1)], ddl
+    )
+    updates = spark.createDataFrame([(1, "Z", True, None, 5, 1)], ddl)
+    out = scd2_merge(
+        target, updates, ["empid"],
+        match_condition="target.current_flag = true AND target.place <> updates.place",
+        updated_at_col="updated_at", partition_col="part",
+    )
+    assert sorted(map(tuple, out.collect())) == [
+        (1, "A", True, None, 1, 0), (1, "Z", True, None, 5, 1), (2, "B", True, None, 1, 1)
+    ]
+
+
 def test_scd2_soft_delete(spark):
     """updates.row_active=false -> target row flagged deleted (Utility:574-581)."""
     target = _scd2_target(spark).withColumn("deleted_flag", F.lit(False))

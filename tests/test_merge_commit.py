@@ -327,3 +327,95 @@ def test_scd4_current_partitioned_merge_carries(spark, store):
     assert _linked(store, "t", v) == {"part=0", "part=2"}
     assert _rows(store.read("t")) == _rows(plain)
     assert [r["id"] for r in history.collect()] == [12]
+
+
+def _commit_full(spark, s):
+    return s.write(_updates(spark, [(1, "a", 1.0, 0), (50, "b", 2.0, 5)]), "t",
+                   partition_by=["part"])
+
+
+def _commit_carry(spark, s):
+    merged = scd1_merge(s.read("t"), _updates(spark, [(12, "x", 9.0, 1)]), ["id"],
+                        partition_col="part")
+    v = s.write(merged, "t", partition_by=["part"])
+    assert _linked(s, "t", v) == {"part=0", "part=2", "part=3"}
+    return v
+
+
+def _commit_partition_delta(spark, s):
+    return s.write_partition_delta(_updates(spark, [(7, "d", 7.0, 2)]), "t", "part", [2])
+
+
+def _commit_added_column(spark, s):
+    frame = s.read("t").withColumn("extra", F.lit("e"))
+    return s.write(frame, "t", partition_by=["part"])
+
+
+def _commit_bigint_partition(spark, s):
+    frame = s.read("t").withColumn(
+        "part", F.when(F.col("part") == 3, F.lit(3_000_000_000)).otherwise(F.col("part"))
+    )
+    return s.write(frame, "t", partition_by=["part"])
+
+
+def _commit_unpartitioned(spark, s):
+    s.write(_updates(spark, [(1, "a", 1.0, 0)]), "u")
+    s.read("u")
+    return s.write(_updates(spark, [(2, "b", 2.0, 0), (3, "c", 3.0, 1)]), "u")
+
+
+COMMITS = {
+    "full": _commit_full,
+    "carry": _commit_carry,
+    "partition_delta": _commit_partition_delta,
+    "unpartitioned": _commit_unpartitioned,
+    # data columns change: the store infers the new version's schema
+    "added_column": _commit_added_column,
+    # same data columns; the partition column is inferred as bigint
+    "bigint_partition": _commit_bigint_partition,
+}
+
+
+@pytest.mark.parametrize("commit", sorted(COMMITS))
+def test_committed_version_reads_as_inferred(spark, store, jobs_in_group, commit):
+    """The store caches the read of each version it commits: reading it
+    back runs no Spark job (no parquet footer inference) and gives the
+    schema and rows a fresh ``spark.read.parquet`` of the directory does."""
+    store.read("t")  # the replaced version is cached, as a merge's target read leaves it
+    v = COMMITS[commit](spark, store)
+    table = "u" if commit == "unpartitioned" else "t"
+    got = []
+    jobs = jobs_in_group(f"read-{commit}", lambda: got.append(store.read(table)))
+    fresh = spark.read.parquet(store._version_path(table, v))
+    assert got[0].schema == fresh.schema
+    cols = fresh.columns
+    assert _rows(got[0], cols) == _rows(fresh, cols)
+    if commit == "bigint_partition":
+        assert dict(fresh.dtypes)["part"] == "bigint"
+    if commit != "added_column":
+        assert jobs == 0
+
+
+def test_scd2_merge_and_write_job_count(spark, tmp_path, jobs_in_group):
+    """A toy SCD2 micro-batch (unpartitioned, soft deletes, a NULL key)
+    merges and commits in 3 Spark jobs and reads its result back in none:
+    the update batch is deduped and shuffled once, into one join. A plan
+    change that adds a pass over the batch or breaks exchange reuse raises
+    the count here."""
+    ddl = ("id long, place string, current_flag boolean, expiry_at long, "
+           "updated_at long, row_active boolean, deleted_flag boolean")
+    s = VersionedParquetStore(spark, str(tmp_path / "scd2"))
+    s.write(spark.createDataFrame(
+        [(i, f"p{i}", True, None, 0, True, False) for i in range(50)], ddl), "t")
+    cond = "target.current_flag = true AND target.place <> updates.place"
+    for b in range(2):
+        upd = spark.createDataFrame(
+            [(i, f"q{i}" if i % 2 else f"p{i}", True, None, b + 1, i % 3 != 0, False)
+             for i in range(b, 60, 3)] + [(None, "n", True, None, 9, True, False)],
+            ddl,
+        )
+        target = s.read("t")
+        jobs = jobs_in_group(f"scd2-commit-{b}", lambda: s.write(
+            scd2_merge(target, upd, ["id"], cond, updated_at_col="updated_at"), "t"))
+        assert jobs == 3
+        assert jobs_in_group(f"scd2-read-{b}", lambda: s.read("t")) == 0

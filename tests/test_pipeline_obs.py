@@ -521,50 +521,27 @@ def test_store_health_trends_orders_by_ingest_time(spark):
     }
 
 
-def _jobs_in_group(spark, group, fn) -> int:
-    """Spark jobs ``fn`` runs, read from its job group. Job events reach
-    the status tracker asynchronously but in order, so the count is read
-    after a fence job in a second group has become visible."""
-    import time
-
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setJobGroup(f"{group}-fence", "fence")
-        spark.range(1).collect()
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    deadline = time.time() + 60
-    while not tracker.getJobIdsForGroup(f"{group}-fence"):
-        assert time.time() < deadline, "fence job never reached the tracker"
-        time.sleep(0.05)
-    return len(tracker.getJobIdsForGroup(group))
-
-
-def test_status_and_fact_writes_run_no_spark_job(spark, tmp_path):
+def test_status_and_fact_writes_run_no_spark_job(spark, tmp_path, jobs_in_group):
     from metadata_ingestion_framework_spark.streaming.offsets import (
         offset_ranges_for_batch,
     )
 
     obs = ObservabilityStore(spark, str(tmp_path / "obs"))
-    assert _jobs_in_group(spark, "obs-status", lambda: obs.write_status("p", "t", "Finished")) == 0
-    assert _jobs_in_group(spark, "obs-fact", lambda: obs.write_fact("p", "t", "rows", 3)) == 0
+    assert jobs_in_group("obs-status", lambda: obs.write_status("p", "t", "Finished")) == 0
+    assert jobs_in_group("obs-fact", lambda: obs.write_fact("p", "t", "rows", 3)) == 0
     batch = spark.createDataFrame(
         [("k", p, o) for p in range(2) for o in range(5)],
         "topic string, partition int, offset long",
     )
     # DataFrame offsets cost exactly the one collect of their own plan
-    collect_only = _jobs_in_group(
-        spark, "obs-offsets-ref",
+    collect_only = jobs_in_group(
+        "obs-offsets-ref",
         lambda: offset_ranges_for_batch(batch).select(
             "topic", "partition", "startOffset", "endOffset"
         ).collect(),
     )
-    with_offsets = _jobs_in_group(
-        spark, "obs-offsets",
+    with_offsets = jobs_in_group(
+        "obs-offsets",
         lambda: obs.write_status(
             "p", "t", "Finished", offset_ranges=offset_ranges_for_batch(batch), batch_id=1
         ),
@@ -575,6 +552,43 @@ def test_status_and_fact_writes_run_no_spark_job(spark, tmp_path):
         for r in obs.read_status().filter("batch_id = 1").collect()
     }
     assert got == {(0, 0, 4), (1, 0, 4)}
+
+
+def test_guard_takes_input_rows_from_the_offsets_collect(spark, tmp_path, jobs_in_group):
+    """With ``offset_ranges_for_batch`` the guard runs one offsets collect
+    besides ``batch_fn``'s jobs and sums its per-range counts into
+    ``input_rows``; without ``offset_fn`` it counts the batch."""
+    from metadata_ingestion_framework_spark.streaming.offsets import (
+        offset_ranges_for_batch,
+    )
+    from metadata_ingestion_framework_spark.streaming.output import guarded_batch_fn
+
+    batch = spark.createDataFrame(
+        [("k", p, o) for p in range(2) for o in range(5)] + [(None, None, 99)],
+        "topic string, partition int, offset long",
+    )
+
+    def batch_fn(b, _batch_id):
+        b.groupBy("partition").count().collect()
+
+    obs = ObservabilityStore(spark, str(tmp_path / "obs"))
+    fn_jobs = jobs_in_group("guard-fn", lambda: batch_fn(batch, 0))
+    collect_jobs = jobs_in_group("guard-ranges", lambda: offset_ranges_for_batch(batch).collect())
+    count_jobs = jobs_in_group("guard-count", batch.count)
+    assert fn_jobs >= 1 and collect_jobs >= 1
+
+    guarded = guarded_batch_fn(batch_fn, obs, "p", "t", offset_fn=offset_ranges_for_batch)
+    assert jobs_in_group("guard", lambda: guarded(batch, 3)) == fn_jobs + collect_jobs
+    plain = guarded_batch_fn(batch_fn, obs, "p", "t")
+    assert jobs_in_group("guard-plain", lambda: plain(batch, 4)) == fn_jobs + count_jobs
+
+    facts = {(r.batch_id, r.metric, r.value) for r in obs.read_facts().collect()}
+    assert facts == {(3, "input_rows", 11), (4, "input_rows", 11)}
+    ranges = {
+        (r.topic, r.partition, r.startOffset, r.endOffset)
+        for r in obs.read_status().filter("batch_id = 3").collect()
+    }
+    assert ranges == {("k", 0, 0, 4), ("k", 1, 0, 4), (None, None, 99, 99)}
 
 
 def test_list_offsets_land_one_row_per_range(spark, tmp_path):

@@ -4,11 +4,21 @@ example counts; Spark-bound merge/dedup invariants at a small example cap
 
 from __future__ import annotations
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
+from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.functions.pii import identify_columns
-from metadata_ingestion_framework_spark.operators.joins import _parse_key
-from metadata_ingestion_framework_spark.operators.merge import scd1_merge
+from metadata_ingestion_framework_spark.operators.joins import (
+    _parse_key,
+    build_inner_join_condition,
+)
+from metadata_ingestion_framework_spark.operators.merge import (
+    MergeClause,
+    _dedup_updates,
+    merge_apply,
+    scd1_merge,
+    scd2_merge,
+)
 from metadata_ingestion_framework_spark.operators.dedup import dedup_window
 
 names = st.text(alphabet="abcdefgh_", min_size=1, max_size=8)
@@ -68,6 +78,102 @@ def test_scd1_key_invariants(spark, target_rows, update_rows):
     for r in out:
         if r["k"] in ukeys:
             assert r["v"] == expect[r["k"]]
+
+
+SCD2_MATCH = "target.current_flag = true AND target.attr <> updates.attr"
+SCD2_COLS = ("k int, attr int, current_flag boolean, expiry_at int, "
+             "updated_at int, deleted_flag boolean, part int")
+
+
+def _scd2_staged_reference(target, updates, partition_col):
+    """SCD2 as the reference stages it (Utility.scala:283-323, 493-608):
+    a changed-rows pre-join (J3), a union that re-adds those rows under a
+    staging flag that never matches (J6), then one ordered MERGE."""
+    u = _dedup_updates(updates, ["k"], "updated_at")
+    cond = build_inner_join_condition(["k"], "updates", "target")
+    changed = (
+        u.alias("updates").join(target.alias("target"), cond, "inner")
+        .where(F.expr(SCD2_MATCH)).select("updates.*")
+    )
+    staged = changed.withColumn("__stage_insert", F.lit(True)).unionByName(
+        u.withColumn("__stage_insert", F.lit(False))
+    )
+    keep = {c: f"target.{c}" for c in target.columns}
+    clauses = [
+        MergeClause(
+            when="matched", action="update",
+            condition=f"updates.__stage_insert = false AND ({SCD2_MATCH})",
+            set={**keep, "current_flag": "false", "expiry_at": "updates.updated_at"},
+        ),
+        MergeClause(
+            when="matched", action="update",
+            condition="updates.__stage_insert = false AND updates.row_active = false",
+            set={**keep, "deleted_flag": "true"},
+        ),
+        MergeClause(when="not_matched", action="insert",
+                    set={c: f"updates.{c}" for c in target.columns}),
+    ]
+    return merge_apply(
+        target, staged, ["k"], clauses,
+        extra_join_condition="updates.__stage_insert = false",
+        partition_col=partition_col,
+    )
+
+
+def _part(k):
+    """Partition as a function of the key: pruning's precondition."""
+    return None if k is None else k % 3
+
+
+# per key: attrs of expired history rows, and the current row's attr (None:
+# the key has no current row)
+scd2_history = st.dictionaries(
+    st.integers(0, 4),
+    st.tuples(st.lists(st.integers(0, 2), max_size=2), st.one_of(st.none(), st.integers(0, 2))),
+    max_size=5,
+)
+# (key or NULL, attr, row_active); repeated keys are duplicate updates
+scd2_updates = st.lists(
+    st.tuples(st.one_of(st.none(), st.integers(0, 6)), st.integers(0, 2), st.booleans()),
+    min_size=1, max_size=8,
+)
+
+
+@settings(max_examples=8, deadline=None)
+@given(history=scd2_history, update_rows=scd2_updates)
+@example(
+    history={0: ([1], 1), 1: ([2], None), 2: ([], 0), 3: ([0], 2)},
+    update_rows=[
+        (0, 2, True), (0, 1, True),  # duplicate update: the earliest (changed) wins
+        (1, 0, True),  # key with history but no current row
+        (None, 1, True), (None, 2, False),  # NULL keys
+        (2, 1, False),  # delete with a changed attribute
+        (3, 2, False),  # delete without one
+        (5, 0, True),  # new key
+    ],
+)
+def test_scd2_merge_equals_staged_union(spark, history, update_rows):
+    """``scd2_merge`` (one join, insert-on-match) returns the same row
+    multiset as the staged-union formulation, pruned or not."""
+    target_rows = []
+    for k, (hist, cur) in history.items():
+        for i, attr in enumerate(hist):
+            target_rows.append((k, attr, False, i + 1, i, False, _part(k)))
+        if cur is not None:
+            target_rows.append((k, cur, True, None, len(hist), False, _part(k)))
+    target = spark.createDataFrame(target_rows, SCD2_COLS)
+    updates = spark.createDataFrame(
+        [(k, attr, True, None, 100 + i, False, _part(k), active)
+         for i, (k, attr, active) in enumerate(update_rows)],
+        SCD2_COLS + ", row_active boolean",
+    )
+    for partition_col in (None, "part"):
+        got = scd2_merge(target, updates, ["k"], SCD2_MATCH, updated_at_col="updated_at",
+                         partition_col=partition_col)
+        ref = _scd2_staged_reference(target, updates, partition_col)
+        assert sorted(map(tuple, got.collect()), key=repr) == sorted(
+            map(tuple, ref.collect()), key=repr
+        )
 
 
 @settings(max_examples=8, deadline=None)
