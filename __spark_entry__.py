@@ -3,7 +3,7 @@
 The driver's verify runs ``entry(spark)`` as a smoke check, runs
 each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+order-insensitive value-hash; ``tools/check_oracle.py`` runs the same check).
 
 The engine lives in ``metadata_ingestion_framework_spark/``; the query
 inventory (one entry per SURVEY.md §2 operator plus the training-data

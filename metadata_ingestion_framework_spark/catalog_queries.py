@@ -41,7 +41,6 @@ from metadata_ingestion_framework_spark.operators.cdc import (
 from metadata_ingestion_framework_spark.operators.dedup import (
     carry_deps,
     dedup_exact,
-    dedup_window,
     minhash_lsh_duplicates,
     ngram_jaccard_pairs,
     ngram_jaccard_pairs_prefix,
@@ -50,6 +49,7 @@ from metadata_ingestion_framework_spark.operators.dedup import (
 from metadata_ingestion_framework_spark.operators.cluster import connected_components
 from metadata_ingestion_framework_spark.operators.joins import build_inner_join_condition
 from metadata_ingestion_framework_spark.operators.merge import (
+    dedup_window,
     scd1_merge,
     scd2_merge,
     scd4_merge,
@@ -3564,7 +3564,7 @@ def q_curation_v4(spark, sf_dir):
         hash_bucket,
         rate_threshold,
     )
-    from metadata_ingestion_framework_spark.operators.dedup import dedup_window
+    from metadata_ingestion_framework_spark.operators.merge import dedup_window
 
     docs = wide_t(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "text"

@@ -5,103 +5,3 @@ transformation built from ``pyspark.sql.functions`` so it stays inside
 whole-stage codegen; Python UDFs appear only where semantics force them
 (free-text per-match hashing) and then as Arrow-batched pandas UDFs.
 """
-
-from metadata_ingestion_framework_spark.functions.html import (
-    boilerplate_gate,
-    html_stats,
-    html_text,
-)
-from metadata_ingestion_framework_spark.functions.urls import (
-    normalize_url,
-    url_dedup,
-    url_host,
-)
-from metadata_ingestion_framework_spark.functions.hashing import (
-    hash_it,
-    hash_it_complete,
-    hash_numerical_it,
-)
-from metadata_ingestion_framework_spark.functions.pii import (
-    anonymize_free_text,
-    decrypt_it,
-    encrypt_it,
-    hash_it_partial,
-    identify_columns,
-    mask_it,
-)
-from metadata_ingestion_framework_spark.functions.sampling import (
-    deterministic_sample,
-    hash_bucket,
-    stratified_sample,
-)
-from metadata_ingestion_framework_spark.functions.bpe import (
-    bpe_encode_ids,
-    bpe_tokenize,
-    bpe_tokenize_fast,
-    bpe_train,
-    bpe_vocab,
-    load_bpe_model,
-    save_bpe_model,
-)
-from metadata_ingestion_framework_spark.functions.profiling import (
-    profile_drift,
-    profile_table,
-)
-from metadata_ingestion_framework_spark.functions.quality_model import (
-    langid_model_score,
-    model_gate_scores,
-    quality_model_score,
-    quantize_weights,
-)
-from metadata_ingestion_framework_spark.functions.timestamps import (
-    clean_iso_timestamp,
-    epoch_millis_to_timestamp,
-)
-from metadata_ingestion_framework_spark.functions.transforms import (
-    add_flag_columns,
-    drop_it,
-    has_column,
-    reorder_columns,
-    serialize_rows,
-)
-
-__all__ = [
-    "normalize_url",
-    "url_dedup",
-    "url_host",
-    "hash_it",
-    "hash_it_complete",
-    "hash_numerical_it",
-    "hash_it_partial",
-    "anonymize_free_text",
-    "mask_it",
-    "encrypt_it",
-    "decrypt_it",
-    "identify_columns",
-    "epoch_millis_to_timestamp",
-    "clean_iso_timestamp",
-    "drop_it",
-    "has_column",
-    "reorder_columns",
-    "add_flag_columns",
-    "serialize_rows",
-    "hash_bucket",
-    "deterministic_sample",
-    "stratified_sample",
-    "bpe_train",
-    "bpe_tokenize",
-    "bpe_tokenize_fast",
-    "bpe_encode_ids",
-    "bpe_vocab",
-    "save_bpe_model",
-    "load_bpe_model",
-    "boilerplate_gate",
-    "html_stats",
-    "html_text",
-    "quality_model_score",
-    "langid_model_score",
-    "model_gate_scores",
-    "quantize_weights",
-    "profile_table",
-    "profile_drift",
-]

@@ -1,142 +1,1 @@
 """Compound operators (SURVEY.md §2.4-2.7 + training-data extensions)."""
-
-from metadata_ingestion_framework_spark.operators.cdc import (
-    enrich_with_shard,
-    split_cdc_envelope,
-)
-from metadata_ingestion_framework_spark.operators.dedup import (
-    dedup_exact,
-    dedup_window,
-    hamming_banded_pairs,
-    minhash_lsh_duplicates,
-    minhash_signatures,
-    ngram_jaccard_pairs,
-    ngram_jaccard_pairs_prefix,
-    simhash,
-    simhash_duplicates,
-    unpersist_deps,
-)
-from metadata_ingestion_framework_spark.operators.joins import (
-    build_inner_join_condition,
-    build_partition_pruning_filter,
-)
-from metadata_ingestion_framework_spark.operators.merge import (
-    MergeClause,
-    merge_apply,
-    scd1_merge,
-    scd2_merge,
-    scd4_merge,
-)
-from metadata_ingestion_framework_spark.operators.incremental import (
-    EmbeddingDedupStore,
-    AudioHashStore,
-    ImageHashStore,
-    MinhashSignatureStore,
-    ParagraphHashStore,
-    embedding_batch_drops,
-    image_hash_batch_drops,
-    minhash_batch_drops,
-    paragraph_batch_removals,
-)
-from metadata_ingestion_framework_spark.operators.ivf_index import IvfIndex
-from metadata_ingestion_framework_spark.operators.sql_merge import (
-    parse_merge,
-    sql_merge,
-)
-from metadata_ingestion_framework_spark.operators.quantize import (
-    dequantize,
-    quantization_error_stats,
-    quantize_embeddings,
-)
-from metadata_ingestion_framework_spark.operators.pq import (
-    ivfpq_topk,
-    load_pq_model,
-    pq_codebooks,
-    pq_encode,
-    pq_topk,
-    pq_train,
-    save_pq_model,
-)
-from metadata_ingestion_framework_spark.operators.multimodal import (
-    audio_hashes,
-    audio_near_duplicates,
-    image_hashes,
-    video_near_duplicates,
-    image_near_duplicates,
-)
-from metadata_ingestion_framework_spark.operators.retrieval import (
-    Bm25Index,
-    bm25_maxp,
-    bm25_maxp_served,
-    bm25_topk,
-    contamination_triage,
-)
-from metadata_ingestion_framework_spark.operators.similarity import (
-    brute_force_topk,
-    embedding_near_duplicates,
-    ivf_topk,
-    lsh_topk,
-    mmr_rerank,
-)
-from metadata_ingestion_framework_spark.operators.skew import (
-    salted_join,
-    two_stage_agg,
-)
-
-__all__ = [
-    "build_inner_join_condition",
-    "build_partition_pruning_filter",
-    "split_cdc_envelope",
-    "enrich_with_shard",
-    "dedup_window",
-    "dedup_exact",
-    "minhash_signatures",
-    "minhash_lsh_duplicates",
-    "simhash",
-    "simhash_duplicates",
-    "ngram_jaccard_pairs",
-    "ngram_jaccard_pairs_prefix",
-    "unpersist_deps",
-    "hamming_banded_pairs",
-    "audio_hashes",
-    "audio_near_duplicates",
-    "image_hashes",
-    "video_near_duplicates",
-    "image_near_duplicates",
-    "MergeClause",
-    "merge_apply",
-    "scd1_merge",
-    "scd2_merge",
-    "scd4_merge",
-    "brute_force_topk",
-    "lsh_topk",
-    "mmr_rerank",
-    "bm25_maxp",
-    "bm25_maxp_served",
-    "ivf_topk",
-    "embedding_near_duplicates",
-    "pq_codebooks",
-    "pq_train",
-    "pq_encode",
-    "pq_topk",
-    "ivfpq_topk",
-    "save_pq_model",
-    "load_pq_model",
-    "bm25_topk",
-    "Bm25Index",
-    "AudioHashStore",
-    "ImageHashStore",
-    "MinhashSignatureStore",
-    "ParagraphHashStore",
-    "paragraph_batch_removals",
-    "EmbeddingDedupStore",
-    "image_hash_batch_drops",
-    "minhash_batch_drops",
-    "embedding_batch_drops",
-    "contamination_triage",
-    "quantize_embeddings",
-    "dequantize",
-    "quantization_error_stats",
-    "salted_join",
-    "two_stage_agg",
-]

@@ -10,7 +10,7 @@ plan, so a 9-stage chain compounds exponentially — the r18 measurement on
 *construction* (every internal offset-collect re-analyzing the full tree
 and re-walking the CacheManager) and ~40 s end-to-end at sf0.1 for ~2.4k
 surviving rows. With four barriers the same query returns the identical
-checksum in ~11 s (fresh-session A/B in OPTIMIZATION_r18.md).
+checksum in ~11 s (fresh-session A/B).
 
 Why parquet + read-back instead of the alternatives:
 

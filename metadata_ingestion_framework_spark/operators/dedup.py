@@ -1,9 +1,9 @@
 """Deduplication family.
 
-``dedup_window`` is the reference's pre-merge dedup (Utility.scala:406-413).
-The rest are the training-data-pipeline dedup operators (exact, MinHash-LSH,
-SimHash, n-gram Jaccard, embedding near-dup) — first-class extensions for
-100 TB corpus curation (BASELINE.json north star).
+The training-data-pipeline dedup operators (exact, MinHash-LSH, SimHash,
+n-gram Jaccard, embedding near-dup) — first-class extensions for 100 TB
+corpus curation (BASELINE.json north star). The reference's pre-merge dedup,
+``dedup_window``, lives with the merge in ``operators/merge.py``.
 
 Design for scale: every operator is expressed as DataFrame transforms whose
 shuffles are on bounded keys (hash buckets / LSH bands), never an O(n^2)
@@ -83,18 +83,6 @@ def carry_deps(out: DataFrame, *parents: DataFrame) -> DataFrame:
     if deps:
         out._persisted_deps = deps
     return out
-
-
-def dedup_window(df: DataFrame, keys: list[str], order_by: list[str], desc: bool = False) -> DataFrame:
-    """Keep one row per key: first by ``order_by`` (ASCENDING by default).
-
-    Parity: Utility.scala:406-413 — the reference orders ascending (earliest
-    updated_at wins); replicated exactly, with an opt-in ``desc`` for the
-    usual latest-wins behavior (SURVEY.md §7.3b).
-    """
-    cols = [F.col(c).desc() if desc else F.col(c).asc() for c in order_by]
-    w = Window.partitionBy(*keys).orderBy(*cols)
-    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
 
 
 def dedup_exact(df: DataFrame, content_cols: list[str], id_col: str) -> DataFrame:

@@ -42,12 +42,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.operators.dedup import (
-    dedup_window,
     jaccard_estimate_udf,
     minhash_bands,
     minhash_signatures,
 )
-from metadata_ingestion_framework_spark.operators.merge import scd1_merge
+from metadata_ingestion_framework_spark.operators.merge import dedup_window, scd1_merge
 from metadata_ingestion_framework_spark.plans.tablestore import VersionedParquetStore
 
 

@@ -37,12 +37,12 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
 
-from metadata_ingestion_framework_spark.operators.dedup import dedup_window
 from metadata_ingestion_framework_spark.operators.joins import (
+    _parse_key,
     build_inner_join_condition,
     collect_partition_values,
     partition_in_filter,
@@ -294,6 +294,18 @@ def merge_apply(
     )
 
 
+def dedup_window(df: DataFrame, keys: list[str], order_by: list[str], desc: bool = False) -> DataFrame:
+    """Keep one row per key: first by ``order_by`` (ASCENDING by default).
+
+    Parity: Utility.scala:406-413 — the reference orders ascending (earliest
+    updated_at wins); replicated exactly, with an opt-in ``desc`` for the
+    usual latest-wins behavior (SURVEY.md §7.3b).
+    """
+    cols = [F.col(c).desc() if desc else F.col(c).asc() for c in order_by]
+    w = Window.partitionBy(*keys).orderBy(*cols)
+    return df.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") == 1).drop("__rn")
+
+
 def _dedup_updates(
     updates: DataFrame, join_keys: list[str], updated_at_col: str | None
 ) -> DataFrame:
@@ -302,8 +314,7 @@ def _dedup_updates(
     Parity: Utility.scala:406-413 — the reference orders ASCENDING, so the
     earliest row per key wins; replicated, not 'fixed' (SURVEY.md §7.3b).
     """
-    keys = [k.split("=")[0].strip() if "=" in k else k.strip() for k in join_keys]
-    keys = [k.split("<")[0].split(">")[0].split("!")[0].strip() for k in keys]
+    keys = [_parse_key(k)[0] for k in join_keys]
     order = [updated_at_col] if updated_at_col and updated_at_col in updates.columns else []
     return dedup_window(updates, keys, order or keys)
 

@@ -1,6 +1,1 @@
 """Pipeline plumbing: metadata catalog, versioned table store, DAG runner."""
-
-from metadata_ingestion_framework_spark.plans.tablestore import VersionedParquetStore
-from metadata_ingestion_framework_spark.plans.pipeline import Pipeline, PipelineTask
-
-__all__ = ["VersionedParquetStore", "Pipeline", "PipelineTask"]

@@ -15,7 +15,6 @@ interleave on the cluster scheduler.
 
 from __future__ import annotations
 
-import json
 from collections.abc import Callable
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
@@ -93,22 +92,3 @@ def run_pipelines_parallel(pipelines: list[Pipeline], max_workers: int | None = 
     with ThreadPoolExecutor(max_workers=max_workers or len(pipelines)) as pool:
         return list(pool.map(lambda p: p.run(), pipelines))
 
-
-def parse_merge_clauses(merge_cond_json: str):
-    """Decode the reference's JSON ``merge_cond`` into MergeClause objects.
-
-    Parity: Start.scala:143-163 — metadata rows carry per-pipeline clause
-    lists as JSON (see FIXTURES.md inmobi/parquet2delta.csv for a full row).
-    Accepted shape: [{"when": "matched", "action": "update",
-    "condition": "...", "set": {"col": "expr"}}, ...].
-    """
-    from metadata_ingestion_framework_spark.operators.merge import MergeClause
-
-    raw = json.loads(merge_cond_json)
-    return [
-        MergeClause(
-            when=c["when"], action=c["action"],
-            condition=c.get("condition"), set=c.get("set"),
-        )
-        for c in raw
-    ]

@@ -1,25 +1,1 @@
 """Sources (SURVEY.md §2.1) — batch and streaming readers."""
-
-from metadata_ingestion_framework_spark.sources.readers import (
-    avro_decode_cdc,
-    fetch_registry_schema,
-    history_max_files_for,
-    read_csv,
-    read_delta_stream,
-    read_jdbc,
-    read_kafka_cdc_stream,
-    read_parquet,
-    read_parquet_stream,
-)
-
-__all__ = [
-    "avro_decode_cdc",
-    "fetch_registry_schema",
-    "history_max_files_for",
-    "read_jdbc",
-    "read_parquet",
-    "read_csv",
-    "read_parquet_stream",
-    "read_delta_stream",
-    "read_kafka_cdc_stream",
-]

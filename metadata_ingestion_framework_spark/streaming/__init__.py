@@ -1,35 +1,1 @@
 """Structured Streaming surface (SURVEY.md §2.10)."""
-
-from metadata_ingestion_framework_spark.streaming.write_config import WriteStreamConfig
-from metadata_ingestion_framework_spark.streaming.output import (
-    guarded_batch_fn,
-    process_output_stream,
-    process_output_stream_batch,
-)
-from metadata_ingestion_framework_spark.streaming.stateful import stateful_stream_dedup
-from metadata_ingestion_framework_spark.streaming.windows import (
-    session_window_agg,
-    watermarked_window_agg,
-)
-from metadata_ingestion_framework_spark.streaming.offsets import (
-    offset_ranges_for_batch,
-    recover_starting_offsets,
-)
-from metadata_ingestion_framework_spark.streaming.listener import (
-    PipelineStatusListener,
-    attach_pipeline_listener,
-)
-
-__all__ = [
-    "PipelineStatusListener",
-    "attach_pipeline_listener",
-    "WriteStreamConfig",
-    "process_output_stream",
-    "process_output_stream_batch",
-    "guarded_batch_fn",
-    "offset_ranges_for_batch",
-    "recover_starting_offsets",
-    "stateful_stream_dedup",
-    "session_window_agg",
-    "watermarked_window_agg",
-]

@@ -5,7 +5,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.catalog_queries import q_curation_pipeline
-from metadata_ingestion_framework_spark.operators import unpersist_deps
+from metadata_ingestion_framework_spark.operators.dedup import unpersist_deps
 
 
 def test_curation_pipeline_stages(spark, tmp_path):

@@ -7,13 +7,13 @@ from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.operators.dedup import (
     dedup_exact,
-    dedup_window,
     minhash_lsh_duplicates,
     minhash_signatures,
     ngram_jaccard_pairs,
     simhash,
     simhash_duplicates,
 )
+from metadata_ingestion_framework_spark.operators.merge import dedup_window
 
 LOREM = (
     "the quick brown fox jumps over the lazy dog while the sun sets slowly "

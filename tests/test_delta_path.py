@@ -20,8 +20,8 @@ coordinate that Ivy must fetch over the network at session start — this
 container is offline, so the JVM side cannot materialize either. The skip
 below is therefore an environment limitation, not neglect; the semantics
 are executed through ``merge_apply`` whose SCD1/SCD2/SCD4 results are
-DuckDB-oracle-verified every round (scd1_merge / scd2_merge /
-scd4_history in CORRECTNESS_r*.json).
+DuckDB-oracle-verified by ``tools/check_oracle.py`` (the scd1_merge /
+scd2_merge / scd4_history catalog queries).
 
 Round 11 (2026-08-14) re-check: environment unchanged (same offline
 index, no delta jar in $SPARK_HOME/jars; install policy for this

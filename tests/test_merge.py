@@ -54,6 +54,17 @@ def test_scd1_dedup_ascending_first_wins(spark, emp):
     assert out.filter("empid = 5467").collect()[0]["sal"] == 111.0
 
 
+def test_scd1_cross_named_key_dedups_on_update_column(spark):
+    """A key 'uid = id' dedups the update batch on uid, its update side."""
+    t = spark.createDataFrame([(1, "a"), (2, "b")], "id int, v string")
+    u = spark.createDataFrame(
+        [(1, "X", 1), (1, "Y", 2), (2, "Z", 5)], "uid int, v string, ts int"
+    )
+    clauses = [MergeClause(when="matched", action="update", set={"v": "updates.v"})]
+    out = scd1_merge(t, u, ["uid = id"], updated_at_col="ts", clauses=clauses)
+    assert sorted(out.collect()) == [(1, "X"), (2, "Z")]
+
+
 def test_merge_clause_order_first_wins(spark, emp):
     """Delta semantics: the FIRST matching clause wins (Utility.scala:438-457)."""
     clauses = [

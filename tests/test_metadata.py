@@ -5,9 +5,10 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
-from metadata_ingestion_framework_spark.operators.merge import scd1_merge
+from metadata_ingestion_framework_spark.operators.merge import MergeClause, scd1_merge
 from metadata_ingestion_framework_spark.plans.metadata import (
     apply_pii_governance,
     decode_merge_cond,
@@ -63,9 +64,23 @@ def test_decode_op_config_triggers():
     assert decode_op_config(None).trigger is None
 
 
-def test_decode_merge_cond_native_shape():
-    clauses = decode_merge_cond('[{"when": "matched", "action": "delete"}]')
-    assert clauses[0].action == "delete"
+@pytest.mark.parametrize("js, expected", [
+    pytest.param(
+        '[{"when": "matched", "action": "delete"}]',
+        [MergeClause("matched", "delete")],
+        id="delete",
+    ),
+    pytest.param(
+        '[{"when": "matched", "action": "update", "condition": "updates.v > 1",'
+        ' "set": {"v": "updates.v"}},'
+        ' {"when": "not_matched", "action": "insert"}]',
+        [MergeClause("matched", "update", "updates.v > 1", {"v": "updates.v"}),
+         MergeClause("not_matched", "insert")],
+        id="update_insert",
+    ),
+])
+def test_decode_merge_cond_native_shape(js, expected):
+    assert decode_merge_cond(js) == expected
 
 
 def test_pipelines_for_batch(spark):

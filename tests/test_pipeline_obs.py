@@ -6,11 +6,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.observability import ObservabilityStore
-from metadata_ingestion_framework_spark.operators.merge import MergeClause
 from metadata_ingestion_framework_spark.plans.pipeline import (
     Pipeline,
     PipelineTask,
-    parse_merge_clauses,
     run_pipelines_parallel,
 )
 
@@ -70,17 +68,6 @@ def test_parallel_pipelines(spark, emp):
         return p
     run_pipelines_parallel([make(i) for i in range(3)])
     assert counts == [5, 5, 5]
-
-
-def test_parse_merge_clauses():
-    js = (
-        '[{"when": "matched", "action": "update", "condition": "updates.v > 1",'
-        ' "set": {"v": "updates.v"}},'
-        ' {"when": "not_matched", "action": "insert"}]'
-    )
-    clauses = parse_merge_clauses(js)
-    assert clauses[0] == MergeClause("matched", "update", "updates.v > 1", {"v": "updates.v"})
-    assert clauses[1].when == "not_matched" and clauses[1].set is None
 
 
 def test_observability_fact_and_error(spark, emp, tmp_path):

@@ -15,11 +15,11 @@ from metadata_ingestion_framework_spark.operators.joins import (
 from metadata_ingestion_framework_spark.operators.merge import (
     MergeClause,
     _dedup_updates,
+    dedup_window,
     merge_apply,
     scd1_merge,
     scd2_merge,
 )
-from metadata_ingestion_framework_spark.operators.dedup import dedup_window
 
 names = st.text(alphabet="abcdefgh_", min_size=1, max_size=8)
 

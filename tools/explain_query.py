@@ -1,5 +1,5 @@
 """Dump one catalog query's .explain("formatted") output to stdout —
-the plans/r18 before/after evidence generator (optimization guide §7.2).
+before/after plan evidence for an optimization.
 
 Usage: python tools/explain_query.py <query> [sf_dir] [repo_root]
 """

@@ -49,8 +49,7 @@ def main() -> None:
                  "replicas": replicas}
     # untimed warmup write (r18 review): the 1x arm runs first in a
     # fresh JVM, and session warmup deflated write_growth below its
-    # true value (recorded 0.6x) — warm the whole path before timing,
-    # bench.py's warm-rep convention
+    # true value (recorded 0.6x) — warm the whole path before timing
     warm_root = "/tmp/packed_probe_warm"
     shutil.rmtree(warm_root, ignore_errors=True)
     write_packed_shards(

@@ -1,7 +1,7 @@
 """Per-stage profile of one catalog query (optimization guide §1).
 
 Runs <query> in a fresh session with the UI enabled, times the bench
-checksum action (same methodology as bench.py), then pulls the UI REST API
+checksum action, then pulls the UI REST API
 for per-job / per-stage breakdown: wall, executor task time, shuffle
 read/write bytes, Python boundary nodes. Repeats N times (default 2, min
 reported for wall; stage table from the LAST rep).
