@@ -14,6 +14,14 @@ Readers resolve ``_CURRENT`` at plan-build time and scan an immutable dir;
 writers write ``v=N+1`` fully, then swap the pointer (rename = atomic on a
 POSIX fs; on object stores use a conditional put). Old versions allow time
 travel and are pruned with ``vacuum``.
+
+Every data file the store writes is parquet compressed with zstd
+(``PARQUET_CODEC``). Delta writes Spark's default, snappy, which does no
+entropy coding: the SHA-256 hex columns the PII step adds stay at their raw
+size under it, and zstd stores them in about half the bytes. Files carried
+by hard link from an older version keep the codec they were written with;
+parquet records the codec per column chunk, so a version that mixes snappy
+and zstd files reads as one table.
 """
 
 from __future__ import annotations
@@ -24,6 +32,10 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, IntegralType, StringType, StructType
+
+# The codec of every parquet file the store writes (see the module docstring).
+# The store owns its file format, so this is not a session setting.
+PARQUET_CODEC = "zstd"
 
 
 # Characters Spark escapes in partition directory names (public behavior of
@@ -100,8 +112,11 @@ class VersionedParquetStore:
         self.spark = spark
         self.root = root
         # (table, version) -> DataFrame; versions are immutable so
-        # entries never go stale (see read()). Bounded: a handful of
-        # live versions per table per store instance.
+        # entries never go stale (see read()) until ``drop`` or ``vacuum``
+        # deletes their files, which evict them. A commit evicts the
+        # table's entries below the version it replaced, so a table holds
+        # at most two (the version a merge read and the one it committed)
+        # plus any older version read since.
         self._read_cache: dict[tuple[str, int], DataFrame] = {}
         os.makedirs(root, exist_ok=True)
 
@@ -249,7 +264,7 @@ class VersionedParquetStore:
         path = self._version_path(table, nxt)
         if partition_by and cluster:
             df = df.repartition(*[F.col(c) for c in partition_by])
-        writer = df.write.mode("overwrite")
+        writer = df.write.mode("overwrite").option("compression", PARQUET_CODEC)
         if partition_by:
             writer = writer.partitionBy(*partition_by)
         writer.parquet(path)
@@ -257,17 +272,30 @@ class VersionedParquetStore:
         self._cache_commit(df, table, partition_by or [], cur, nxt)
         return nxt
 
+    def _evict(self, table: str, upto: int | None = None) -> None:
+        """Forget the cached reads of ``table`` at versions ``<= upto``
+        (all of them when ``upto`` is None)."""
+        for key in [k for k in self._read_cache if k[0] == table]:
+            if upto is None or key[1] <= upto:
+                del self._read_cache[key]
+
     def _cache_commit(
         self, df: DataFrame, table: str, part_cols: list[str], prev: int | None, nxt: int
     ) -> None:
         """Cache the read of version ``nxt``, just committed from ``df``, so
         the next ``read`` of it runs no parquet footer (schema-inference)
-        job. Done only when the replaced version ``prev`` is cached and
-        ``df``'s data columns (names and types, partition columns aside)
-        equal its data columns, which are then the user schema; partition
-        columns are still inferred from the directory names (a bigint value
-        above 2^31 after an int-typed version reads as bigint). Otherwise
-        ``read`` infers the schema when first called."""
+        job, and evict the cached reads below ``prev``: without that a
+        streaming query would keep one frame and file index per
+        micro-batch. ``prev`` stays cached, so a merge planned on it still
+        finds its base there. The new read is cached only when ``prev`` is
+        cached and ``df``'s data columns (names and types, partition
+        columns aside) equal its data columns, which are then the user
+        schema; partition columns are still inferred from the directory
+        names (a bigint value above 2^31 after an int-typed version reads as
+        bigint). Otherwise ``read`` infers the schema when first called."""
+        if prev is None:
+            return
+        self._evict(table, prev - 1)
         old = self._read_cache.get((table, prev))
         if old is None:
             return
@@ -472,7 +500,9 @@ class VersionedParquetStore:
         clustered = (
             df.repartition(*[F.col(c) for c in part_cols]) if cluster else df
         )
-        clustered.write.mode("overwrite").partitionBy(*part_cols).parquet(path)
+        clustered.write.mode("overwrite").option(
+            "compression", PARQUET_CODEC
+        ).partitionBy(*part_cols).parquet(path)
         if strict and any(
             n.startswith(f"{partition_col}=") and n not in touched
             for n in os.listdir(path)
@@ -546,8 +576,11 @@ class VersionedParquetStore:
         (``saveAsTable``), so these tables live in the warehouse dir, not
         the versioned path store; same engine, different layout decision.
         """
-        writer = df.write.mode("overwrite").format("parquet").bucketBy(
-            num_buckets, *bucket_cols
+        writer = (
+            df.write.mode("overwrite")
+            .format("parquet")
+            .option("compression", PARQUET_CODEC)
+            .bucketBy(num_buckets, *bucket_cols)
         )
         if sort_cols:
             writer = writer.sortBy(*sort_cols)
@@ -620,10 +653,12 @@ class VersionedParquetStore:
         return self.write(df, table)
 
     def vacuum(self, table: str, keep_last: int = 2) -> None:
-        """Drop version dirs older than the last ``keep_last``."""
+        """Drop version dirs older than the last ``keep_last``, and their
+        cached reads."""
         cur = self.current_version(table)
         if cur is None:
             return
+        self._evict(table, cur - keep_last)
         for name in os.listdir(self._dir(table)):
             if name.startswith("v="):
                 v = int(name.split("=")[1])
@@ -631,4 +666,7 @@ class VersionedParquetStore:
                     shutil.rmtree(os.path.join(self._dir(table), name), ignore_errors=True)
 
     def drop(self, table: str) -> None:
+        """Delete the table and forget its cached reads: a table written
+        again under the same name restarts at version 1."""
+        self._evict(table)
         shutil.rmtree(self._dir(table), ignore_errors=True)

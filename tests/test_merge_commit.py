@@ -5,14 +5,20 @@ the partitions its merge touched and hard-links the others from the
 version the merge read. These tests check that the committed rows equal a
 full rewrite of the same frame, that untouched partitions share inodes with
 the previous version, and that every case where the carry would be wrong
-falls back to the full rewrite.
+falls back to the full rewrite. They also check the store's file format
+(every file a commit writes is zstd parquet, and a version that carries
+older snappy files reads back as one table) and that its read cache neither
+outlives ``drop`` or ``vacuum`` nor grows with every commit.
 """
 
 from __future__ import annotations
 
 import os
 
+import pyarrow.dataset as pads
+import pyarrow.parquet as pq
 import pytest
+from pyspark.errors import AnalysisException
 from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.operators.merge import (
@@ -23,6 +29,7 @@ from metadata_ingestion_framework_spark.operators.merge import (
     scd2_merge,
     scd4_merge,
 )
+from metadata_ingestion_framework_spark.plans import tablestore
 from metadata_ingestion_framework_spark.plans.tablestore import (
     VersionedParquetStore,
     partition_dir,
@@ -48,23 +55,41 @@ def _rows(df, cols=COLS):
     return sorted(map(tuple, df.select(*cols).collect()), key=repr)
 
 
+def _files(store, table, version):
+    """Parquet file path -> inode, for every data file of ``version``."""
+    out = {}
+    for root, _dirs, files in os.walk(store._version_path(table, version)):
+        for f in files:
+            if f.endswith(".parquet"):
+                path = os.path.join(root, f)
+                out[path] = os.stat(path).st_ino
+    return out
+
+
 def _linked(store, table, version):
     """Partition dirs of ``version`` whose files all share an inode with
     the previous version (hard-linked, not rewritten)."""
     def inodes(v):
         out = {}
         vdir = store._version_path(table, v)
-        for part in os.listdir(vdir):
-            if "=" not in part:
-                continue
-            for root, _dirs, files in os.walk(os.path.join(vdir, part)):
-                for f in files:
-                    if f.endswith(".parquet"):
-                        out.setdefault(part, set()).add(os.stat(os.path.join(root, f)).st_ino)
+        for path, ino in _files(store, table, v).items():
+            part = os.path.relpath(path, vdir).split(os.sep)[0]
+            if "=" in part:
+                out.setdefault(part, set()).add(ino)
         return out
 
     prev, cur = inodes(version - 1), inodes(version)
     return {p for p, ino in cur.items() if ino <= prev.get(p, set())}
+
+
+def _codecs(path):
+    """The set of codecs of every column chunk in a parquet file."""
+    meta = pq.ParquetFile(path).metadata
+    return {
+        meta.row_group(g).column(c).compression
+        for g in range(meta.num_row_groups)
+        for c in range(meta.num_columns)
+    }
 
 
 def _parts(store, table, version):
@@ -364,11 +389,16 @@ def _commit_unpartitioned(spark, s):
     return s.write(_updates(spark, [(2, "b", 2.0, 0), (3, "c", 3.0, 1)]), "u")
 
 
+def _commit_compact(spark, s):
+    return s.compact("t")
+
+
 COMMITS = {
     "full": _commit_full,
     "carry": _commit_carry,
     "partition_delta": _commit_partition_delta,
     "unpartitioned": _commit_unpartitioned,
+    "compact": _commit_compact,
     # data columns change: the store infers the new version's schema
     "added_column": _commit_added_column,
     # same data columns; the partition column is inferred as bigint
@@ -419,3 +449,95 @@ def test_scd2_merge_and_write_job_count(spark, tmp_path, jobs_in_group):
             scd2_merge(target, upd, ["id"], cond, updated_at_col="updated_at"), "t"))
         assert jobs == 3
         assert jobs_in_group(f"scd2-read-{b}", lambda: s.read("t")) == 0
+
+
+@pytest.mark.parametrize("commit", sorted(COMMITS))
+def test_committed_files_are_zstd(spark, store, commit):
+    """Every parquet file a commit writes (not the ones it hard-links from
+    the previous version) is zstd-compressed in every column chunk. (A task
+    with no rows writes a file with no column chunk.)"""
+    store.read("t")
+    v = COMMITS[commit](spark, store)
+    table = "u" if commit == "unpartitioned" else "t"
+    prev = set(_files(store, table, v - 1).values())
+    fresh = [p for p, ino in _files(store, table, v).items() if ino not in prev]
+    assert set().union(*map(_codecs, fresh)) == {"ZSTD"}
+
+
+def test_carry_over_snappy_version_reads_as_one_table(spark, tmp_path, monkeypatch):
+    """A v1 written as snappy (the format of older versions of the store)
+    and a pruned SCD1 merge on it: the untouched partitions keep their
+    snappy files by hard link, the touched ones are written as zstd, and the
+    mixed version reads back, in Spark and in pyarrow, the rows a forced
+    full write of the same frame holds."""
+    s = VersionedParquetStore(spark, str(tmp_path / "old"))
+    with monkeypatch.context() as m:
+        m.setattr(tablestore, "PARQUET_CODEC", "snappy")
+        _seed(spark, s)
+    assert set().union(*map(_codecs, _files(s, "t", 1))) == {"SNAPPY"}
+
+    upd = _updates(spark, [(12, "x", 99.0, 1), (200, "new", 1.0, 2)])
+    merged = scd1_merge(s.read("t"), upd, ["id"], partition_col="part")
+    full = VersionedParquetStore(spark, str(tmp_path / "full"))
+    full.write(merged.select("*"), "t", partition_by=["part"])
+    v = s.write(merged, "t", partition_by=["part"])
+
+    assert _linked(s, "t", v) == {"part=0", "part=3"}
+    by_part = {}
+    for path in _files(s, "t", v):
+        by_part.setdefault(os.path.basename(os.path.dirname(path)), set()).update(
+            _codecs(path))
+    assert by_part == {"part=0": {"SNAPPY"}, "part=1": {"ZSTD"},
+                       "part=2": {"ZSTD"}, "part=3": {"SNAPPY"}}
+
+    want = _rows(full.read("t"))
+    assert _rows(s.read("t")) == want
+    assert _rows(spark.read.parquet(s._version_path("t", v))) == want
+    arrow = pads.dataset(
+        s._version_path("t", v), format="parquet", partitioning="hive"
+    ).to_table()
+    assert sorted(
+        (tuple(r[c] for c in COLS) for r in arrow.to_pylist()), key=repr
+    ) == want
+
+
+def test_drop_forgets_cached_reads(spark, tmp_path):
+    """A table dropped and written again restarts at version 1: reading it
+    gives the new rows, not the dropped version's frame (whose files are
+    gone)."""
+    s = VersionedParquetStore(spark, str(tmp_path / "drop"))
+    s.write(_updates(spark, [(1, "a", 1.0, 0)]), "t")
+    assert _rows(s.read("t")) == [(1, "a", 1.0, 0)]
+    s.drop("t")
+    assert s.write(_updates(spark, [(2, "b", 2.0, 1)]), "t") == 1
+    assert _rows(s.read("t")) == [(2, "b", 2.0, 1)]
+
+
+def test_vacuum_forgets_cached_reads_of_removed_versions(spark, store):
+    """A version ``vacuum`` removed fails at ``read``, like one that was
+    never cached, instead of handing back a frame over deleted files; the
+    versions it keeps still read."""
+    for i in range(2):
+        store.write(_updates(spark, [(i, "n", 0.0, 0)]), "t", partition_by=["part"])
+    assert store.read("t", 1).count() == 40
+    store.vacuum("t", keep_last=1)
+    with pytest.raises(AnalysisException):
+        store.read("t", 1)
+    assert _rows(store.read("t")) == [(1, "n", 0.0, 0)]
+
+
+def test_read_cache_holds_two_versions_per_table(spark, store):
+    """Ten merge commits leave the version each merge read and the one it
+    committed cached, no more, and every merge still takes the carry: its
+    base is the cached read of the current version."""
+    want = []
+    for i in range(10):
+        row = (10 * (i % 4) + i, f"u{i}", 0.0, i % 4)  # an update in part i % 4
+        want.append(row)
+        merged = scd1_merge(store.read("t"), _updates(spark, [row]), ["id"],
+                            partition_col="part")
+        v = store.write(merged, "t", partition_by=["part"])
+        assert _linked(store, "t", v) == {f"part={p}" for p in range(4) if p != i % 4}
+        assert sorted(k for k in store._read_cache if k[0] == "t") == [("t", v - 1), ("t", v)]
+    assert _rows(store.read("t").filter("name LIKE 'u%'")) == sorted(want, key=repr)
+    assert store.read("t").count() == 40
