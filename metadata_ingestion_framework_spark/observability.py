@@ -31,37 +31,33 @@ import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# One schema per table: the column order and types of its files (the order
+# the earlier Spark appends wrote, so old and new files read back as one
+# table), and of the empty frame a table with no file yet reads as.
 STATUS_SCHEMA = (
-    "pipeline_id string, task_name string, status string, topic string, "
-    "partition int, startOffset long, endOffset long, batch_id long, "
-    "run_id string, message string, last_update timestamp"
+    "pipeline_id string, task_name string, status string, batch_id long, "
+    "run_id string, message string, topic string, partition int, "
+    "startOffset long, endOffset long, last_update timestamp"
 )
 FACT_SCHEMA = (
     "pipeline_id string, task_name string, metric string, value long, "
     "batch_id long, last_update timestamp"
 )
 ERROR_SCHEMA = (
-    "pipeline_id string, task_name string, row_data string, error string, "
+    "row_data string, pipeline_id string, task_name string, error string, "
     "batch_id long, last_update timestamp"
 )
 
-# On-disk layouts: the column order and types the earlier Spark appends
-# wrote, so old and new files read back as one table. Timestamps are
-# microseconds, never nanoseconds: get_spark() reads parquet nanos as long.
-_TS = pa.timestamp("us", tz="UTC")
-_STATUS_FILE = pa.schema([
-    ("pipeline_id", pa.string()), ("task_name", pa.string()),
-    ("status", pa.string()), ("batch_id", pa.int64()),
-    ("run_id", pa.string()), ("message", pa.string()),
-    ("topic", pa.string()), ("partition", pa.int32()),
-    ("startOffset", pa.int64()), ("endOffset", pa.int64()),
-    ("last_update", _TS),
-])
-_FACT_FILE = pa.schema([
-    ("pipeline_id", pa.string()), ("task_name", pa.string()),
-    ("metric", pa.string()), ("value", pa.int64()),
-    ("batch_id", pa.int64()), ("last_update", _TS),
-])
+# Timestamps are microseconds, never nanoseconds: get_spark() reads parquet
+# nanos as long.
+_ARROW_TYPES = {
+    "string": pa.string(), "int": pa.int32(), "long": pa.int64(),
+    "timestamp": pa.timestamp("us", tz="UTC"),
+}
+
+
+def _arrow_schema(ddl: str) -> pa.Schema:
+    return pa.schema([(n, _ARROW_TYPES[t]) for n, t in (c.split() for c in ddl.split(", "))])
 
 
 @dataclass
@@ -82,10 +78,15 @@ class ObservabilityStore:
         os.replace(tmp, os.path.join(d, fname))
 
     def _read(self, name: str, schema: str) -> DataFrame:
-        try:
-            return self.spark.read.parquet(f"{self.root}/{name}")
-        except Exception:
+        """The table's rows; the empty frame only while its directory holds
+        no visible data file. Any other failure (a torn or unreadable file)
+        raises: read as empty, a lost status table would resume a stream
+        from the earliest offsets."""
+        path = os.path.join(self.root, name)
+        names = os.listdir(path) if os.path.isdir(path) else []
+        if all(n.startswith((".", "_")) for n in names):
             return self.spark.createDataFrame([], schema)
+        return self.spark.read.parquet(path)
 
     # -- status (Task.scala:52-64) --------------------------------------
     def write_status(
@@ -113,7 +114,7 @@ class ObservabilityStore:
             "pipeline_status",
             [(pipeline_id, task_name, status, batch_id, run_id, message, *o, now)
              for o in offsets],
-            _STATUS_FILE,
+            _arrow_schema(STATUS_SCHEMA),
         )
 
     def read_status(self) -> DataFrame:
@@ -126,7 +127,7 @@ class ObservabilityStore:
         self._write_rows(
             "pipeline_fact",
             [(pipeline_id, task_name, metric, value, batch_id, datetime.now(timezone.utc))],
-            _FACT_FILE,
+            _arrow_schema(FACT_SCHEMA),
         )
 
     def read_facts(self) -> DataFrame:

@@ -38,6 +38,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.operators.dedup import carry_deps
+from metadata_ingestion_framework_spark.plans.tablestore import (
+    RunLedger,
+    VersionedParquetStore,
+)
 
 #: salt for the default corpus epoch — callers pass their own per epoch.
 DEFAULT_SALT = "corpus0"
@@ -255,7 +259,7 @@ def corpus_epoch_assignments(
     return carry_deps(final, out)
 
 
-class CorpusShardStore:
+class CorpusShardStore(RunLedger):
     """Epoch-incremental sharded corpus writer (r17, VERDICT r16 item
     2): the store-family lifecycle (build / append / vacate / heal)
     applied to the pipeline's LAST MILE, so a growing corpus appends
@@ -315,9 +319,6 @@ class CorpusShardStore:
         from metadata_ingestion_framework_spark.operators.incremental import (
             _check_store_config,
         )
-        from metadata_ingestion_framework_spark.plans.tablestore import (
-            VersionedParquetStore,
-        )
 
         self.spark = spark
         self.id_col = id_col
@@ -342,26 +343,6 @@ class CorpusShardStore:
                 "n_buckets": n_buckets,
             },
         )
-
-    # run ledger — the shared store convention (incremental.py)
-    def ingested_runs(self) -> list[str]:
-        import json
-
-        try:
-            with open(self._ledger_path) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return []
-
-    def _record_run(self, run_id: str) -> None:
-        import json
-        import os
-
-        runs = self.ingested_runs() + [run_id]
-        tmp = self._ledger_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(runs, f)
-        os.replace(tmp, self._ledger_path)
 
     def _member_bucket(self, df: DataFrame):
         from metadata_ingestion_framework_spark.operators.incremental import (

@@ -47,7 +47,11 @@ from metadata_ingestion_framework_spark.operators.dedup import (
     minhash_signatures,
 )
 from metadata_ingestion_framework_spark.operators.merge import dedup_window, scd1_merge
-from metadata_ingestion_framework_spark.plans.tablestore import VersionedParquetStore
+from metadata_ingestion_framework_spark.plans.tablestore import (
+    RunLedger,
+    VersionedParquetStore,
+    _atomic_write,
+)
 
 
 def _config_diff(stored: dict, config: dict) -> list[str]:
@@ -84,10 +88,7 @@ def _check_store_config(root: str, config: dict) -> None:
                 "change layout-defining parameters"
             )
     else:
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(config, f)
-        os.replace(tmp, path)
+        _atomic_write(path, json.dumps(config))
 
 
 def range_bucket_expr(
@@ -345,7 +346,7 @@ def minhash_batch_pairs(
     return intra_pairs.unionByName(store_pairs)
 
 
-class MinhashSignatureStore:
+class MinhashSignatureStore(RunLedger):
     """Durable cross-run minhash dedup state.
 
     Tables (both ``VersionedParquetStore`` snapshots under ``root``):
@@ -424,21 +425,6 @@ class MinhashSignatureStore:
                 "sig_bucket_width": sig_bucket_width,
             },
         )
-
-    # -- run ledger --------------------------------------------------------
-    def ingested_runs(self) -> list[str]:
-        try:
-            with open(self._ledger_path) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return []
-
-    def _record_run(self, run_id: str) -> None:
-        runs = self.ingested_runs() + [run_id]
-        tmp = self._ledger_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(runs, f)
-        os.replace(tmp, self._ledger_path)  # atomic, like _CURRENT
 
     # -- signature plumbing ------------------------------------------------
     def _signatures(self, batch: DataFrame) -> DataFrame:
@@ -823,7 +809,7 @@ def embedding_batch_drops(
     )
 
 
-class EmbeddingDedupStore:
+class EmbeddingDedupStore(RunLedger):
     """Durable cross-run SEMANTIC dedup state — the embedding twin of
     :class:`MinhashSignatureStore`: a recurring ingest dedups today's
     batch of vectors against everything already ingested without
@@ -917,9 +903,6 @@ class EmbeddingDedupStore:
                 ],
             },
         )
-
-    ingested_runs = MinhashSignatureStore.ingested_runs
-    _record_run = MinhashSignatureStore._record_run
 
     def _with_vec_bucket(self, df: DataFrame) -> DataFrame:
         """Top-level partition key — same convention as the sigs table
@@ -1378,7 +1361,7 @@ def media_frame_batch_drops(
     return intra_drops.union(store_drops).distinct()
 
 
-class ImageHashStore:
+class ImageHashStore(RunLedger):
     """Durable cross-run PERCEPTUAL image dedup state (r13) — the media
     twin of :class:`MinhashSignatureStore` (text) and
     :class:`EmbeddingDedupStore` (vectors): a recurring ingest dedups
@@ -1522,13 +1505,7 @@ class ImageHashStore:
             return  # a real mismatch — let the guard name the keys
         if self.store.exists(self.FPS):
             self.rebuild_bands()
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(cfg, f)
-        os.replace(tmp, path)
-
-    ingested_runs = MinhashSignatureStore.ingested_runs
-    _record_run = MinhashSignatureStore._record_run
+        _atomic_write(path, json.dumps(cfg))
 
     def _fingerprints(self, batch: DataFrame) -> DataFrame:
         from metadata_ingestion_framework_spark.operators.multimodal import (
@@ -1909,7 +1886,7 @@ def paragraph_batch_removals(
     return dups.unionByName(store_hits).distinct()
 
 
-class ParagraphHashStore:
+class ParagraphHashStore(RunLedger):
     """Durable cross-run PARAGRAPH dedup state — the CCNet first stage
     (Wenzek et al. 2020 dedup paragraph hashes against previous crawl
     shards; Penedo et al. 2023 keep it before fuzzy dedup) as a store:
@@ -2026,10 +2003,7 @@ class ParagraphHashStore:
             "bloom_hashes": cfg["bloom_hashes"],
         } != cfg:
             return  # a real mismatch — let the guard name the keys
-        tmp = path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(cfg, f)
-        os.replace(tmp, path)
+        _atomic_write(path, json.dumps(cfg))
 
     # -- bloom sidecar -----------------------------------------------------
     def _bloom_positions(self, gh_rows: DataFrame) -> DataFrame:
@@ -2092,21 +2066,6 @@ class ParagraphHashStore:
             .collect()
         )
         return [r.par_bucket for r in rows]
-
-    # -- run ledger (the minhash store's retry bookkeeping, verbatim) ------
-    def ingested_runs(self) -> list[str]:
-        try:
-            with open(self._ledger_path) as f:
-                return json.load(f)
-        except (FileNotFoundError, ValueError):
-            return []
-
-    def _record_run(self, run_id: str) -> None:
-        runs = self.ingested_runs() + [run_id]
-        tmp = self._ledger_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(runs, f)
-        os.replace(tmp, self._ledger_path)  # atomic, like _CURRENT
 
     # -- the operation -----------------------------------------------------
     def ingest(self, batch: DataFrame, run_id: str) -> DataFrame | None:
@@ -2369,7 +2328,7 @@ def crossmodal_pair_decisions(
     )
 
 
-class CrossModalPairStore:
+class CrossModalPairStore(RunLedger):
     """Durable cross-run (caption, image) PAIR dedup state — the LAION/
     DataComp curation rule applied ACROSS ingests (r16, VERDICT r15
     item 4): a training pair is a duplicate candidate when its IMAGE is
@@ -2466,9 +2425,6 @@ class CrossModalPairStore:
                 "jaccard_threshold": jaccard_threshold,
             },
         )
-
-    ingested_runs = MinhashSignatureStore.ingested_runs
-    _record_run = MinhashSignatureStore._record_run
 
     def ingest(self, batch: DataFrame, run_id: str) -> DataFrame | None:
         """Decide ``batch``'s pairs against both stores and itself;

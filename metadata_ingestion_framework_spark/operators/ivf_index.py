@@ -52,6 +52,7 @@ from metadata_ingestion_framework_spark.operators.similarity import (
 )
 from metadata_ingestion_framework_spark.plans.tablestore import (
     VersionedParquetStore,
+    _atomic_write,
 )
 
 
@@ -178,10 +179,7 @@ class IvfIndex:
                     stacklevel=2,
                 )
                 meta.update({k: layout[k] for k in missing})
-                tmp = self._cent_path + ".tmp"
-                with open(tmp, "w") as f:
-                    json.dump(meta, f)
-                os.replace(tmp, self._cent_path)
+                _atomic_write(self._cent_path, json.dumps(meta))
             self.centroids = meta["unit_centroids"]
             self.cell_splits = {
                 int(k): int(v)
@@ -304,26 +302,19 @@ class IvfIndex:
             self.store.write(
                 assigned, self.VECS, partition_by=self._part_cols()
             )
-        tmp = self._cent_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(
-                {
-                    "dim": self.dim,
-                    "n_cells": self.n_cells,
-                    "unit_centroids": centroids,
-                    "cell_cap": self.cell_cap,
-                    "cell_splits": {
-                        str(k): v for k, v in self.cell_splits.items()
-                    },
-                    "vec_bucket_width": self.vec_bucket_width,
-                    "n_buckets": self.n_buckets,
-                    "id_col": self.id_col,
-                    "vec_col": self.vec_col,
-                    "pq_codebooks": self.codebooks,
-                },
-                f,
-            )
-        os.replace(tmp, self._cent_path)  # atomic, like _CURRENT
+        meta = {
+            "dim": self.dim,
+            "n_cells": self.n_cells,
+            "unit_centroids": centroids,
+            "cell_cap": self.cell_cap,
+            "cell_splits": {str(k): v for k, v in self.cell_splits.items()},
+            "vec_bucket_width": self.vec_bucket_width,
+            "n_buckets": self.n_buckets,
+            "id_col": self.id_col,
+            "vec_col": self.vec_col,
+            "pq_codebooks": self.codebooks,
+        }
+        _atomic_write(self._cent_path, json.dumps(meta))
         self.centroids = centroids
 
     def _assign(self, batch: DataFrame, centroids) -> DataFrame:

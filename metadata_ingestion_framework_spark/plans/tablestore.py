@@ -10,10 +10,23 @@ directories plus an atomically-replaced pointer:
     <root>/<table>/v=000001/…parquet
     <root>/<table>/_CURRENT   (text file: "1")
 
-Readers resolve ``_CURRENT`` at plan-build time and scan an immutable dir;
-writers write ``v=N+1`` fully, then swap the pointer (rename = atomic on a
-POSIX fs; on object stores use a conditional put). Old versions allow time
-travel and are pruned with ``vacuum``.
+Readers resolve ``_CURRENT`` at plan-build time and scan an immutable dir.
+Every version is made by one routine, ``_commit``:
+
+1. pick ``v = current + 1``;
+2. write the frame there, clustered on its partition columns, as zstd
+   parquet;
+3. for a partition delta, hard-link every current top-level partition the
+   delta neither names nor wrote (the untouched ones);
+4. swap ``_CURRENT`` to ``v`` (fsync'd temp file + rename = atomic on a
+   POSIX fs; on object stores use a conditional put);
+5. cache the read of ``v`` (``_cache_commit``).
+
+A missing ``_CURRENT`` means the table does not exist; one that does not
+parse raises rather than reading as "no table", which would let the next
+write overwrite ``v=000001``. Old versions allow time travel and are
+pruned with ``vacuum``. ``RunLedger`` is the other durable record a store
+keeps: the run ids it already ingested, in ``<root>/_runs.json``.
 
 Every data file the store writes is parquet compressed with zstd
 (``PARQUET_CODEC``). Delta writes Spark's default, snappy, which does no
@@ -26,6 +39,7 @@ and zstd files reads as one table.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
@@ -107,6 +121,60 @@ def _dir_value_type(dtype: DataType) -> type | None:
     return None
 
 
+def _atomic_write(path: str, text: str) -> None:
+    """Replace ``path`` by a file holding ``text``: write a temp file beside
+    it, fsync it, then rename it over ``path`` (atomic on a POSIX fs), so a
+    reader sees the old or the new content and a crash leaves no torn file."""
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        f.write(text)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
+
+
+def _link_tree(src: str, dst: str) -> None:
+    """Recreate ``src``'s directories under ``dst`` and hard-link its
+    visible files into them (copy where the fs has no hard links). Links
+    share the immutable inodes, so ``vacuum`` dropping ``src``'s version
+    never touches the data ``dst`` carries."""
+    for root, _dirs, files in os.walk(src):
+        tgt = os.path.normpath(os.path.join(dst, os.path.relpath(root, src)))
+        os.makedirs(tgt, exist_ok=True)
+        for f in files:
+            if f.startswith((".", "_")):
+                continue
+            s, d = os.path.join(root, f), os.path.join(tgt, f)
+            try:
+                os.link(s, d)
+            except OSError:  # cross-device / fs without hard links
+                shutil.copy2(s, d)
+
+
+class RunLedger:
+    """The run ledger of a store: ``_ledger_path`` (``<root>/_runs.json``)
+    holds the JSON list of the run ids already ingested, so a retried run is
+    a no-op (the offset-bookkeeping analogy of Delta's ``txnAppId``/
+    ``txnVersion``). A missing file means no runs; a file that does not parse
+    raises, since reading it as empty would re-ingest every earlier run."""
+
+    _ledger_path: str
+
+    def ingested_runs(self) -> list[str]:
+        try:
+            with open(self._ledger_path) as f:
+                text = f.read()
+        except FileNotFoundError:
+            return []
+        try:
+            return json.loads(text)
+        except ValueError as e:
+            raise ValueError(f"run ledger {self._ledger_path} does not parse") from e
+
+    def _record_run(self, run_id: str) -> None:
+        _atomic_write(self._ledger_path, json.dumps(self.ingested_runs() + [run_id]))
+
+
 class VersionedParquetStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -127,12 +195,22 @@ class VersionedParquetStore:
     def _pointer(self, table: str) -> str:
         return os.path.join(self._dir(table), "_CURRENT")
 
+    def _swap_pointer(self, table: str, nxt: int) -> None:
+        _atomic_write(self._pointer(table), str(nxt))
+
     def current_version(self, table: str) -> int | None:
+        """The version ``_CURRENT`` names; None only when it is missing."""
         try:
             with open(self._pointer(table)) as f:
-                return int(f.read().strip())
-        except (FileNotFoundError, ValueError):
+                text = f.read()
+        except FileNotFoundError:
             return None
+        try:
+            return int(text)
+        except ValueError:
+            raise ValueError(
+                f"table {table!r}: unreadable pointer {self._pointer(table)} ({text!r})"
+            ) from None
 
     def exists(self, table: str) -> bool:
         return self.current_version(table) is not None
@@ -167,13 +245,10 @@ class VersionedParquetStore:
 
     # -- IO -----------------------------------------------------------------
     def read(self, table: str, version: int | None = None) -> DataFrame:
-        """Read a version (current by default). The returned DataFrame is
-        CACHED per (table, version): path-based ``spark.read.parquet``
-        builds a fresh InMemoryFileIndex per call — an O(#partition dirs)
-        driver-side listing that an ingest used to pay 2-3x per touched
-        table (measured r15: 3.4s per read at a 10x image band table —
-        the whole "flat ingest" growth). Versions are immutable, so the
-        cached frame can never go stale; a new version is a new key. A
+        """Read a version (current by default), CACHED per (table, version):
+        a path read builds a fresh file index per call, an O(#partition dirs)
+        driver-side listing (r15: 3.4 s per read of a 10x image band table).
+        Versions are immutable, so the cached frame never goes stale. A
         version this store commits is usually cached at commit time
         (``_cache_commit``), so its first read runs no Spark job either."""
         v = version if version is not None else self.current_version(table)
@@ -190,15 +265,12 @@ class VersionedParquetStore:
         self, table: str, partition_col: str, values: list
     ) -> DataFrame:
         """Rows of the given TOP-LEVEL partition values — row-identical to
-        ``read(table).filter(col(partition_col).isin(values))`` (with
-        ``isNull`` for a None value), but partition DISCOVERY lists only
-        the named directories: the plan-construction cost tracks the
-        touched set, not the store (r15 — the delta-write read side of
-        the same listing finding as ``read``'s cache). Hierarchical
-        layouts keep their sub-partition dirs (basePath preserves all
-        partition columns). Values whose directory doesn't exist simply
-        contribute no rows; when NONE exist, an empty frame with the
-        table's schema is returned (one single-partition listing)."""
+        ``read(table).filter(col(partition_col).isin(values))`` (``isNull``
+        for None), but partition DISCOVERY lists only the named directories,
+        so planning cost tracks the touched set, not the store (r15).
+        Hierarchical layouts keep their sub-partition columns (basePath).
+        Values without a directory contribute no rows; when none has one,
+        an empty frame with the table's schema is returned."""
         v = self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"table {table} does not exist in {self.root}")
@@ -221,13 +293,6 @@ class VersionedParquetStore:
             F.lit(False)
         )
 
-    def _swap_pointer(self, table: str, nxt: int) -> None:
-        tmp = self._pointer(table) + ".tmp"
-        os.makedirs(self._dir(table), exist_ok=True)
-        with open(tmp, "w") as f:
-            f.write(str(nxt))
-        os.replace(tmp, self._pointer(table))  # atomic pointer swap
-
     def write(
         self,
         df: DataFrame,
@@ -237,14 +302,10 @@ class VersionedParquetStore:
     ) -> int:
         """Write a new immutable version and atomically repoint _CURRENT.
 
-        Partitioned writes cluster on the partition columns first (r15 —
-        the r14 delta-write fragmentation fix extended to FULL writes:
-        a 10x Bm25Index build probe measured ~14 files per leaf from the
-        un-clustered path, the same per-file scan cost class). One file
-        per leaf; distinct leaves parallelize across tasks, and a leaf is
-        bucket-bounded by the store sizing rules so the single writer per
-        leaf is the intended unit of work. ``cluster=False`` opts out for
-        tables whose leaves are NOT bucket-bounded.
+        Partitioned writes cluster on the partition columns first, one file
+        per leaf (``_commit``; a 10x Bm25Index build measured ~14 files per
+        leaf without it). ``cluster=False`` opts out for tables whose leaves
+        are NOT bucket-bounded.
 
         A ``MergeResult`` (``operators/merge.py``) partitioned by its own
         pruning column commits only the partitions its merge touched:
@@ -259,18 +320,87 @@ class VersionedParquetStore:
             nxt = self._write_touched(df, table, partition_by, cluster)
             if nxt is not None:
                 return nxt
+        return self._commit(df, table, list(partition_by or []), cluster)
+
+    def _commit(
+        self,
+        df: DataFrame,
+        table: str,
+        part_cols: list[str],
+        cluster: bool,
+        touched: list | None = None,
+        strict: bool = False,
+    ) -> int | None:
+        """Make version ``current + 1`` from ``df`` (the module docstring's
+        sequence) and return it. With ``touched`` it is a partition delta over
+        a layout the caller checked (``_layout_error``): every current
+        top-level partition that ``touched`` does not name and ``df`` did not
+        write is hard-linked (a partition ``df`` wrote though the caller did
+        not name it keeps its fresh contents; linking the old files beside
+        them would duplicate rows). ``strict`` refuses that case instead:
+        the version is discarded and None returned."""
         cur = self.current_version(table)
         nxt = (cur or 0) + 1
         path = self._version_path(table, nxt)
-        if partition_by and cluster:
-            df = df.repartition(*[F.col(c) for c in partition_by])
+        # Cluster on the partition columns first (r14, r15): otherwise every
+        # upstream task writes a file into every leaf dir it holds rows for,
+        # and repeated deltas fragment the touched partitions into hundreds
+        # of KB-files (one Bm25Index append took a dense serve from 7 s to
+        # 28-33 s). A leaf is bucket-bounded by the store sizing rules, so
+        # one writer per leaf is the intended unit of work.
+        if part_cols and cluster:
+            df = df.repartition(*[F.col(c) for c in part_cols])
         writer = df.write.mode("overwrite").option("compression", PARQUET_CODEC)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
+        if part_cols:
+            writer = writer.partitionBy(*part_cols)
         writer.parquet(path)
+        if touched is not None:
+            # NULL values name the Hive default dir; others go through
+            # Spark's path escaping ('=' / ':' / '%'), or an escaped
+            # partition would be both rewritten and linked (ADVICE r8).
+            keep = {partition_dir(part_cols[0], v) for v in touched}
+            written = set(os.listdir(path))
+            if strict and any(
+                n.startswith(f"{part_cols[0]}=") and n not in keep for n in written
+            ):
+                shutil.rmtree(path)
+                return None
+            prev = self._version_path(table, cur)
+            for name in os.listdir(prev):
+                if not (name.startswith((".", "_")) or name in keep or name in written):
+                    _link_tree(os.path.join(prev, name), os.path.join(path, name))
         self._swap_pointer(table, nxt)
-        self._cache_commit(df, table, partition_by or [], cur, nxt)
+        self._cache_commit(df, table, part_cols, cur, nxt)
         return nxt
+
+    def _layout_error(self, table: str, version: int, part_cols: list[str]) -> str | None:
+        """Why ``version`` is not laid out exactly as nested ``part_cols``
+        partition dirs, or None when it is. A partition delta carries the
+        current top-level dirs whole, so a version partitioned by another
+        column (or none) would carry nothing and silently truncate the
+        table, and a mismatched nesting would link a mixed-depth version
+        that fails only at a later read (ADVICE r8, r10). One
+        metadata-only walk, O(#partition dirs)."""
+        base = self._version_path(table, version)
+        for path, dirs, files in os.walk(base):
+            dirs[:] = sorted(d for d in dirs if not d.startswith((".", "_")))
+            rel = os.path.relpath(path, base)
+            level = 0 if rel == "." else rel.count(os.sep) + 1
+            if level == len(part_cols):
+                if dirs:
+                    where = os.path.normpath(os.path.join(rel, dirs[0]))
+                    return f"{where!r} nests deeper than partition cols {part_cols}"
+                continue
+            col = part_cols[level]
+            bad = [f for f in files if not f.startswith((".", "_"))]
+            bad += [d for d in dirs if not d.startswith(f"{col}=")]
+            if bad:
+                where = os.path.normpath(os.path.join(rel, bad[0]))
+                return f"{where!r} is not a '{col}=' partition dir: " + (
+                    f"the version is not partitioned by {col!r}" if level == 0
+                    else f"its nesting does not match partition cols {part_cols}"
+                )
+        return None
 
     def _evict(self, table: str, upto: int | None = None) -> None:
         """Forget the cached reads of ``table`` at versions ``<= upto``
@@ -326,7 +456,7 @@ class VersionedParquetStore:
           non-empty str on a partition column of that type) and every
           existing directory carries the canonical name of the value Spark
           reads back from it (``part=03`` reads as 3 and is refused);
-        - the current layout is partitioned by ``partition_by``;
+        - the current version is laid out as ``partition_by`` (``_layout_error``);
         - no merged row lands outside the touched set (a clause ``set`` that
           moves the partition column, or an insert that leaves it NULL) —
           checked on the written directories before the pointer swap.
@@ -350,7 +480,7 @@ class VersionedParquetStore:
             v is not None and (type(v) is not kind or v == "") for v in df.touched
         ):
             return None
-        if self.partition_cols_of(table, cur) != list(partition_by):
+        if self._layout_error(table, cur, list(partition_by)):
             return None
         prefix = f"{col}="
         for name in os.listdir(self._version_path(table, cur)):
@@ -362,8 +492,8 @@ class VersionedParquetStore:
                 return None
             if partition_dir(col, value) != name:
                 return None
-        return self._write_delta(
-            df.changed, table, list(partition_by), df.touched, cluster, strict=True
+        return self._commit(
+            df.changed, table, list(partition_by), cluster, df.touched, strict=True
         )
 
     def write_partition_delta(
@@ -380,10 +510,9 @@ class VersionedParquetStore:
         ``touched_values`` partitions; every other partition directory is
         carried from the current version by hard link (copy fallback), so
         an ingest that touches 2 of 64 buckets writes 2 buckets of bytes,
-        not 64. Snapshot isolation is preserved: links share immutable
-        file inodes, and ``vacuum``'s rmtree only drops the old version's
-        link, never the shared data. Falls back to a plain ``write`` when
-        the table doesn't exist yet.
+        not 64 (``_commit``). The first version of a table is a plain
+        write; on an existing table a current layout other than
+        ``partition_col`` raises ValueError before anything is written.
 
         ``partition_col`` may be a LIST for hierarchically partitioned
         tables (r10, the embedding store's ``["vec_bucket", "cell"]``):
@@ -392,150 +521,23 @@ class VersionedParquetStore:
         sub-partition dirs included), the rest only shape the layout the
         writer produces inside rewritten dirs.
 
-        ``cluster=False`` (r17) opts out of the pre-write hash clustering
-        for callers that already repartitioned AND ordered the delta
-        (the corpus shard writer's deterministic in-file order — the
-        same escape hatch ``write`` grew in r16); the one-file-per-leaf
-        invariant is then the caller's responsibility.
+        ``cluster=False`` (r17) opts out of the pre-write clustering for
+        callers that already repartitioned AND ordered the delta (the corpus
+        shard writer); one file per leaf is then the caller's responsibility.
         """
         part_cols = (
             [partition_col] if isinstance(partition_col, str) else list(partition_col)
         )
-        if self.current_version(table) is None:
-            return self.write(df, table, partition_by=part_cols, cluster=cluster)
-        return self._write_delta(df, table, part_cols, touched_values, cluster)
-
-    def _write_delta(
-        self,
-        df: DataFrame,
-        table: str,
-        part_cols: list[str],
-        touched_values: list,
-        cluster: bool,
-        strict: bool = False,
-    ) -> int | None:
-        """``write_partition_delta`` on an existing table. ``strict``: if
-        ``df`` wrote any partition outside ``touched_values``, discard the
-        new version and return None instead of letting its fresh contents
-        win over the carried partition."""
-        partition_col = part_cols[0]
         cur = self.current_version(table)
-        # Validate the PREVIOUS version's layout before paying for the new
-        # write: if it is not laid out as '{partition_col}=...' dirs
-        # (unpartitioned, or partitioned by a different column), nothing
-        # would be carried and the new version would silently hold only the
-        # touched data — delete_partitions on such a table would silently
-        # truncate it. Refuse instead (ADVICE r8).
-        prev = self._version_path(table, cur)
-        carry = []
-        for name in os.listdir(prev):
-            if name.startswith((".", "_")):
-                continue  # _SUCCESS / hidden metadata, never carried
-            if not name.startswith(f"{partition_col}="):
-                raise ValueError(
-                    f"table {table!r} v={cur} entry {name!r} is not a "
-                    f"'{partition_col}=' partition dir — the current version "
-                    f"is not partitioned by {partition_col!r}; rewrite it "
-                    "with write(..., partition_by=[...]) before using "
-                    "partition-delta writes"
-                )
-            carry.append(name)
-        # Validate the CARRIED sub-layout too, not just the first level: a
-        # prior version partitioned by the first column alone (or by
-        # different inner columns) would hard-link a mixed single/two-level
-        # version that only fails at a later read — refuse loudly like the
-        # top-level check does, in BOTH directions (declared cols deeper
-        # than the layout, or the layout deeper than the declared cols)
-        # (ADVICE r10). Metadata-only listing walk, O(#partition dirs),
-        # no data touched.
-        def _check_nesting(dirpath: str, level: int) -> None:
-            for entry in os.listdir(dirpath):
-                if entry.startswith((".", "_")):
-                    continue
-                full = os.path.join(dirpath, entry)
-                if level < len(part_cols):
-                    if not (
-                        os.path.isdir(full)
-                        and entry.startswith(f"{part_cols[level]}=")
-                    ):
-                        raise ValueError(
-                            f"table {table!r} v={cur} entry "
-                            f"{os.path.relpath(full, prev)!r} is not a "
-                            f"'{part_cols[level]}=' partition dir — the "
-                            "current version's nesting does not match "
-                            f"partition cols {part_cols}; rewrite it "
-                            "with write(..., partition_by=[...]) before "
-                            "using partition-delta writes"
-                        )
-                    _check_nesting(full, level + 1)
-                elif os.path.isdir(full):
-                    raise ValueError(
-                        f"table {table!r} v={cur} entry "
-                        f"{os.path.relpath(full, prev)!r} nests deeper "
-                        f"than the declared partition cols {part_cols} "
-                        "— layout mismatch; rewrite the table before "
-                        "using partition-delta writes"
-                    )
-
-        for name in carry:
-            _check_nesting(os.path.join(prev, name), 1)
-        # NULL partition values land in the Hive default-partition dir —
-        # a None in touched_values must match it, or the null partition
-        # would be both rewritten and linked (duplicated). Non-null values
-        # go through Spark's path escaping so specials like '=' / ':' / '%'
-        # match the directory Spark actually wrote (ADVICE r8).
-        touched = {partition_dir(partition_col, v) for v in touched_values}
-        nxt = cur + 1
-        path = self._version_path(table, nxt)
-        # Cluster the delta on its partition columns before writing (r14):
-        # without this, EVERY upstream task emits a file into every leaf
-        # dir it holds rows for, so repeated deltas fragment the touched
-        # partitions into hundreds of KB-sized files and downstream scans
-        # pay per-file open costs (measured: ONE Bm25Index append took a
-        # dense-query serve from 7s to 28-33s; a 1s compact restored it).
-        # Hash-clustering yields one file per touched leaf while distinct
-        # leaves still parallelize across tasks — and a leaf's rewrite is
-        # bucket-bounded by the store sizing rule, so the single writer
-        # per leaf is the intended unit of work.
-        clustered = (
-            df.repartition(*[F.col(c) for c in part_cols]) if cluster else df
-        )
-        clustered.write.mode("overwrite").option(
-            "compression", PARQUET_CODEC
-        ).partitionBy(*part_cols).parquet(path)
-        if strict and any(
-            n.startswith(f"{partition_col}=") and n not in touched
-            for n in os.listdir(path)
-        ):
-            shutil.rmtree(path)
-            return None
-        for name in carry:
-            if name in touched:
-                continue
-            src, dst = os.path.join(prev, name), os.path.join(path, name)
-            if os.path.isdir(dst):
-                # the writer already produced this partition (caller's
-                # touched list was incomplete) — its fresh contents win;
-                # linking old files beside them would silently duplicate
-                continue
-            # Recursive: hierarchical layouts nest sub-partition dirs
-            # (e.g. vec_bucket=N/cell=M/part-*.parquet) — files hard-link,
-            # directory structure is recreated.
-            for root, _dirs, files in os.walk(src):
-                rel = os.path.relpath(root, src)
-                tgt = dst if rel == "." else os.path.join(dst, rel)
-                os.makedirs(tgt, exist_ok=True)
-                for f in files:
-                    if f.startswith((".", "_")):
-                        continue
-                    s, d = os.path.join(root, f), os.path.join(tgt, f)
-                    try:
-                        os.link(s, d)
-                    except OSError:  # cross-device / fs without hard links
-                        shutil.copy2(s, d)
-        self._swap_pointer(table, nxt)
-        self._cache_commit(df, table, part_cols, cur, nxt)
-        return nxt
+        if cur is None:
+            return self._commit(df, table, part_cols, cluster)
+        err = self._layout_error(table, cur, part_cols)
+        if err:
+            raise ValueError(
+                f"table {table!r} v={cur}: {err} — layout mismatch; rewrite it with "
+                "write(..., partition_by=[...]) before using partition-delta writes"
+            )
+        return self._commit(df, table, part_cols, cluster, touched_values)
 
     def delete_partitions(
         self, table: str, partition_col: str | list[str], values: list
@@ -622,15 +624,11 @@ class VersionedParquetStore:
         per-file open/footer costs. Written as a fresh version (snapshot
         isolation preserved).
 
-        PARTITIONED tables keep their layout (r13 review): the earlier
-        plain ``repartition(n)`` rewrite silently FLATTENED a partitioned
-        table — directory pruning gone, and the next
-        ``write_partition_delta`` refused the layout. Now the partition
-        columns are derived from the directory structure and the rewrite
-        clusters on them (one write task per partition value), so each
-        partition dir coalesces to one file and the layout — pruning,
-        delta writes, retention — survives compaction. Unpartitioned
-        tables keep the size-targeted file count.
+        PARTITIONED tables keep their layout (r13 review: a plain
+        ``repartition(n)`` flattened them, losing pruning and delta writes):
+        the partition columns come from the directory structure and the
+        rewrite clusters on them, one file per partition dir. Unpartitioned
+        tables get the size-targeted file count.
         """
         import math
 
@@ -639,8 +637,7 @@ class VersionedParquetStore:
             raise FileNotFoundError(f"table {table} does not exist")
         part_cols = self.partition_cols_of(table)
         if part_cols:
-            df = self.read(table).repartition(*[F.col(c) for c in part_cols])
-            return self.write(df, table, partition_by=part_cols)
+            return self.write(self.read(table), table, partition_by=part_cols)
         path = self._version_path(table, cur)
         total = sum(
             os.path.getsize(os.path.join(root, f))

@@ -210,15 +210,39 @@ def test_transformed_merge_result_falls_back(spark, store, tmp_path):
     assert store.read("t").filter("id = 35").count() == 0
 
 
-def test_unpartitioned_current_version_falls_back(spark, tmp_path):
-    s = VersionedParquetStore(spark, str(tmp_path / "flat"))
-    s.write(_updates(spark, [(1, "a", 1.0, 1), (2, "b", 2.0, 2)]), "t")
-    merged = scd1_merge(s.read("t"), _updates(spark, [(1, "x", 9.0, 1)]), ["id"],
-                        partition_col="part")
+# layout of v1 -> (partition cols a commit declares, the refusal's message)
+LAYOUTS = {
+    "unpartitioned": ([], ["part"], "not partitioned by"),
+    "other-column": (["name"], ["part"], "not partitioned by"),
+    "one-level-on-two": (["part", "name"], ["part"], "nests deeper"),
+    "two-levels-on-one": (["part"], ["part", "name"], "nesting does not match"),
+}
+
+
+@pytest.mark.parametrize("layout", sorted(LAYOUTS))
+def test_mismatched_layout_refuses_delta_and_carry(spark, tmp_path, layout):
+    """One layout rule, two callers. On a current version not laid out as
+    the declared partition columns, ``write_partition_delta`` raises and
+    writes no version, and a pruned merge result is rewritten in full: no
+    partition hard-linked, the rows a forced full write commits."""
+    written, declared, message = LAYOUTS[layout]
+    s = VersionedParquetStore(spark, str(tmp_path / "s"))
+    s.write(_updates(spark, [(1, "a", 1.0, 1), (2, "b", 2.0, 2)]), "t",
+            partition_by=written)
+    upd = _updates(spark, [(1, "x", 9.0, 1)])
+    with pytest.raises(ValueError, match=message):
+        s.write_partition_delta(upd, "t", declared, [1])
+    assert s.current_version("t") == 1
+    assert not os.path.exists(s._version_path("t", 2))
+
+    merged = scd1_merge(s.read("t"), upd, ["id"], partition_col="part")
     assert isinstance(merged, MergeResult)
-    v = s.write(merged, "t", partition_by=["part"])
-    assert _parts(s, "t", v) == ["part=1", "part=2"]
-    assert _rows(s.read("t")) == [(1, "x", 9.0, 1), (2, "b", 2.0, 2)]
+    ref = VersionedParquetStore(spark, str(tmp_path / "ref"))
+    ref.write(merged.select("*"), "t", partition_by=declared)
+    v = s.write(merged, "t", partition_by=declared)
+    assert v == 2
+    assert _linked(s, "t", v) == set()
+    assert _rows(s.read("t")) == _rows(ref.read("t")) == [(1, "x", 9.0, 1), (2, "b", 2.0, 2)]
 
 
 def test_zero_padded_partition_dirs_fall_back(spark, tmp_path):

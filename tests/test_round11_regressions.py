@@ -4,9 +4,8 @@
   multi-byte UTF-8 value escaped byte-wise must round-trip, not mojibake
   through per-byte ``chr()``.
 - write_partition_delta: the prior version's FULL nesting must match the
-  declared partition cols — a single-level table hit with a two-level
-  delta (or the reverse) refuses loudly instead of writing a mixed
-  layout that only fails at a later read.
+  declared partition cols (tested with the other layout mismatches in
+  test_merge_commit.py::test_mismatched_layout_refuses_delta_and_carry).
 - bpe_train: an exception between distributed rounds must release BOTH
   live persists (the round intermediate and the base vocab).
 - IvfIndex.append: persists its Arrow-assigned batch across the two
@@ -16,7 +15,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.plans.tablestore import (
     VersionedParquetStore,
@@ -43,33 +41,6 @@ def test_partition_values_roundtrips_nonascii_and_specials(spark, tmp_path):
     )
     store.write(df, "t", partition_by=["k"])
     assert set(store.partition_values("t", "k")) == {"é=x", "plain"}
-
-
-def test_delta_refuses_two_level_cols_on_single_level_table(spark, tmp_path):
-    store = VersionedParquetStore(spark, str(tmp_path / "mixed1"))
-    df = spark.createDataFrame(
-        [(1, 0, 0), (2, 1, 1)], "id int, b int, c int"
-    )
-    store.write(df, "t", partition_by=["b"])
-    with pytest.raises(ValueError, match="nesting does not match"):
-        store.write_partition_delta(
-            df.filter(F.col("b") == 0), "t", ["b", "c"], [0]
-        )
-    # no new version was written
-    assert store.current_version("t") == 1
-
-
-def test_delta_refuses_single_level_cols_on_two_level_table(spark, tmp_path):
-    store = VersionedParquetStore(spark, str(tmp_path / "mixed2"))
-    df = spark.createDataFrame(
-        [(1, 0, 0), (2, 1, 1)], "id int, b int, c int"
-    )
-    store.write(df, "t", partition_by=["b", "c"])
-    with pytest.raises(ValueError, match="nests deeper"):
-        store.write_partition_delta(
-            df.filter(F.col("b") == 0), "t", "b", [0]
-        )
-    assert store.current_version("t") == 1
 
 
 def test_bpe_train_releases_persists_on_midround_failure(spark, monkeypatch):
