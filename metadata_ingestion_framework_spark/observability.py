@@ -10,8 +10,9 @@ Status and fact rows are a handful per call, so they are built on the
 driver and written with pyarrow as one small parquet file per call: no
 Spark job. A Spark append would cost a job and several files for each such
 row, on the blocking path of every batch. Each file is written under a
-hidden name (``.<name>.tmp``, which Spark's reader skips) and moved into
-place with ``os.replace``, so a reader never sees a partial file. That
+hidden name (``.<name>.tmp``, which Spark's reader skips), fsync'd and
+moved into place with ``os.replace``, so neither a reader nor a restart
+after a host crash sees a partial file. That
 assumes ``root`` is a local (POSIX) path, as ``VersionedParquetStore``'s
 pointer swap does; on an object store use a conditional put. Error rows
 are data-sized and stay a Spark append.
@@ -68,13 +69,18 @@ class ObservabilityStore:
     root: str
 
     def _write_rows(self, name: str, rows: list[tuple], schema: pa.Schema) -> None:
-        """Land driver-side rows as one parquet file, atomically."""
+        """Land driver-side rows as one parquet file, atomically: write a
+        hidden temp file, fsync it, then rename it into place (the
+        ``_atomic_write`` order), so a crash leaves no renamed torn file."""
         table = pa.table([list(col) for col in zip(*rows)], schema=schema)
         d = os.path.join(self.root, name)
         os.makedirs(d, exist_ok=True)
         fname = f"part-{uuid.uuid4().hex}.parquet"
         tmp = os.path.join(d, f".{fname}.tmp")
-        pq.write_table(table, tmp)
+        with open(tmp, "wb") as f:
+            pq.write_table(table, f)
+            f.flush()
+            os.fsync(f.fileno())
         os.replace(tmp, os.path.join(d, fname))
 
     def _read(self, name: str, schema: str) -> DataFrame:

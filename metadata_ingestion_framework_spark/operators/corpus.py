@@ -38,6 +38,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.operators.dedup import carry_deps
+from metadata_ingestion_framework_spark.operators.incremental import (
+    _check_store_config,
+    _upsert_touched,
+    range_bucket_expr,
+)
+from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
 from metadata_ingestion_framework_spark.plans.tablestore import (
     RunLedger,
     VersionedParquetStore,
@@ -280,7 +286,9 @@ class CorpusShardStore(RunLedger):
     - ``members``: the skinny (member_bucket, id, shard) sidecar,
       id-range bucketed (``range_bucket_expr`` — the CLAUDE.md rule:
       id-range buckets on every store table) so the vacate probe reads
-      ONLY the batch ids' buckets, never the corpus. Vectors-not-bands
+      ONLY the batch ids' buckets, never the corpus, and the append
+      commits it through the store family's touched-bucket upsert
+      (``incremental._upsert_touched``). Vectors-not-bands
       class state: a re-ingested id MUST vacate (shard rows are served
       directly), so the touched set always includes the old shards.
     - ``manifest``: (shard, n_docs, n_tokens, checksum) — recomputed
@@ -316,10 +324,6 @@ class CorpusShardStore(RunLedger):
     ):
         import os
 
-        from metadata_ingestion_framework_spark.operators.incremental import (
-            _check_store_config,
-        )
-
         self.spark = spark
         self.id_col = id_col
         self.text_col = text_col
@@ -345,10 +349,6 @@ class CorpusShardStore(RunLedger):
         )
 
     def _member_bucket(self, df: DataFrame):
-        from metadata_ingestion_framework_spark.operators.incremental import (
-            range_bucket_expr,
-        )
-
         return range_bucket_expr(
             df, self.id_col, self.member_bucket_width, self.n_buckets
         )
@@ -449,7 +449,7 @@ class CorpusShardStore(RunLedger):
 
             # vacate probe: ONLY the batch ids' member buckets are read
             # (bounded by the batch), never the corpus scan
-            old_pairs = None
+            old_pairs = bucket_vals = None
             if self.store.exists(self.MEMBERS):
                 batch_ids = assigned.select(self.id_col)
                 bucket_vals = [
@@ -459,9 +459,8 @@ class CorpusShardStore(RunLedger):
                     ).distinct().collect()
                 ]
                 old_pairs = (
-                    self.store.read_partitions(
-                        self.MEMBERS, "member_bucket", bucket_vals
-                    )
+                    self.store.read(self.MEMBERS)
+                    .filter(partition_in_filter(bucket_vals, "member_bucket", None))
                     .join(F.broadcast(batch_ids), self.id_col, "left_semi")
                     .select(self.id_col, "shard")
                 )
@@ -521,36 +520,17 @@ class CorpusShardStore(RunLedger):
                 manifest = recomputed
             self.store.write(manifest, self.MANIFEST)
 
-            # members delta: batch ids' buckets only — old rows of
-            # re-ingested ids vacate, the batch's fresh rows land
-            new_members = assigned.select(
-                self._member_bucket(assigned).alias("member_bucket"),
-                self.id_col,
-                "shard",
-            )
-            if self.store.exists(self.MEMBERS):
-                member_buckets = [
-                    r.member_bucket
-                    for r in new_members.select("member_bucket")
-                    .distinct().collect()
-                ]
-                old_members = self.store.read_partitions(
-                    self.MEMBERS, "member_bucket", member_buckets
-                ).join(
-                    F.broadcast(assigned.select(self.id_col)),
+            # members upsert: batch ids' buckets only (the probe's) — old
+            # rows of re-ingested ids vacate, the batch's fresh rows land
+            _upsert_touched(
+                self.store, self.MEMBERS,
+                assigned.select(
+                    self._member_bucket(assigned).alias("member_bucket"),
                     self.id_col,
-                    "left_anti",
-                )
-                self.store.write_partition_delta(
-                    old_members.unionByName(new_members),
-                    self.MEMBERS,
-                    ["member_bucket"],
-                    member_buckets,
-                )
-            else:
-                self.store.write(
-                    new_members, self.MEMBERS, partition_by=["member_bucket"]
-                )
+                    "shard",
+                ),
+                self.id_col, "member_bucket", touched=bucket_vals,
+            )
 
             # epochs row LAST among the tables (base derivation), ledger
             # after everything — a crash anywhere replays idempotently

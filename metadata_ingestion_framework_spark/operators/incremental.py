@@ -27,9 +27,14 @@ Scale shape: the batch side pays the Python signature kernel (cost
 tracks BATCH size — the corpus is never re-signatured); the store side
 is a columnar band-key equi-join, pruned to the batch's band-hash
 buckets (the bands table is partitioned by ``pmod(band_hash, n_buckets)``,
-so a small batch's scan skips most partitions — same manual-DPP shape as
-``operators/joins.py::build_partition_pruning_filter``). Transitive
-cluster resolution composes downstream: feed the emitted pairs to
+so a small batch's scan skips most partitions). Every store table in
+this module (and the corpus, IVF and BM25 stores beside it) commits a
+batch through one touched-bucket upsert, :func:`_upsert_touched`: it
+rewrites only the partitions the batch touched, picked with the
+NULL-safe ``operators/joins.py::partition_in_filter``, and hard-links
+the rest — the reference's manual partition pruning
+(Utility.scala:339-348). Transitive cluster resolution composes
+downstream: feed the emitted pairs to
 ``operators/cluster.py::connected_components``.
 """
 
@@ -46,7 +51,9 @@ from metadata_ingestion_framework_spark.operators.dedup import (
     minhash_bands,
     minhash_signatures,
 )
+from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
 from metadata_ingestion_framework_spark.operators.merge import dedup_window, scd1_merge
+from metadata_ingestion_framework_spark.operators.retrieval import merge_postings
 from metadata_ingestion_framework_spark.plans.tablestore import (
     RunLedger,
     VersionedParquetStore,
@@ -171,6 +178,52 @@ def _retire_range_ids_below(
             kept_boundary, table, part_cols, [boundary]
         )
     return bool(below or boundary_retired)
+
+
+def _upsert_touched(
+    store: VersionedParquetStore,
+    table: str,
+    rows: DataFrame,
+    id_col: str,
+    part_cols,
+    touched: list | None = None,
+    batch: DataFrame | None = None,
+) -> list:
+    """Commit a batch into the partitions its ids live in: the one
+    touched-bucket upsert every store table shares, the Delta-MERGE
+    touched-files-only rewrite (Utility.scala:339-348) at top-level
+    partition granularity.
+
+    ``batch`` (default ``rows``) names the upsert. Its distinct values of
+    the first of ``part_cols`` are the touched set (NULL as None) unless
+    ``touched`` is given, and every old row whose id it carries is
+    dropped (``merge_postings``). The new version holds the touched
+    partitions' other old rows plus ``rows``; ``write_partition_delta``
+    hard-links every other partition. A table that does not exist yet is
+    a plain ``write`` of ``rows``.
+
+    Old rows come from the cached ``read`` filtered by
+    ``partition_in_filter``: no schema-inference job, and the column
+    types hold when the NULL partition is the only one touched. NULL ids
+    are not an identity: the anti-join never matches them, so a NULL-id
+    row lands beside the stored ones. SCD1 tables dedup ``rows`` first
+    (``scd1_merge(None, ...)``) and pass the undeduped frame as
+    ``batch``, so the touched collect does not run the dedup shuffle.
+
+    Returns the touched values; for a new table, the written layout's
+    (``partition_values``: no Spark job, values as strings)."""
+    cols = [part_cols] if isinstance(part_cols, str) else list(part_cols)
+    batch = rows if batch is None else batch
+    if not store.exists(table):
+        store.write(rows, table, partition_by=cols)
+        return store.partition_values(table, cols[0])
+    if touched is None:
+        touched = [r[0] for r in batch.select(cols[0]).distinct().collect()]
+    old = store.read(table).filter(partition_in_filter(touched, cols[0], None))
+    store.write_partition_delta(
+        merge_postings(old, rows, batch, id_col), table, cols, touched
+    )
+    return touched
 
 
 def _emit_ingest_facts(
@@ -355,9 +408,9 @@ class MinhashSignatureStore(RunLedger):
       ever seen, partitioned by ``sig_bucket``, a pure function of the
       ID (so a row NEVER moves buckets and no ghost can form): numeric
       ids use RANGE buckets ``floor(id / sig_bucket_width)``, string ids
-      fall back to ``pmod(xxhash64(id), n_buckets)``. Each ingest merges
+      fall back to ``pmod(xxhash64(id), n_buckets)``. Each ingest upserts
       and physically rewrites only the batch's own sig buckets
-      (``write_partition_delta`` hard-links the rest) — r8's one
+      (:func:`_upsert_touched` hard-links the rest) — r8's one
       remaining store-size-proportional write (the full sigs snapshot
       per ingest) is gone (VERDICT r8 item 1). Range buckets matter:
       hash buckets spread any batch bigger than ``n_buckets`` across
@@ -473,7 +526,7 @@ class MinhashSignatureStore(RunLedger):
     def write_sigs_snapshot(self, sigs: DataFrame) -> int:
         """Full sigs-table write in the store's canonical layout
         (sig_bucket-partitioned) — the bootstrap/seed path; incremental
-        ingests go through ``write_partition_delta`` instead."""
+        ingests go through :func:`_upsert_touched` instead."""
         return self.store.write(
             self._with_sig_bucket(sigs), self.SIGS, partition_by=["sig_bucket"]
         )
@@ -581,93 +634,45 @@ class MinhashSignatureStore(RunLedger):
             survivors = batch.join(F.broadcast(drops), self.id_col, "left_anti")
             survivors._persisted_deps = [drops]
 
-            # durable state: SCD1-merge ALL batch signatures (dropped docs
+            # durable state: SCD1-upsert ALL batch signatures (dropped docs
             # included — see module docstring) and their band rows. The sigs
             # table is partitioned by sig_bucket = f(id) (r9, VERDICT r8 item
-            # 1): only the batch ids' own buckets are merged and physically
-            # rewritten; the other ~n_buckets-k directories carry by hard link,
-            # so the per-ingest write cost tracks the BATCH, not the store.
-            # Unlike the band table there is no ghost caveat: the bucket is a
-            # pure function of the id, so a re-ingested row lands exactly on
-            # top of its old partition.
+            # 1): only the batch ids' own buckets are rewritten, so the
+            # per-ingest write cost tracks the BATCH, not the store, and a
+            # re-ingested row lands exactly on top of its old partition.
             sigs_new_b = self._with_sig_bucket(sigs_new)
-            if not self.store.exists(self.SIGS):
-                self.write_sigs_snapshot(scd1_merge(None, sigs_new, [self.id_col]))
+            sig_buckets = _upsert_touched(
+                self.store, self.SIGS,
+                scd1_merge(None, sigs_new_b, [self.id_col]),
+                self.id_col, "sig_bucket", batch=sigs_new_b,
+            )
+            if self.store.exists(self.BANDS):
+                # band upsert on the batch's own band-hash buckets (r8).
+                # Caveat, exactly like Delta tombstones: if a RE-INGESTED
+                # doc's new text moves a band to a different bucket, its old
+                # band row survives in the untouched bucket as a GHOST.
+                # Ghost rows are harmless to results — band rows only
+                # GENERATE candidates and verification always scores
+                # against the (globally SCD1-fresh) sigs table — and
+                # ``rebuild_bands`` reaps them. Every old row of a batch id
+                # in the touched buckets goes (ADVICE r8: a merge on
+                # (id, band) alone would keep a ghost beside the current
+                # row), so a re-ingest reaps its own ghosts there.
+                _upsert_touched(
+                    self.store, self.BANDS,
+                    scd1_merge(None, new_bands, [self.id_col, "band"]),
+                    self.id_col, "bucket",
+                    touched=batch_buckets, batch=new_bands,
+                )
+            elif had_sigs:
+                # heal path (r11 review): SIGS pre-existed but BANDS was
+                # missing (first-ingest crash between the two writes) —
+                # writing only the BATCH's bands would leave every stored
+                # sig bandless forever; rebuild from the (now merged)
+                # sigs table instead.
+                self.rebuild_bands()
             else:
-                # NULL-safe bucket match (r11 review, mirroring the embedding
-                # twin): a plain isin never matches a stored NULL-bucket row,
-                # but the touched list maps None to the hive default dir —
-                # that directory would be rewritten WITHOUT its old rows
-                sig_bucket_set = {
-                    r.sig_bucket
-                    for r in sigs_new_b.select("sig_bucket").distinct().collect()
-                }
-                sig_buckets = sorted(
-                    (v for v in sig_bucket_set if v is not None), key=str
-                ) + ([None] if None in sig_bucket_set else [])
-                bucket_match = F.col("sig_bucket").isin(
-                    [v for v in sig_buckets if v is not None]
-                )
-                if None in sig_bucket_set:
-                    bucket_match = bucket_match | F.col("sig_bucket").isNull()
-                # anti-join the batch ids out (their rows are replaced wholesale
-                # — pure-insert merge, and replay-safe like the band path)
-                old_touched_sigs = (
-                    self.store.read(self.SIGS)
-                    .filter(bucket_match)
-                    .join(sigs_new.select(self.id_col), self.id_col, "left_anti")
-                )
-                merged_sigs = scd1_merge(old_touched_sigs, sigs_new_b, [self.id_col])
-                self.store.write_partition_delta(
-                    merged_sigs, self.SIGS, "sig_bucket", sig_buckets
-                )
-            if not self.store.exists(self.BANDS):
-                if had_sigs:
-                    # heal path (r11 review): SIGS pre-existed but BANDS was
-                    # missing (first-ingest crash between the two writes) —
-                    # writing only the BATCH's bands would leave every stored
-                    # sig bandless forever; rebuild from the (now merged)
-                    # sigs table instead.
-                    self.rebuild_bands()
-                else:
-                    self.store.write(
-                        new_bands, self.BANDS, partition_by=["bucket"]
-                    )
-            else:
-                # PARTITION-DELTA band update (r8): only the batch's own buckets
-                # can change, so merge and physically rewrite just those
-                # partitions; the other ~n_buckets-2 directories carry over by
-                # hard link (write_partition_delta) — the Delta-MERGE
-                # touched-files-only rewrite, without Delta. Caveat, exactly
-                # like Delta tombstones: if a RE-INGESTED doc's new text moves
-                # a band to a different bucket, its old band row survives in
-                # the untouched bucket as a GHOST. Ghost rows are harmless to
-                # results — band rows only GENERATE candidates and the old
-                # hash can only pair with docs matching the old band value;
-                # verification always scores against the (globally SCD1-fresh)
-                # sigs table — and ``rebuild_bands`` reaps them (the band
-                # table is a pure function of sigs).
-                touched = batch_buckets
-                # Anti-join the batch's ids OUT of the old touched rows instead
-                # of relying on the (id, band) merge keys alone: a re-ingested
-                # id can present TWO old rows per (id, band) — its current row
-                # plus a ghost from an earlier partition-delta write — and a
-                # full-outer merge would update both, persisting duplicate
-                # identical band rows until rebuild_bands (ADVICE r8). Dropping
-                # every old row of a batch id makes the merge pure-insert for
-                # those keys: exactly the fresh band rows survive, and a
-                # re-ingest REAPS its own prior ghosts in the touched buckets.
-                old_touched = (
-                    self.store.read(self.BANDS)
-                    .filter(F.col("bucket").isin(touched))
-                    .join(sigs_new.select(self.id_col), self.id_col, "left_anti")
-                )
-                merged_touched = scd1_merge(
-                    old_touched, new_bands, [self.id_col, "band"]
-                )
-                self.store.write_partition_delta(
-                    merged_touched, self.BANDS, "bucket", touched
-                )
+                self.store.write(new_bands, self.BANDS, partition_by=["bucket"])
             self._record_run(run_id)
             # facts AFTER the ledger record (best-effort telemetry —
             # the crash-replay never double-counts a run). n_batch is
@@ -686,8 +691,7 @@ class MinhashSignatureStore(RunLedger):
                     else batch.count(),
                     dropped={"text": drops.count()},
                     buckets={
-                        "sigs": sigs_new_b.select("sig_bucket")
-                        .distinct().count(),
+                        "sigs": len(sig_buckets),
                         "bands": len(batch_buckets),
                     },
                 )
@@ -826,12 +830,12 @@ class EmbeddingDedupStore(RunLedger):
       directory-prunes to its own cells (``tests/test_layout_pruning.py``).
       Two scale properties fall out:
 
-      * ingest's partition-delta touched set is simply the BATCH IDS'
-        range buckets — a moved vector (re-ingest with a new embedding /
-        new cell) vacates its old cell automatically because its whole
-        bucket is rewritten from the merged rows (r8's moved-cell union
-        collect is gone), and monotone ingest ids keep the write O(batch)
-        at any store size;
+      * ingest's upsert (:func:`_upsert_touched`) touches simply the
+        BATCH IDS' range buckets — a moved vector (re-ingest with a new
+        embedding / new cell) vacates its old cell automatically because
+        its whole bucket is rewritten from the upserted rows (r8's
+        moved-cell union collect is gone), and monotone ingest ids keep
+        the write O(batch) at any store size;
       * retention (``retire_ids_below``) drops whole buckets below the
         cutoff with ZERO bytes rewritten — critical here because stale
         VECTORS are scored directly (unlike minhash bands, a ghost would
@@ -944,27 +948,23 @@ class EmbeddingDedupStore(RunLedger):
         # in a long-lived foreachBatch session
         drops = None
         try:
-            store_pruned = store_all = None
+            store_pruned = None
             if self.store.exists(self.VECS):
                 batch_ids = assigned.select(self.id_col)
-                batch_cell_set = {
+                batch_cells = [
                     r.cell for r in assigned.select("cell").distinct().collect()
-                }
-                store_all = self.store.read(self.VECS)
+                ]
                 # cell prune (directory-level on the partitioned layout) +
                 # replay safety (a re-delivered batch must not collide with
                 # its own stored copy). NULL-safe (r11 review): an
-                # unassignable vector's NULL cell never matches a plain isin,
-                # so a stored NULL-cell near-dup would silently survive —
-                # diverging from the full-rerun equivalence (intra-batch
-                # groupBy("cell") DOES group NULLs together)
-                cell_match = F.col("cell").isin(
-                    [c for c in batch_cell_set if c is not None]
-                )
-                if None in batch_cell_set:
-                    cell_match = cell_match | F.col("cell").isNull()
-                store_pruned = store_all.filter(cell_match).join(
-                    batch_ids, self.id_col, "left_anti"
+                # unassignable vector's NULL cell must meet stored NULL-cell
+                # near-dups, or they would silently survive — diverging from
+                # the full-rerun equivalence (intra-batch groupBy("cell")
+                # DOES group NULLs together)
+                store_pruned = (
+                    self.store.read(self.VECS)
+                    .filter(partition_in_filter(batch_cells, "cell", None))
+                    .join(batch_ids, self.id_col, "left_anti")
                 )
             # persist(), NOT localCheckpoint (CLAUDE.md releasable-state rule,
             # r11 review): the caller releases via unpersist_deps(survivors)
@@ -974,40 +974,21 @@ class EmbeddingDedupStore(RunLedger):
             drops.count()  # materialize while assigned is still cached
             survivors = batch.join(F.broadcast(drops), self.id_col, "left_anti")
             survivors._persisted_deps = [drops]
-            if store_all is None:
-                self.store.write(
-                    scd1_merge(None, assigned, [self.id_col]),
-                    self.VECS,
-                    partition_by=["vec_bucket", "cell"],
-                )
-            else:
-                # PARTITION-DELTA vector upsert (r8; r10 layout): unlike band
-                # rows, stale VECTORS are not candidates-only — drops score
-                # directly against stored embeddings, so a ghost would be a
-                # correctness bug. With the id-range top level the touched set
-                # is simply the BATCH IDS' buckets: a re-ingested id's old row
-                # lives in the SAME bucket (bucket is a pure function of the
-                # id), so rewriting those buckets from the merged rows both
-                # upserts the new embedding and vacates the old cell subdir —
-                # no moved-cell lookup, no ghost, and monotone ingest ids keep
-                # the write O(batch) at any store size.
-                touched_set = {
-                    r.vec_bucket
-                    for r in assigned.select("vec_bucket").distinct().collect()
-                }
-                touched = sorted(
-                    (v for v in touched_set if v is not None), key=str
-                ) + ([None] if None in touched_set else [])
-                bucket_match = F.col("vec_bucket").isin(
-                    [v for v in touched if v is not None]
-                )
-                if None in touched_set:
-                    bucket_match = bucket_match | F.col("vec_bucket").isNull()
-                old_touched = store_all.filter(bucket_match)
-                merged_touched = scd1_merge(old_touched, assigned, [self.id_col])
-                self.store.write_partition_delta(
-                    merged_touched, self.VECS, ["vec_bucket", "cell"], touched
-                )
+            # vector upsert (r8; r10 layout): unlike band rows, stale
+            # VECTORS are not candidates-only — drops score directly
+            # against stored embeddings, so a ghost would be a correctness
+            # bug. With the id-range top level the touched set is simply
+            # the BATCH IDS' buckets: a re-ingested id's old row lives in
+            # the SAME bucket (bucket is a pure function of the id), so
+            # rewriting those buckets both upserts the new embedding and
+            # vacates the old cell subdir — no moved-cell lookup, no ghost,
+            # and monotone ingest ids keep the write O(batch) at any store
+            # size.
+            vec_buckets = _upsert_touched(
+                self.store, self.VECS,
+                scd1_merge(None, assigned, [self.id_col]),
+                self.id_col, ["vec_bucket", "cell"], batch=assigned,
+            )
             self._record_run(run_id)
             # facts AFTER the ledger record (best-effort telemetry —
             # the crash-replay never double-counts a run); n_batch is
@@ -1020,10 +1001,7 @@ class EmbeddingDedupStore(RunLedger):
                     n_batch=n_batch if n_batch is not None
                     else batch.count(),
                     dropped={"embedding": drops.count()},
-                    buckets={
-                        "vecs": assigned.select("vec_bucket")
-                        .distinct().count(),
-                    },
+                    buckets={"vecs": len(vec_buckets)},
                 )
             return survivors
         except BaseException:
@@ -1372,11 +1350,11 @@ class ImageHashStore(RunLedger):
 
     - ``fps``: (id, dhash, ahash, fp_bucket), partitioned by the
       id-RANGE ``fp_bucket`` (the shared store-family key): ingest's
-      partition-delta touched set is the batch ids' buckets (re-ingested
-      ids land home and their old fingerprints vacate in the rewrite),
-      retention is a zero-rewrite bucket drop. Stored fingerprints are
-      the VERIFY source, so ghosts here would be correctness bugs —
-      which the id-range vacate rules out.
+      upsert (:func:`_upsert_touched`) touches the batch ids' buckets
+      (re-ingested ids land home and their old fingerprints vacate in the
+      rewrite), retention is a zero-rewrite bucket drop. Stored
+      fingerprints are the VERIFY source, so ghosts here would be
+      correctness bugs — which the id-range vacate rules out.
     - ``bands``: (id, blk, blk_val, fp_bucket, bucket) exploded 16-bit
       blocks, partitioned (fp_bucket, bucket) — id-RANGE delta
       granularity on top (r14: a band-hash-keyed delta full-rewrote the
@@ -1585,23 +1563,19 @@ class ImageHashStore(RunLedger):
 
     def _store_sides(
         self, fps: DataFrame, new_bands: DataFrame
-    ) -> tuple[DataFrame | None, DataFrame | None, DataFrame | None, list]:
+    ) -> tuple[DataFrame | None, DataFrame | None, list]:
         """The pruned store-side frames the ingest drop join consumes
         (r16, factored out so :class:`CrossModalPairStore` runs the
-        IDENTICAL pruning): ``(store_all, store_fps, store_bands,
-        batch_buckets)`` — the unfiltered fingerprint table (r17 ADVICE:
-        the SCD1 merge reuses this frame instead of issuing a second
-        ``store.read``), store fingerprints minus the batch's own ids
-        (replay safety), the band table directory-pruned to the batch's
-        own band buckets (the list is also the band write's
-        partition-delta touched set), and ``store_bands`` None when the
-        table is absent (the first-ingest-crash heal path derives bands
-        in-plan)."""
+        IDENTICAL pruning): ``(store_fps, store_bands, batch_buckets)``
+        — store fingerprints minus the batch's own ids (replay safety),
+        the band table directory-pruned to the batch's own band buckets
+        (the ``ingest.buckets_touched.bands`` fact), and ``store_bands``
+        None when the table is absent (the first-ingest-crash heal path
+        derives bands in-plan)."""
         if not self.store.exists(self.FPS):
-            return None, None, None, []
+            return None, None, []
         batch_ids = fps.select(self.id_col)
-        store_all = self.store.read(self.FPS)
-        store_fps = store_all.join(
+        store_fps = self.store.read(self.FPS).join(
             batch_ids, self.id_col, "left_anti"
         )
         batch_buckets = [
@@ -1615,7 +1589,7 @@ class ImageHashStore(RunLedger):
                 .filter(F.col("bucket").isin(batch_buckets))
                 .join(batch_ids, self.id_col, "left_anti")
             )
-        return store_all, store_fps, store_bands, batch_buckets
+        return store_fps, store_bands, batch_buckets
 
     def ingest(
         self,
@@ -1656,11 +1630,8 @@ class ImageHashStore(RunLedger):
         # success it is handed out live via ``_persisted_deps``.
         try:
             new_bands = self._band_rows(fps)
-            # store_all rides out of _store_sides (r17 ADVICE): the SCD1
-            # merge below reuses the same resolved-version scan instead
-            # of a second store.read(self.FPS)
-            store_all, store_fps, store_bands, batch_buckets = (
-                self._store_sides(fps, new_bands)
+            store_fps, store_bands, batch_buckets = self._store_sides(
+                fps, new_bands
             )
             if drops is None:
                 if self.frames:
@@ -1681,80 +1652,35 @@ class ImageHashStore(RunLedger):
                 F.broadcast(drops), self.id_col, "left_anti"
             )
             survivors._persisted_deps = [drops]
-            if store_all is None:
-                self.store.write(
-                    # frames face: one row per (id, frame_ts) — an SCD1
-                    # keyed on id would collapse a video to one frame
-                    fps if self.frames
-                    else scd1_merge(None, fps, [self.id_col]),
-                    self.FPS,
-                    partition_by=["fp_bucket"],
-                )
-                self.store.write(
-                    self._band_rows(self.store.read(self.FPS)),
-                    self.BANDS,
-                    partition_by=["fp_bucket", "bucket"],
+            # fingerprint upsert on the batch ids' RANGE buckets. Frames
+            # face: one row per (id, frame_ts) — an SCD1 keyed on id would
+            # collapse a video to one frame, and the upsert drops EVERY old
+            # frame row of a re-ingested id (the new cut may sample other
+            # frames).
+            fp_buckets = _upsert_touched(
+                self.store, self.FPS,
+                fps if self.frames else scd1_merge(None, fps, [self.id_col]),
+                self.id_col, "fp_bucket", batch=fps,
+            )
+            if store_fps is not None and self.store.exists(self.BANDS):
+                # band upsert on the same id-range buckets (r14): a
+                # band-hash-keyed delta degenerates to a full band-table
+                # rewrite the moment a batch spans more distinct
+                # (blk, blk_val) values than there are buckets (always,
+                # for a few hundred images) — the r9 minhash hash-bucket
+                # lesson, measured 10.3s of a 27.7s ingest at a 50k store.
+                # Re-ingested ids' old band rows vacate in the same rewrite
+                # (bands are exactly as fresh as fps; ghosts only arise
+                # from a crash between the two writes, which the heal path
+                # rebuilds).
+                _upsert_touched(
+                    self.store, self.BANDS, new_bands, self.id_col,
+                    ["fp_bucket", "bucket"], touched=fp_buckets,
                 )
             else:
-                touched_set = {
-                    r.fp_bucket
-                    for r in fps.select("fp_bucket").distinct().collect()
-                }
-                touched = sorted(
-                    (v for v in touched_set if v is not None), key=str
-                ) + ([None] if None in touched_set else [])
-                bucket_match = F.col("fp_bucket").isin(
-                    [v for v in touched if v is not None]
-                )
-                if None in touched_set:
-                    bucket_match = (
-                        bucket_match | F.col("fp_bucket").isNull()
-                    )
-                if self.frames:
-                    # vacate EVERY old frame row of re-ingested ids
-                    # (anti-join on the media id — the merge_postings
-                    # shape: an SCD1 on (id, frame) would leave stale
-                    # rows for frames the new cut no longer samples),
-                    # then the batch's frame rows take their place
-                    merged = store_all.filter(bucket_match).join(
-                        fps.select(self.id_col).distinct(),
-                        self.id_col, "left_anti",
-                    ).unionByName(fps)
-                else:
-                    merged = scd1_merge(
-                        store_all.filter(bucket_match), fps, [self.id_col]
-                    )
-                self.store.write_partition_delta(
-                    merged, self.FPS, ["fp_bucket"], touched
-                )
-                if self.store.exists(self.BANDS):
-                    # band delta on the batch ids' RANGE buckets (r14):
-                    # a band-hash-keyed delta degenerates to a full
-                    # band-table rewrite the moment a batch spans more
-                    # distinct (blk, blk_val) values than there are
-                    # buckets (always, for a few hundred images) — the
-                    # r9 minhash hash-bucket lesson, measured 10.3s of a
-                    # 27.7s ingest at a 50k store. With fp_bucket on top
-                    # the anti-join reads ONLY the touched id-range dirs
-                    # and re-ingested ids' old band rows vacate in the
-                    # same rewrite (bands are now exactly as fresh as
-                    # fps; ghosts only arise from a crash between the
-                    # two writes, which the heal path rebuilds).
-                    old_touched_bands = self.store.read(self.BANDS).filter(
-                        bucket_match
-                    ).join(fps.select(self.id_col), self.id_col, "left_anti")
-                    self.store.write_partition_delta(
-                        old_touched_bands.unionByName(new_bands),
-                        self.BANDS,
-                        ["fp_bucket", "bucket"],
-                        touched,
-                    )
-                else:
-                    self.store.write(
-                        self._band_rows(self.store.read(self.FPS)),
-                        self.BANDS,
-                        partition_by=["fp_bucket", "bucket"],
-                    )
+                # first ingest, or the heal path (BANDS missing beside
+                # stored fps): derive bands from the written fps table
+                self.rebuild_bands()
             self._record_run(run_id)
             # facts AFTER the ledger record (best-effort telemetry —
             # the crash-replay never double-counts a run). n_batch is
@@ -1773,7 +1699,7 @@ class ImageHashStore(RunLedger):
                         ("frames" if self.frames else "media"): drops.count()
                     },
                     buckets={
-                        "fps": fps.select("fp_bucket").distinct().count(),
+                        "fps": len(fp_buckets),
                         "bands": len(batch_buckets),
                     },
                 )
@@ -1899,7 +1825,7 @@ class ParagraphHashStore(RunLedger):
     (first-owner) row of every paragraph hash in the current corpus,
     partitioned by the id-RANGE bucket (pure function of the id —
     CLAUDE.md store-layout rule): a monotone-id ingest touches only its
-    own buckets (``write_partition_delta`` hard-links the rest), a
+    own buckets (:func:`_upsert_touched` hard-links the rest), a
     re-ingested doc's rows land exactly on top of its old partition so
     stale paragraphs VACATE (current-corpus semantics: the store mirrors
     the rewritten text of each doc's latest version), and retention is
@@ -2089,7 +2015,6 @@ class ParagraphHashStore(RunLedger):
         # convention): a failed store write must not pin paras_new/dups
         # in a long-lived foreachBatch session
         dups = None
-        n_touched = None
         try:
             batch_ids = batch.select(self.id_col).distinct()
             store_paras = None
@@ -2103,12 +2028,9 @@ class ParagraphHashStore(RunLedger):
                 elif not hit:
                     scan = None
                 else:
-                    match = F.col("par_bucket").isin(
-                        [v for v in hit if v is not None]
+                    scan = self.store.read(self.PARAS).filter(
+                        partition_in_filter(hit, "par_bucket", None)
                     )
-                    if None in hit:
-                        match = match | F.col("par_bucket").isNull()
-                    scan = self.store.read(self.PARAS).filter(match)
                 if scan is not None:
                     store_paras = scan.join(
                         batch_ids, self.id_col, "left_anti"
@@ -2141,105 +2063,62 @@ class ParagraphHashStore(RunLedger):
                     self.n_buckets,
                 ),
             )
-            if not self.store.exists(self.PARAS):
-                self.store.write(
-                    surviving, self.PARAS, partition_by=["par_bucket"]
-                )
-                if self.bloom_bits:
-                    # build the sidecar from the WRITTEN version — a columnar
-                    # read-back beats persisting the anti-join lineage, and
-                    # the sidecar is self-healingly derived from exactly
-                    # what a reader will scan
-                    self.store.write(
-                        self._bloom_words(self.store.read(self.PARAS)),
-                        self.BLOOM,
-                        partition_by=["par_bucket"],
-                    )
-            else:
-                # touched set from the BATCH ids (not the surviving rows): a
-                # re-ingested doc whose new text dedups away entirely must
-                # still vacate its OLD rows. NULL-safe bucket match (the
-                # minhash twin's rule): isin never matches a stored
-                # NULL-bucket row, but the touched list maps None to the
-                # hive default dir — rewritten WITHOUT its old rows otherwise.
-                bucketed = batch_ids.withColumn(
-                    "par_bucket",
-                    range_bucket_expr(
-                        batch_ids, self.id_col, self.par_bucket_width,
-                        self.n_buckets,
-                    ),
-                )
-                bucket_set = {
-                    r.par_bucket
-                    for r in bucketed.select("par_bucket").distinct().collect()
-                }
-                buckets = sorted(
-                    (v for v in bucket_set if v is not None), key=str
-                ) + ([None] if None in bucket_set else [])
-                n_touched = len(buckets)
-                match = F.col("par_bucket").isin(
-                    [v for v in buckets if v is not None]
-                )
-                if None in bucket_set:
-                    match = match | F.col("par_bucket").isNull()
-                old_touched = (
-                    self.store.read(self.PARAS)
-                    .filter(match)
-                    .join(batch_ids, self.id_col, "left_anti")
+            # touched set and vacated ids from the BATCH ids, not the
+            # surviving rows: a re-ingested doc whose new text dedups away
+            # entirely must still vacate its OLD rows
+            bucketed = batch_ids.withColumn(
+                "par_bucket",
+                range_bucket_expr(
+                    batch_ids, self.id_col, self.par_bucket_width,
+                    self.n_buckets,
+                ),
+            )
+            had_paras = self.store.exists(self.PARAS)
+            buckets = _upsert_touched(
+                self.store, self.PARAS, surviving, self.id_col,
+                "par_bucket", batch=bucketed,
+            )
+            if self.bloom_bits and had_paras and self.store.exists(self.BLOOM):
+                # rebuild touched blooms from the WRITTEN version's
+                # touched partitions (columnar read-back, partition-
+                # pruned): derived exactly from what a reader scans, so
+                # vacated rows' bits vanish with them — no stale bits
+                written = self.store.read(self.PARAS).filter(
+                    partition_in_filter(buckets, "par_bucket", None)
                 )
                 self.store.write_partition_delta(
-                    old_touched.unionByName(surviving),
-                    self.PARAS,
+                    self._bloom_words(written),
+                    self.BLOOM,
                     "par_bucket",
                     buckets,
                 )
-                if not self.bloom_bits:
-                    pass
-                elif self.store.exists(self.BLOOM):
-                    # rebuild touched blooms from the WRITTEN version's
-                    # touched partitions (columnar read-back, partition-
-                    # pruned): derived exactly from what a reader scans, so
-                    # vacated rows' bits vanish with them — no stale bits
-                    written = self.store.read(self.PARAS).filter(match)
-                    self.store.write_partition_delta(
-                        self._bloom_words(written),
-                        self.BLOOM,
-                        "par_bucket",
-                        buckets,
-                    )
-                else:
-                    # pre-sidecar store: one-time O(store) migration build
-                    # from the freshly written version; delta thereafter
-                    self.store.write(
-                        self._bloom_words(self.store.read(self.PARAS)),
-                        self.BLOOM,
-                        partition_by=["par_bucket"],
-                    )
+            elif self.bloom_bits:
+                # first write, or a pre-sidecar store: build the sidecar
+                # from the WRITTEN version (a columnar read-back beats
+                # persisting the anti-join lineage; the sidecar is
+                # self-healingly derived from exactly what a reader will
+                # scan), delta thereafter
+                self.store.write(
+                    self._bloom_words(self.store.read(self.PARAS)),
+                    self.BLOOM,
+                    partition_by=["par_bucket"],
+                )
             self._record_run(run_id)
             # facts AFTER the ledger record (best-effort telemetry —
             # the crash-replay never double-counts a run). The counts
             # are paragraph-grain (this store's decision unit); the
-            # touched-bucket fact is the BATCH IDS' bucket set — the
-            # buckets the delta physically rewrote — not the surviving
+            # touched-bucket fact is the buckets the write physically
+            # rewrote — the BATCH IDS' bucket set, not the surviving
             # rows' (a fully-deduped re-ingest still rewrites its
             # bucket, which is exactly the write amplification the
-            # metric watches).
+            # metric watches); on the first write, the written layout.
             if self.observability is not None:
-                if n_touched is None:  # first write: whole-table build
-                    n_touched = (
-                        batch_ids.select(
-                            range_bucket_expr(
-                                batch_ids, self.id_col,
-                                self.par_bucket_width, self.n_buckets,
-                            ).alias("__b")
-                        ).distinct().count()
-                    )
                 _emit_ingest_facts(
                     self,
                     run_id,
                     n_batch=paras_new.count(),
                     dropped={"paragraph": dups.count()},
-                    buckets={"paras": n_touched},
+                    buckets={"paras": len(buckets)},
                 )
             out._persisted_deps = [dups]
             return out
@@ -2453,7 +2332,7 @@ class CrossModalPairStore(RunLedger):
             # and the per-modality drop sets derived as the pairs' loser
             # columns so the sub-store merges consume them instead of
             # re-running the candidate+verify joins a second time.
-            _, store_fps, store_ibands, _ = self.img._store_sides(
+            store_fps, store_ibands, _ = self.img._store_sides(
                 fps, self.img._band_rows(fps)
             )
             ip = image_hash_batch_pairs(

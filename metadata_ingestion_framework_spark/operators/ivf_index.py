@@ -12,12 +12,13 @@ runs:
     cell inside is the SERVE granularity; partition pruning works on the
     second level just as well, and ``tests/test_layout_pruning.py``-style
     corrupted-unprobed-file evidence proves serving is file-level pruned);
-  - :meth:`IvfIndex.append` grows the index incrementally through
-    ``write_partition_delta`` on the batch ids' buckets — the
-    EmbeddingDedupStore machinery: a re-ingested id's old row lives in
-    the SAME bucket (bucket is a pure function of the id), so the bucket
-    rewrite both upserts the vector and vacates its old cell subdir, and
-    untouched buckets carry by hard link (ingest IO tracks the batch);
+  - :meth:`IvfIndex.append` grows the index incrementally through the
+    store family's touched-bucket upsert (``incremental._upsert_touched``)
+    on the batch ids' buckets — the EmbeddingDedupStore machinery: a
+    re-ingested id's old row lives in the SAME bucket (bucket is a pure
+    function of the id), so the bucket rewrite both upserts the vector and
+    vacates its old cell subdir, and untouched buckets carry by hard link
+    (ingest IO tracks the batch);
   - serving reads ONLY the probed cells: the per-query probe list is the
     shared :func:`~.similarity.probe_cell_order` expression, the store
     scan filters ``cell IN (<union of probed cells>)`` (directory
@@ -42,6 +43,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.functions.sampling import hash_key60
+from metadata_ingestion_framework_spark.operators.incremental import (
+    _retire_range_ids_below,
+    _upsert_touched,
+    range_bucket_expr,
+)
 from metadata_ingestion_framework_spark.operators.kmeans import kmeans_fit
 from metadata_ingestion_framework_spark.operators.merge import scd1_merge
 from metadata_ingestion_framework_spark.operators.similarity import (
@@ -322,10 +328,6 @@ class IvfIndex:
         pure function of the id (integral-`div` range for numeric ids,
         xxhash fallback for strings — the shared store-family helper,
         incremental.py::range_bucket_expr)."""
-        from metadata_ingestion_framework_spark.operators.incremental import (
-            range_bucket_expr,
-        )
-
         if self.codebooks is not None:
             # FUSED cell+codes kernel: one Arrow pass instead of two
             # (r12 second review — the chained form serialized every
@@ -361,28 +363,16 @@ class IvfIndex:
         if self.centroids is None:
             raise FileNotFoundError(f"index at {self.root} is not built")
         # persist: the Arrow ivf_assign kernel is consumed twice (the
-        # touched-bucket collect and the merge write) — CLAUDE.md self-join
+        # touched-bucket collect and the upsert write) — CLAUDE.md self-join
         # rule, same as EmbeddingDedupStore.ingest (ADVICE r10)
         assigned = self._with_cell_part(
             self._assign(batch, self.centroids)
         ).persist()
         try:
-            touched_set = {
-                r.vec_bucket
-                for r in assigned.select("vec_bucket").distinct().collect()
-            }
-            touched = sorted(
-                (v for v in touched_set if v is not None), key=str
-            ) + ([None] if None in touched_set else [])
-            # read_partitions (r15): append never reads the full table,
-            # and read()'s plan construction lists every partition dir —
-            # O(store); here discovery lists only the batch's buckets
-            old_touched = self.store.read_partitions(
-                self.VECS, "vec_bucket", touched
-            )
-            merged = scd1_merge(old_touched, assigned, [self.id_col])
-            self.store.write_partition_delta(
-                merged, self.VECS, self._part_cols(), touched
+            _upsert_touched(
+                self.store, self.VECS,
+                scd1_merge(None, assigned, [self.id_col]),
+                self.id_col, self._part_cols(), batch=assigned,
             )
         finally:
             assigned.unpersist()
@@ -399,10 +389,6 @@ class IvfIndex:
         stores use. Expiry is PHYSICAL: stored vectors are scored
         directly by ``topk``, the ghost-intolerant class. Numeric-id
         indexes only (string ids hash-bucket; no range expression)."""
-        from metadata_ingestion_framework_spark.operators.incremental import (
-            _retire_range_ids_below,
-        )
-
         _retire_range_ids_below(
             self.store, self.VECS, "vec_bucket", self.vec_bucket_width,
             self.id_col, cutoff_id, self._part_cols(),

@@ -89,13 +89,14 @@ def collect_partition_values(
 
 
 def partition_in_filter(
-    values: list, partition_col: str, target_alias: str = "target"
+    values: list, partition_col: str, target_alias: str | None = "target"
 ) -> Column:
-    """``target.<col> IN (values)``, NULL-aware: a None in ``values`` also
+    """``target.<col> IN (values)`` (unqualified ``<col>`` when
+    ``target_alias`` is None), NULL-aware: a None in ``values`` also
     selects the NULL partition."""
     has_null = any(v is None for v in values)
     non_null = [v for v in values if v is not None]
-    col = F.col(f"{target_alias}.{partition_col}")
+    col = F.col(partition_col if target_alias is None else f"{target_alias}.{partition_col}")
     cond = col.isin(non_null) if non_null else F.lit(False)
     if has_null:
         # NULL-partition updates can only match NULL-partition target rows:

@@ -36,6 +36,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
+from metadata_ingestion_framework_spark.operators.merge import scd1_merge
 from metadata_ingestion_framework_spark.operators.similarity import _topk
 
 
@@ -545,7 +547,9 @@ def merge_postings(
     """Upsert semantics for a multi-row-per-doc table: ALL of a
     re-ingested doc's old posting rows are dropped (anti-join on the doc
     id — an SCD1 on (doc, term) would leave stale rows for terms the new
-    text no longer contains) and the batch's rows take their place."""
+    text no longer contains) and the batch's rows take their place. The
+    remove-old-rows step of every store table's batch commit
+    (``incremental._upsert_touched``)."""
     return old_postings.join(
         batch_ids.select(id_col), id_col, "left_anti"
     ).unionByName(batch_postings)
@@ -705,13 +709,6 @@ class Bm25Index:
             self.doc_bucket_width, self.n_buckets, self.n_term_buckets,
         )
 
-    def _part_filter(self, touched_set):
-        vals = [v for v in touched_set if v is not None]
-        m = F.col("doc_bucket").isin(vals)
-        if None in touched_set:
-            m = m | F.col("doc_bucket").isNull()
-        return m
-
     def build(self, corpus: DataFrame) -> None:
         """One tokenize pass writes the postings; doc stats derive from
         the WRITTEN postings (read-back — no second tokenize) plus an
@@ -764,57 +761,34 @@ class Bm25Index:
         stored NULL-id row."""
         if not self.store.exists(self.POSTINGS):
             return self.build(batch)
+        from metadata_ingestion_framework_spark.operators.incremental import (
+            _upsert_touched,
+        )
+
         posts_b = self._postings(batch).persist()
         stats_b = doc_stats_of(
             batch.select(self.id_col), posts_b,
             self.id_col, self.doc_bucket_width, self.n_buckets,
-        ).persist()  # consumed: touched collect + postings anti + scd1 merge
+        ).persist()  # consumed: touched collect + both upserts
         try:
-            touched_set = {
-                r.doc_bucket
-                for r in stats_b.select("doc_bucket").distinct().collect()
-            }
-            touched = sorted(
-                (v for v in touched_set if v is not None), key=str
-            ) + ([None] if None in touched_set else [])
-            # read_partitions, not read().filter (r15): append never needs
-            # a full-table frame, and path-based plan construction pays an
-            # O(#partition dirs) driver listing PER READ — measured 3.4s
-            # at a 10x band-table; here discovery lists only the touched
-            # doc buckets, so append's plan cost tracks the batch too.
-            merged_posts = merge_postings(
-                self.store.read_partitions(
-                    self.POSTINGS, "doc_bucket", touched
-                ),
-                posts_b, stats_b, self.id_col,
+            # the touched buckets and vacated ids come from the doc stats
+            # (every batch doc, token-less ones included), so a re-ingested
+            # doc whose new text has no terms still drops its old postings
+            touched = _upsert_touched(
+                self.store, self.POSTINGS, posts_b, self.id_col,
+                ["doc_bucket", "term_bucket"], batch=stats_b,
             )
-            self.store.write_partition_delta(
-                merged_posts, self.POSTINGS,
-                ["doc_bucket", "term_bucket"], touched,
-            )
-            from metadata_ingestion_framework_spark.operators.merge import (
-                scd1_merge,
-            )
-
-            merged_stats = scd1_merge(
-                self.store.read_partitions(
-                    self.DOC_STATS, "doc_bucket", touched
-                ),
-                stats_b, [self.id_col],
-            )
-            self.store.write_partition_delta(
-                merged_stats, self.DOC_STATS, ["doc_bucket"], touched
+            _upsert_touched(
+                self.store, self.DOC_STATS,
+                scd1_merge(None, stats_b, [self.id_col]),
+                self.id_col, "doc_bucket", touched=touched, batch=stats_b,
             )
             # bucket stats: recompute touched rows from the WRITTEN doc
-            # stats (partition-pruned read of the fresh version), carry
-            # the rest — BIGINT sums compose exactly
-            fresh = bucket_stats_of(
-                self.store.read_partitions(
-                    self.DOC_STATS, "doc_bucket", touched
-                )
-            )
+            # stats, carry the rest — BIGINT sums compose exactly
+            pick = partition_in_filter(touched, "doc_bucket", None)
+            fresh = bucket_stats_of(self.store.read(self.DOC_STATS).filter(pick))
             keep = self.store.read(self.BUCKET_STATS).filter(
-                ~F.coalesce(self._part_filter(touched_set), F.lit(False))
+                ~F.coalesce(pick, F.lit(False))
             )
             self.store.write(keep.unionByName(fresh), self.BUCKET_STATS)
         finally:

@@ -679,3 +679,32 @@ def test_concurrent_writers_land_every_row_and_leave_no_tmp(spark, tmp_path):
         f for _, _, names in os.walk(root) for f in names if f.endswith(".tmp")
     ]
     assert leftovers == []
+
+
+def test_status_and_fact_files_are_synced_before_the_rename(spark, tmp_path, monkeypatch):
+    """Each status and fact file reaches the disk before it is renamed into
+    place, so a host crash cannot leave a renamed empty file for a restart
+    to resume from (the ``_atomic_write`` order)."""
+    import os
+
+    obs = ObservabilityStore(spark, str(tmp_path / "obs"))
+    events = []
+    fsync, replace = os.fsync, os.replace
+
+    def spy_fsync(fd):
+        events.append(("fsync", os.fstat(fd).st_ino))
+        fsync(fd)
+
+    def spy_replace(src, dst):
+        events.append(("replace", os.stat(src).st_ino))
+        replace(src, dst)
+
+    monkeypatch.setattr(os, "fsync", spy_fsync)
+    monkeypatch.setattr(os, "replace", spy_replace)
+    obs.write_status("p", "t", "Finished", [("k", 0, 0, 4)], batch_id=1)
+    obs.write_fact("p", "t", "rows", 5, batch_id=1)
+    renamed = [ino for kind, ino in events if kind == "replace"]
+    assert len(renamed) == 2
+    for ino in renamed:
+        assert ("fsync", ino) in events[: events.index(("replace", ino))]
+    assert obs.read_status().count() == 1 and obs.read_facts().count() == 1
