@@ -2373,11 +2373,13 @@ def q_decontam_triage_indexed(spark, sf_dir):
     counts all value-checked through the index path. Filesystem
     lifecycle twin: tests/test_bm25_index.py::
     test_index_triage_equals_per_call_form."""
+    from metadata_ingestion_framework_spark.operators.incremental import (
+        merge_postings,
+    )
     from metadata_ingestion_framework_spark.operators.retrieval import (
         bucket_stats_of,
         build_postings,
         doc_stats_of,
-        merge_postings,
         triage_served,
     )
 
@@ -7155,11 +7157,13 @@ def q_bm25_index_serve(spark, sf_dir):
     ORIGINAL texts of docs 0-2 (doc 0 is re-ingested, so its old terms
     must no longer find it via vacated postings) plus a marker query
     that must retrieve only re-ingested docs."""
+    from metadata_ingestion_framework_spark.operators.incremental import (
+        merge_postings,
+    )
     from metadata_ingestion_framework_spark.operators.retrieval import (
         bucket_stats_of,
         build_postings,
         doc_stats_of,
-        merge_postings,
         serve_topk,
     )
 

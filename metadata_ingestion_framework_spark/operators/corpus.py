@@ -43,7 +43,6 @@ from metadata_ingestion_framework_spark.operators.incremental import (
     _upsert_touched,
     range_bucket_expr,
 )
-from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
 from metadata_ingestion_framework_spark.plans.tablestore import (
     RunLedger,
     VersionedParquetStore,
@@ -449,19 +448,26 @@ class CorpusShardStore(RunLedger):
 
             # vacate probe: ONLY the batch ids' member buckets are read
             # (bounded by the batch), never the corpus scan
+            members = assigned.select(
+                self._member_bucket(assigned).alias("member_bucket"),
+                self.id_col,
+                "shard",
+            )
             old_pairs = bucket_vals = None
             if self.store.exists(self.MEMBERS):
-                batch_ids = assigned.select(self.id_col)
                 bucket_vals = [
-                    r.b
-                    for r in assigned.select(
-                        self._member_bucket(assigned).alias("b")
-                    ).distinct().collect()
+                    r.member_bucket
+                    for r in members.select("member_bucket").distinct().collect()
                 ]
                 old_pairs = (
-                    self.store.read(self.MEMBERS)
-                    .filter(partition_in_filter(bucket_vals, "member_bucket", None))
-                    .join(F.broadcast(batch_ids), self.id_col, "left_semi")
+                    self.store.read_partitions(
+                        self.MEMBERS, "member_bucket", bucket_vals, members.schema
+                    )
+                    .join(
+                        F.broadcast(members.select(self.id_col)),
+                        self.id_col,
+                        "left_semi",
+                    )
                     .select(self.id_col, "shard")
                 )
             old_shards = (
@@ -523,12 +529,7 @@ class CorpusShardStore(RunLedger):
             # members upsert: batch ids' buckets only (the probe's) — old
             # rows of re-ingested ids vacate, the batch's fresh rows land
             _upsert_touched(
-                self.store, self.MEMBERS,
-                assigned.select(
-                    self._member_bucket(assigned).alias("member_bucket"),
-                    self.id_col,
-                    "shard",
-                ),
+                self.store, self.MEMBERS, members,
                 self.id_col, "member_bucket", touched=bucket_vals,
             )
 

@@ -30,9 +30,9 @@ buckets (the bands table is partitioned by ``pmod(band_hash, n_buckets)``,
 so a small batch's scan skips most partitions). Every store table in
 this module (and the corpus, IVF and BM25 stores beside it) commits a
 batch through one touched-bucket upsert, :func:`_upsert_touched`: it
-rewrites only the partitions the batch touched, picked with the
-NULL-safe ``operators/joins.py::partition_in_filter``, and hard-links
-the rest — the reference's manual partition pruning
+reads and rewrites only the partitions the batch touched (NULL-safe,
+``VersionedParquetStore.read_partitions``) and hard-links the rest —
+the reference's manual partition pruning
 (Utility.scala:339-348). Transitive cluster resolution composes
 downstream: feed the emitted pairs to
 ``operators/cluster.py::connected_components``.
@@ -53,11 +53,11 @@ from metadata_ingestion_framework_spark.operators.dedup import (
 )
 from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
 from metadata_ingestion_framework_spark.operators.merge import dedup_window, scd1_merge
-from metadata_ingestion_framework_spark.operators.retrieval import merge_postings
 from metadata_ingestion_framework_spark.plans.tablestore import (
     RunLedger,
     VersionedParquetStore,
     _atomic_write,
+    _dir_value_type,
 )
 
 
@@ -180,6 +180,23 @@ def _retire_range_ids_below(
     return bool(below or boundary_retired)
 
 
+def merge_postings(
+    old_postings: DataFrame,
+    batch_postings: DataFrame,
+    batch_ids: DataFrame,
+    id_col: str,
+) -> DataFrame:
+    """Upsert semantics for a multi-row-per-id table: ALL of a re-ingested
+    id's old rows are dropped (anti-join on the id — an SCD1 on (doc, term)
+    would leave stale BM25 postings for terms the new text no longer
+    contains) and the batch's rows take their place. The remove-old-rows
+    step of :func:`_upsert_touched`; the BM25 catalog queries compose it
+    in-plan."""
+    return old_postings.join(
+        batch_ids.select(id_col), id_col, "left_anti"
+    ).unionByName(batch_postings)
+
+
 def _upsert_touched(
     store: VersionedParquetStore,
     table: str,
@@ -197,29 +214,36 @@ def _upsert_touched(
     ``batch`` (default ``rows``) names the upsert. Its distinct values of
     the first of ``part_cols`` are the touched set (NULL as None) unless
     ``touched`` is given, and every old row whose id it carries is
-    dropped (``merge_postings``). The new version holds the touched
+    dropped (:func:`merge_postings`). The new version holds the touched
     partitions' other old rows plus ``rows``; ``write_partition_delta``
     hard-links every other partition. A table that does not exist yet is
     a plain ``write`` of ``rows``.
 
-    Old rows come from the cached ``read`` filtered by
-    ``partition_in_filter``: no schema-inference job, and the column
-    types hold when the NULL partition is the only one touched. NULL ids
-    are not an identity: the anti-join never matches them, so a NULL-id
-    row lands beside the stored ones. SCD1 tables dedup ``rows`` first
-    (``scd1_merge(None, ...)``) and pass the undeduped frame as
-    ``batch``, so the touched collect does not run the dedup shuffle.
+    Old rows come from ``read_partitions`` with ``rows``' schema: discovery
+    lists only the touched directories (or filters the cached read), no
+    schema-inference job runs, and the column types hold when the NULL
+    partition is the only one touched. NULL ids are not an identity: the
+    anti-join never matches them, so a NULL-id row lands beside the stored
+    ones. SCD1 tables dedup ``rows`` first (``scd1_merge(None, ...)``) and
+    pass the undeduped frame as ``batch``, so the touched collect does not
+    run the dedup shuffle.
 
-    Returns the touched values; for a new table, the written layout's
-    (``partition_values``: no Spark job, values as strings)."""
+    Returns the partitions the commit rewrote: the touched set, or for a
+    new table the partitions ``rows`` created (read from the written
+    layout, no Spark job, typed like the column), which leaves out a
+    ``batch`` value none of ``rows`` carries."""
     cols = [part_cols] if isinstance(part_cols, str) else list(part_cols)
     batch = rows if batch is None else batch
     if not store.exists(table):
         store.write(rows, table, partition_by=cols)
-        return store.partition_values(table, cols[0])
+        kind = _dir_value_type(rows.schema[cols[0]].dataType) or str
+        return [
+            v if v is None else kind(v)
+            for v in store.partition_values(table, cols[0])
+        ]
     if touched is None:
         touched = [r[0] for r in batch.select(cols[0]).distinct().collect()]
-    old = store.read(table).filter(partition_in_filter(touched, cols[0], None))
+    old = store.read_partitions(table, cols[0], touched, rows.schema)
     store.write_partition_delta(
         merge_postings(old, rows, batch, id_col), table, cols, touched
     )
@@ -2108,10 +2132,12 @@ class ParagraphHashStore(RunLedger):
             # the crash-replay never double-counts a run). The counts
             # are paragraph-grain (this store's decision unit); the
             # touched-bucket fact is the buckets the write physically
-            # rewrote — the BATCH IDS' bucket set, not the surviving
-            # rows' (a fully-deduped re-ingest still rewrites its
-            # bucket, which is exactly the write amplification the
-            # metric watches); on the first write, the written layout.
+            # rewrote (``_upsert_touched``'s return). On a later write
+            # that is the BATCH IDS' bucket set, not the surviving rows'
+            # (a fully-deduped re-ingest still rewrites its bucket, which
+            # is exactly the write amplification the metric watches); on
+            # the first write it is the buckets the surviving rows
+            # created, so a doc deduped away inside that batch adds none.
             if self.observability is not None:
                 _emit_ingest_facts(
                     self,

@@ -36,6 +36,12 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from metadata_ingestion_framework_spark.operators.incremental import (
+    _check_store_config,
+    _retire_range_ids_below,
+    _upsert_touched,
+    range_bucket_expr,
+)
 from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
 from metadata_ingestion_framework_spark.operators.merge import scd1_merge
 from metadata_ingestion_framework_spark.operators.similarity import _topk
@@ -475,10 +481,6 @@ def build_postings(
     ``(doc_id, term, tf, __dl, doc_bucket, term_bucket)``. Token-less
     (NULL/empty) docs produce no posting rows — they still count in N
     via ``doc_stats_of``."""
-    from metadata_ingestion_framework_spark.operators.incremental import (
-        range_bucket_expr,
-    )
-
     toks = docs.select(
         F.col(id_col), _terms(text_col).alias("__toks")
     ).withColumn("__dl", F.size("__toks"))
@@ -505,10 +507,6 @@ def doc_stats_of(
     posting row) left-joined so token-less docs appear with ``__dl = 0``
     (they count in N and avgdl's denominator — the bm25_topk
     contract)."""
-    from metadata_ingestion_framework_spark.operators.incremental import (
-        range_bucket_expr,
-    )
-
     # eqNullSafe join key (CLAUDE.md): a NULL-id doc HAS posting rows
     # (groupBy groups NULL keys) — a plain equi-join would miss them and
     # silently zero its dl, skewing avgdl away from the fresh-bm25 value
@@ -536,23 +534,6 @@ def bucket_stats_of(doc_stats: DataFrame) -> DataFrame:
         F.count(F.lit(1)).alias("n_docs"),
         F.sum("__dl").cast("bigint").alias("total_dl"),
     )
-
-
-def merge_postings(
-    old_postings: DataFrame,
-    batch_postings: DataFrame,
-    batch_ids: DataFrame,
-    id_col: str,
-) -> DataFrame:
-    """Upsert semantics for a multi-row-per-doc table: ALL of a
-    re-ingested doc's old posting rows are dropped (anti-join on the doc
-    id — an SCD1 on (doc, term) would leave stale rows for terms the new
-    text no longer contains) and the batch's rows take their place. The
-    remove-old-rows step of every store table's batch commit
-    (``incremental._upsert_touched``)."""
-    return old_postings.join(
-        batch_ids.select(id_col), id_col, "left_anti"
-    ).unionByName(batch_postings)
 
 
 def serve_topk(
@@ -687,10 +668,6 @@ class Bm25Index:
             self._stamp_config()
 
     def _stamp_config(self) -> None:
-        from metadata_ingestion_framework_spark.operators.incremental import (
-            _check_store_config,
-        )
-
         _check_store_config(
             self.root,
             {
@@ -761,10 +738,6 @@ class Bm25Index:
         stored NULL-id row."""
         if not self.store.exists(self.POSTINGS):
             return self.build(batch)
-        from metadata_ingestion_framework_spark.operators.incremental import (
-            _upsert_touched,
-        )
-
         posts_b = self._postings(batch).persist()
         stats_b = doc_stats_of(
             batch.select(self.id_col), posts_b,
@@ -778,17 +751,22 @@ class Bm25Index:
                 self.store, self.POSTINGS, posts_b, self.id_col,
                 ["doc_bucket", "term_bucket"], batch=stats_b,
             )
+            stats = scd1_merge(None, stats_b, [self.id_col])
             _upsert_touched(
-                self.store, self.DOC_STATS,
-                scd1_merge(None, stats_b, [self.id_col]),
+                self.store, self.DOC_STATS, stats,
                 self.id_col, "doc_bucket", touched=touched, batch=stats_b,
             )
             # bucket stats: recompute touched rows from the WRITTEN doc
             # stats, carry the rest — BIGINT sums compose exactly
-            pick = partition_in_filter(touched, "doc_bucket", None)
-            fresh = bucket_stats_of(self.store.read(self.DOC_STATS).filter(pick))
+            fresh = bucket_stats_of(
+                self.store.read_partitions(
+                    self.DOC_STATS, "doc_bucket", touched, stats.schema
+                )
+            )
             keep = self.store.read(self.BUCKET_STATS).filter(
-                ~F.coalesce(pick, F.lit(False))
+                ~F.coalesce(
+                    partition_in_filter(touched, "doc_bucket", None), F.lit(False)
+                )
             )
             self.store.write(keep.unionByName(fresh), self.BUCKET_STATS)
         finally:
@@ -804,10 +782,6 @@ class Bm25Index:
         doc-stats skew N/avgdl, stale df would too) — which is why df is
         derived, and postings + doc stats + bucket stats all retire in
         one call. Numeric-id stores only."""
-        from metadata_ingestion_framework_spark.operators.incremental import (
-            _retire_range_ids_below,
-        )
-
         changed_p = _retire_range_ids_below(
             self.store, self.POSTINGS, "doc_bucket", self.doc_bucket_width,
             self.id_col, cutoff_id, ["doc_bucket", "term_bucket"],

@@ -47,6 +47,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DataType, IntegralType, StringType, StructType
 
+from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
+
 # The codec of every parquet file the store writes (see the module docstring).
 # The store owns its file format, so this is not a session setting.
 PARQUET_CODEC = "zstd"
@@ -262,18 +264,31 @@ class VersionedParquetStore:
         return df
 
     def read_partitions(
-        self, table: str, partition_col: str, values: list
+        self,
+        table: str,
+        partition_col: str,
+        values: list,
+        schema: StructType | None = None,
     ) -> DataFrame:
         """Rows of the given TOP-LEVEL partition values — row-identical to
-        ``read(table).filter(col(partition_col).isin(values))`` (``isNull``
-        for None), but partition DISCOVERY lists only the named directories,
-        so planning cost tracks the touched set, not the store (r15).
+        ``read(table).filter(partition_in_filter(values, partition_col, None))``
+        (NULL-aware), and exactly that when the read is already cached.
+        Otherwise partition DISCOVERY lists only the named directories, so
+        planning cost tracks the touched set, not the store (r15: ``read``
+        lists every partition dir, 3.4 s per read of a 10x band table), and
+        nothing is cached, so the next commit does not list the whole new
+        version either (``_cache_commit``). ``schema`` (the table's, partition
+        columns included) skips the schema-inference job, and the partition
+        columns take its types even when only the NULL directory is named.
         Hierarchical layouts keep their sub-partition columns (basePath).
         Values without a directory contribute no rows; when none has one,
         an empty frame with the table's schema is returned."""
         v = self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"table {table} does not exist in {self.root}")
+        cached = self._read_cache.get((table, v))
+        if cached is not None:
+            return cached.filter(partition_in_filter(values, partition_col, None))
         base = self._version_path(table, v)
         paths = []
         for val in values:
@@ -281,6 +296,8 @@ class VersionedParquetStore:
             if os.path.isdir(p):
                 paths.append(p)
         reader = self.spark.read.option("basePath", base)
+        if schema is not None:
+            reader = reader.schema(schema)
         if paths:
             return reader.parquet(*paths)
         any_part = sorted(

@@ -1,7 +1,8 @@
 """The touched-bucket upsert every store table commits a batch through
 (``operators/incremental.py::_upsert_touched``): the NULL id bucket through
-each caller whose id can be NULL, and the Spark jobs of a toy minhash
-ingest."""
+each caller whose id can be NULL, the Spark jobs of each caller's toy
+second batch and of a toy minhash ingest, and the touched-only read of the
+old rows."""
 
 from __future__ import annotations
 
@@ -24,6 +25,7 @@ from metadata_ingestion_framework_spark.operators.incremental import (
 )
 from metadata_ingestion_framework_spark.operators.ivf_index import IvfIndex
 from metadata_ingestion_framework_spark.operators.retrieval import Bm25Index
+from metadata_ingestion_framework_spark.plans.tablestore import VersionedParquetStore
 
 # bucket width: stored ids 0-3 and 4-7 fill buckets 0 and 1, NULL a third
 W = 4
@@ -155,6 +157,30 @@ def test_null_bucket_upsert(spark, tmp_path, case):
     assert untouched and _inodes(store, table, v2, f"{bucket_col}=1") == untouched
 
 
+# Spark jobs of the second batch below, per caller (the first builds the store)
+SECOND_BATCH_JOBS = {
+    "bm25_postings": 18,
+    "corpus_members": 31,
+    "embedding_vecs": 16,
+    "image_fps": 25,
+    "ivf_vectors": 7,
+    "minhash_sigs": 27,
+    "paragraph_paras": 24,
+}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_second_batch_jobs(spark, tmp_path, jobs_in_group, case):
+    """The Spark jobs of each caller's toy second batch. The upsert reads
+    its old rows with the table's schema, so no caller pays a
+    schema-inference job for them."""
+    make, frame, ingest, *_ = CASES[case]
+    obj = make(spark, str(tmp_path / case))
+    ingest(obj, frame(spark, [(i, i) for i in range(40)] + [(None, 50)]), 1)
+    batch = frame(spark, [(None, 60), (1, 101), (45, 45)])
+    assert jobs_in_group(case, lambda: ingest(obj, batch, 2)) == SECOND_BATCH_JOBS[case]
+
+
 @pytest.mark.parametrize("observed, want", [(False, 29), (True, 33)])
 def test_minhash_second_ingest_jobs(spark, tmp_path, jobs_in_group, observed, want):
     """The Spark jobs of a toy second ``MinhashSignatureStore.ingest``. The
@@ -175,3 +201,25 @@ def test_minhash_second_ingest_jobs(spark, tmp_path, jobs_in_group, observed, wa
     jobs = jobs_in_group("minhash-ingest", lambda: out.append(st.ingest(batch, "r2")))
     unpersist_deps(out[0])
     assert jobs == want
+
+
+def test_read_partitions_lists_only_the_named_dirs(spark, tmp_path, jobs_in_group):
+    """The upsert's read of the old rows: with the table's schema passed,
+    ``read_partitions`` on an uncached version runs no Spark job, caches
+    nothing (the next commit would otherwise list the whole new version),
+    and types the partition column from the schema when the NULL directory
+    is the only one named."""
+    df = spark.createDataFrame(
+        [(1, 0, "a"), (None, None, "b"), (9, 2, "c")], "id long, b long, v string"
+    )
+    VersionedParquetStore(spark, str(tmp_path / "s")).write(df, "t", partition_by=["b"])
+    store = VersionedParquetStore(spark, str(tmp_path / "s"))
+    out = []
+    jobs = jobs_in_group(
+        "read-partitions",
+        lambda: out.append(store.read_partitions("t", "b", [None], df.schema)),
+    )
+    assert jobs == 0
+    assert store._read_cache == {}
+    assert dict(out[0].dtypes)["b"] == "bigint"
+    assert [tuple(r) for r in out[0].select("id", "b", "v").collect()] == [(None, None, "b")]
