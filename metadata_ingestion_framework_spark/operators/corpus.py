@@ -43,6 +43,7 @@ from metadata_ingestion_framework_spark.operators.incremental import (
     _upsert_touched,
     range_bucket_expr,
 )
+from metadata_ingestion_framework_spark.operators.joins import distinct_values
 from metadata_ingestion_framework_spark.plans.tablestore import (
     RunLedger,
     VersionedParquetStore,
@@ -455,10 +456,7 @@ class CorpusShardStore(RunLedger):
             )
             old_pairs = bucket_vals = None
             if self.store.exists(self.MEMBERS):
-                bucket_vals = [
-                    r.member_bucket
-                    for r in members.select("member_bucket").distinct().collect()
-                ]
+                bucket_vals = distinct_values(members, "member_bucket")
                 old_pairs = (
                     self.store.read_partitions(
                         self.MEMBERS, "member_bucket", bucket_vals, members.schema
@@ -471,10 +469,7 @@ class CorpusShardStore(RunLedger):
                     .select(self.id_col, "shard")
                 )
             old_shards = (
-                sorted(
-                    r.shard
-                    for r in old_pairs.select("shard").distinct().collect()
-                )
+                sorted(distinct_values(old_pairs, "shard"))
                 if old_pairs is not None
                 else []
             )

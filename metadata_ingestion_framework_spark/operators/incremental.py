@@ -51,7 +51,10 @@ from metadata_ingestion_framework_spark.operators.dedup import (
     minhash_bands,
     minhash_signatures,
 )
-from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
+from metadata_ingestion_framework_spark.operators.joins import (
+    distinct_values,
+    partition_in_filter,
+)
 from metadata_ingestion_framework_spark.operators.merge import dedup_window, scd1_merge
 from metadata_ingestion_framework_spark.plans.tablestore import (
     RunLedger,
@@ -212,12 +215,12 @@ def _upsert_touched(
     partition granularity.
 
     ``batch`` (default ``rows``) names the upsert. Its distinct values of
-    the first of ``part_cols`` are the touched set (NULL as None) unless
-    ``touched`` is given, and every old row whose id it carries is
-    dropped (:func:`merge_postings`). The new version holds the touched
-    partitions' other old rows plus ``rows``; ``write_partition_delta``
-    hard-links every other partition. A table that does not exist yet is
-    a plain ``write`` of ``rows``.
+    the first of ``part_cols`` (``distinct_values``, one shuffle-free job)
+    are the touched set (NULL as None) unless ``touched`` is given, and
+    every old row whose id it carries is dropped (:func:`merge_postings`).
+    The new version holds the touched partitions' other old rows plus
+    ``rows``; ``write_partition_delta`` hard-links every other partition.
+    A table that does not exist yet is a plain ``write`` of ``rows``.
 
     Old rows come from ``read_partitions`` with ``rows``' schema: discovery
     lists only the touched directories (or filters the cached read), no
@@ -242,7 +245,7 @@ def _upsert_touched(
             for v in store.partition_values(table, cols[0])
         ]
     if touched is None:
-        touched = [r[0] for r in batch.select(cols[0]).distinct().collect()]
+        touched = distinct_values(batch, cols[0])
     old = store.read_partitions(table, cols[0], touched, rows.schema)
     store.write_partition_delta(
         merge_postings(old, rows, batch, id_col), table, cols, touched
@@ -572,10 +575,7 @@ class MinhashSignatureStore(RunLedger):
         store_sigs = self.store.read(self.SIGS).join(
             batch_ids, self.id_col, "left_anti"
         )
-        batch_buckets = [
-            r.bucket
-            for r in new_bands.select("bucket").distinct().collect()
-        ]
+        batch_buckets = distinct_values(new_bands, "bucket")
         store_bands = None
         if self.store.exists(self.BANDS):
             store_bands = (
@@ -975,9 +975,7 @@ class EmbeddingDedupStore(RunLedger):
             store_pruned = None
             if self.store.exists(self.VECS):
                 batch_ids = assigned.select(self.id_col)
-                batch_cells = [
-                    r.cell for r in assigned.select("cell").distinct().collect()
-                ]
+                batch_cells = distinct_values(assigned, "cell")
                 # cell prune (directory-level on the partitioned layout) +
                 # replay safety (a re-delivered batch must not collide with
                 # its own stored copy). NULL-safe (r11 review): an
@@ -1602,10 +1600,7 @@ class ImageHashStore(RunLedger):
         store_fps = self.store.read(self.FPS).join(
             batch_ids, self.id_col, "left_anti"
         )
-        batch_buckets = [
-            r.bucket
-            for r in new_bands.select("bucket").distinct().collect()
-        ]
+        batch_buckets = distinct_values(new_bands, "bucket")
         store_bands = None
         if self.store.exists(self.BANDS):
             store_bands = (
@@ -2004,18 +1999,15 @@ class ParagraphHashStore(RunLedger):
             return None
         bpos = self._bloom_positions(paras_new.select("gh").distinct())
         hit = F.expr("(shiftrightunsigned(__bits, __b) & 1) = 1")
-        rows = (
+        return distinct_values(
             self.store.read(self.BLOOM)
             .join(F.broadcast(bpos), "__w")
             .filter(hit)
             .groupBy("par_bucket", "gh")
             .agg(F.count(F.lit(1)).alias("__h"))
-            .filter(F.col("__h") >= self.bloom_hashes)
-            .select("par_bucket")
-            .distinct()
-            .collect()
+            .filter(F.col("__h") >= self.bloom_hashes),
+            "par_bucket",
         )
-        return [r.par_bucket for r in rows]
 
     # -- the operation -----------------------------------------------------
     def ingest(self, batch: DataFrame, run_id: str) -> DataFrame | None:

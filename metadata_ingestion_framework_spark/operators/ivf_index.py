@@ -48,6 +48,7 @@ from metadata_ingestion_framework_spark.operators.incremental import (
     _upsert_touched,
     range_bucket_expr,
 )
+from metadata_ingestion_framework_spark.operators.joins import distinct_values
 from metadata_ingestion_framework_spark.operators.kmeans import kmeans_fit
 from metadata_ingestion_framework_spark.operators.merge import scd1_merge
 from metadata_ingestion_framework_spark.operators.similarity import (
@@ -423,7 +424,7 @@ class IvfIndex:
         )
         q = q.persist()  # consumed twice: probed-cell collect + the join
         try:
-            probed = [r.cell for r in q.select("cell").distinct().collect()]
+            probed = distinct_values(q, "cell")
             # prune on the PARTITION column: for split layouts that is
             # cell_part (all children of a probed cell — the split
             # balances partitions without changing the candidate set)
@@ -495,7 +496,7 @@ class IvfIndex:
             ),
         ).persist()  # consumed thrice: probed collect, ADC join, rerank
         try:
-            probed = [r.cell for r in q.select("cell").distinct().collect()]
+            probed = distinct_values(q, "cell")
             if self.cell_splits:
                 part_filter = F.col("cell_part").isin(
                     self._expand_probed(probed)

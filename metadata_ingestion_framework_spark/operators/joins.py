@@ -63,26 +63,61 @@ def build_inner_join_condition(
     return out
 
 
+def distinct_values(df: DataFrame, col: str | Column) -> list:
+    """The distinct values of one column ``col`` (a name or an expression)
+    of ``df`` on the driver: the same values, with the same Python types,
+    as ``{r[0] for r in df.select(col).distinct().collect()}``, in no set
+    order. Every driver-side value set of one column (touched partitions,
+    band buckets, probed cells) is collected here.
+
+    One Spark job with no shuffle: ``toArrow`` ships the column as Arrow
+    batches and ``pyarrow.compute.unique`` drops repeats on the driver. A
+    Spark ``distinct`` adds an exchange, so under AQE it is a map-stage
+    job plus the result job. Typed as a Row collect types them: a timestamp comes back
+    naive in local time (Arrow's is tz-aware UTC), ``-0.0`` as ``0.0`` and
+    every NaN as one NaN (Spark normalises both before it groups; Arrow
+    keeps ``-0.0`` apart), NULL as None. Atomic column types only.
+
+    The cost: the driver receives the column itself, one value per row,
+    not the distinct values alone. Measured for a bigint column against
+    ``distinct().collect()``, local mode on 4 vCPUs: 100k rows 0.19 s vs
+    0.42 s, 1M rows 0.17 s vs 0.29 s, 5M rows 0.39 s vs 0.20 s; at 5M rows
+    the driver's RSS grew by about 38 MB. Per-task uniques in Python workers
+    (``mapInArrow``) cost more than the shuffle they save.
+    """
+    import pyarrow as pa
+    import pyarrow.compute as pc
+    from pyspark.sql.types import DoubleType, FloatType, TimestampType
+
+    one = df.select(col)
+    dtype = one.schema[0].dataType
+    values = one.toArrow().column(0)
+    if isinstance(dtype, (FloatType, DoubleType)):
+        values = pc.add(values, pa.scalar(0, values.type))  # -0.0 + 0 is 0.0
+    values = pc.unique(values)
+    if isinstance(dtype, TimestampType):
+        return [dtype.fromInternal(v) for v in values.cast(pa.int64()).to_pylist()]
+    return values.to_pylist()
+
+
 def collect_partition_values(
     updates: DataFrame, partition_col: str, max_values: int = 10000
 ) -> list | None:
     """The distinct ``partition_col`` values of the update batch — the one
-    bounded collect behind manual partition pruning (Utility.scala:339-348).
+    collect behind manual partition pruning (Utility.scala:339-348).
 
-    Scale posture: the collect is a distinct over the *partition* column of
-    the (already deduped) update micro-batch, i.e. at most a few thousand
-    values; ``max_values`` guards against a mis-declared partition column
-    exploding the IN-list. Returns None — no pruning, correct but unpruned,
-    rather than an OOM driver — when the column is missing, the batch is
-    empty or it holds more than ``max_values`` values. A NULL partition
-    value comes back as None.
+    Callers pass the raw batch, before the merge's dedup window: its
+    values are a superset of the partitions the deduped rows land in, and
+    the collect (``distinct_values``) is one scan with no shuffle instead
+    of a pass through the dedup window. ``max_values`` guards against a
+    mis-declared partition column exploding the IN-list. Returns None —
+    no pruning, correct but unpruned — when the column is missing, the
+    batch is empty or it holds more than ``max_values`` values. A NULL
+    partition value comes back as None.
     """
     if partition_col not in updates.columns:
         return None
-    vals = [
-        r[0]
-        for r in updates.select(partition_col).distinct().limit(max_values + 1).collect()
-    ]
+    vals = distinct_values(updates, partition_col)
     if not vals or len(vals) > max_values:
         return None
     return vals

@@ -19,8 +19,9 @@ Scale posture (100 TB):
 - the update side is deduped (one row per key) before the join;
 - manual partition pruning (Utility.scala:339-348) is reproduced by
   splitting the target into affected/unaffected partitions with the
-  IN-list filter and joining ONLY the affected slice — the unaffected
-  slice is unioned back with no shuffle. The result is a ``MergeResult``
+  IN-list filter (values collected from the raw batch, before the dedup,
+  in one shuffle-free job) and joining ONLY the affected slice — the
+  unaffected slice is unioned back with no shuffle. The result is a ``MergeResult``
   that also carries the affected slice alone and the touched partition
   values, so ``VersionedParquetStore.write`` rewrites only the touched
   partitions and hard-links the rest from the version the merge read
@@ -81,8 +82,10 @@ class MergeResult(ClassicDataFrame):
 
     - ``base``: the target frame the merge was given;
     - ``partition_col``: the pruning column;
-    - ``touched``: the update batch's distinct ``partition_col`` values
-      (None for the NULL partition) — the affected partitions;
+    - ``touched``: the raw update batch's distinct ``partition_col``
+      values (None for the NULL partition), collected before the dedup
+      window — a superset of the partitions the merged update rows land
+      in; the affected partitions;
     - ``changed``: the merged affected slice alone, before the untouched
       slice is unioned back.
 
@@ -160,6 +163,7 @@ def merge_apply(
     partition_col: str | None = None,
     allow_schema_evolution: bool = False,
     insert_on_match: str | None = None,
+    batch: DataFrame | None = None,
 ) -> DataFrame:
     """Pure MERGE: return the post-merge state of ``target``.
 
@@ -179,7 +183,11 @@ def merge_apply(
     through one ``explode`` after the join: SCD2's expire-and-insert.
 
     With ``partition_col`` and a prunable update batch the result is a
-    ``MergeResult`` (same rows, plus the touched partitions).
+    ``MergeResult`` (same rows, plus the touched partitions). The touched
+    partitions are collected from ``batch`` (default ``updates``): the SCD
+    merges pass the batch before its dedup window, so the collect is one
+    scan with no shuffle and still covers every partition a key's rows
+    fall in.
     """
     clauses = clauses if clauses is not None else DEFAULT_SCD1_CLAUSES
     base = target
@@ -194,7 +202,11 @@ def merge_apply(
     out_cols = target.columns
 
     untouched = None
-    touched = collect_partition_values(updates, partition_col) if partition_col else None
+    touched = (
+        collect_partition_values(updates if batch is None else batch, partition_col)
+        if partition_col
+        else None
+    )
     if touched is not None:
         # Null / not-in-list partitions can never match the update batch:
         # keep them verbatim (no join) — the join only sees the affected
@@ -347,7 +359,7 @@ def scd1_merge(
     return merge_apply(
         target, u, keys, clauses,
         extra_join_condition=extra_join_condition, partition_col=partition_col,
-        allow_schema_evolution=allow_schema_evolution,
+        allow_schema_evolution=allow_schema_evolution, batch=updates,
     )
 
 
@@ -416,6 +428,7 @@ def scd2_merge(
     return merge_apply(
         target, u, join_keys, clauses,
         partition_col=partition_col, insert_on_match=match_condition,
+        batch=updates,
     )
 
 
@@ -462,7 +475,9 @@ def scd4_merge(
         ]
     else:
         clauses = None
-    new_current = merge_apply(target, u, join_keys, clauses, partition_col=partition_col)
+    new_current = merge_apply(
+        target, u, join_keys, clauses, partition_col=partition_col, batch=updates
+    )
     return new_current, new_history
 
 

@@ -42,7 +42,10 @@ from metadata_ingestion_framework_spark.operators.incremental import (
     _upsert_touched,
     range_bucket_expr,
 )
-from metadata_ingestion_framework_spark.operators.joins import partition_in_filter
+from metadata_ingestion_framework_spark.operators.joins import (
+    distinct_values,
+    partition_in_filter,
+)
 from metadata_ingestion_framework_spark.operators.merge import scd1_merge
 from metadata_ingestion_framework_spark.operators.similarity import _topk
 
@@ -563,14 +566,10 @@ def serve_topk(
     ).persist()  # consumed twice: bucket collect + the scoring join
     posts_q = None
     try:
-        tbs = [
-            r.tb
-            for r in qterms.select(
-                term_bucket_expr(F.col("term"), n_term_buckets).alias("tb")
-            )
-            .distinct()
-            .collect()
-        ]  # bounded driver collect: <= distinct query terms values
+        # bounded driver collect: one value per query term
+        tbs = distinct_values(
+            qterms, term_bucket_expr(F.col("term"), n_term_buckets)
+        )
         pruned = postings.filter(F.col("term_bucket").isin(tbs))
         # exact term filter BEFORE df: collisions share a bucket, so the
         # pruned scan still holds foreign terms — join the (tiny,
@@ -751,7 +750,13 @@ class Bm25Index:
                 self.store, self.POSTINGS, posts_b, self.id_col,
                 ["doc_bucket", "term_bucket"], batch=stats_b,
             )
-            stats = scd1_merge(None, stats_b, [self.id_col])
+            # dedup the numbered ids only: the dedup window would fold
+            # every NULL-id doc into one doc-stats row while the postings
+            # keep them all
+            ided = F.col(self.id_col).isNotNull()
+            stats = scd1_merge(
+                None, stats_b.filter(ided), [self.id_col]
+            ).unionByName(stats_b.filter(~ided))
             _upsert_touched(
                 self.store, self.DOC_STATS, stats,
                 self.id_col, "doc_bucket", touched=touched, batch=stats_b,

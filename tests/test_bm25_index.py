@@ -260,6 +260,27 @@ def test_null_id_docs_survive_lifecycle(spark, tmp_path):
     assert any(r[1] is None for r in got2)  # the NULL-id doc survived
 
 
+def test_append_counts_every_null_id_doc(spark, tmp_path):
+    """Two NULL-id docs in one append are two docs, as in the postings
+    and as a build of the same docs counts them: the NULL bucket's
+    ``n_docs`` reads 2."""
+    ddl = "doc_id long, text string"
+    first = [(0, "spark engine"), (1, "spark data")]
+    batch = [(None, "ghost one"), (None, "ghost two words"), (5, "spark late")]
+    idx = _idx(spark, tmp_path)
+    idx.build(spark.createDataFrame(first, ddl))
+    idx.append(spark.createDataFrame(batch, ddl))
+    fresh = _idx(spark, tmp_path, "fresh")
+    fresh.build(spark.createDataFrame(first + batch, ddl))
+
+    def n_docs(index):
+        rows = index.store.read(Bm25Index.BUCKET_STATS).collect()
+        return {r.doc_bucket: r.n_docs for r in rows}
+
+    assert n_docs(idx)[None] == 2
+    assert n_docs(idx) == n_docs(fresh)
+
+
 def test_config_guard(spark, tmp_path):
     idx = _idx(spark, tmp_path)
     idx.build(_docs(spark).limit(50))

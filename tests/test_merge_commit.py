@@ -475,6 +475,73 @@ def test_scd2_merge_and_write_job_count(spark, tmp_path, jobs_in_group):
         assert jobs_in_group(f"scd2-read-{b}", lambda: s.read("t")) == 0
 
 
+BULK_DDL = "id long, name string, v double, updated_at long"
+
+
+def _bulk_batch(spark, path, rows):
+    """A bulk-shaped update batch: read from parquet, ``part = id div 10``
+    derived after the read (a NULL id lands in the NULL partition)."""
+    spark.createDataFrame(rows, BULK_DDL).write.parquet(path)
+    return spark.read.parquet(path).withColumn("part", F.expr("id div 10"))
+
+
+def test_partitioned_scd1_merge_and_write_job_count(spark, tmp_path, jobs_in_group):
+    """A toy bulk batch (duplicate keys, a NULL partition) merges into a
+    partitioned table and commits its touched partitions in 5 Spark jobs:
+    1 for the touched-partition collect, a shuffle-free scan of the raw
+    batch, and 4 for the merge write. A collect that runs the dedup window
+    or a distinct exchange raises the count."""
+    s = VersionedParquetStore(spark, str(tmp_path / "bulk"))
+    s.write(
+        spark.createDataFrame(
+            [(i, f"n{i}", float(i), 0) for i in range(50)] + [(None, "z", 0.0, 0)],
+            BULK_DDL,
+        ).withColumn("part", F.expr("id div 10")),
+        "t", partition_by=["part"],
+    )
+    for b in range(2):
+        # ids in partitions 0-2 (every other one twice), a new partition 6
+        rows = [(i, f"u{b}{i}", float(b), b + 1) for i in range(b, 30, 7)]
+        rows += [(i, f"d{b}{i}", float(b), b + 2) for i in range(b, 30, 14)]
+        rows += [(60 + b, "new", 0.0, 1), (None, "n", 0.0, 9)]
+        upd = _bulk_batch(spark, str(tmp_path / f"in{b}"), rows)
+        target = s.read("t")
+        jobs = jobs_in_group(f"scd1-commit-{b}", lambda: s.write(
+            scd1_merge(target, upd, ["id"], updated_at_col="updated_at",
+                       partition_col="part"),
+            "t", partition_by=["part"]))
+        assert jobs == 5
+        assert _linked(s, "t", s.current_version("t")) == {"part=3", "part=4"}
+    got = s.read("t")
+    assert got.count() == 55  # 50 ids + 2 new ids + 3 NULL-id rows
+    assert got.filter("id = 14").collect()[0]["name"] == "u014"  # earliest wins
+
+
+def test_duplicate_key_across_partitions_pruned_equals_unpruned(spark, store):
+    """A key whose duplicate update rows fall in two partitions: the
+    touched set holds both (it is collected before the dedup), so the
+    stored row in the later row's partition is matched and moved, not
+    left beside the inserted winner. Pruned equals unpruned, and so does
+    its touched-only commit."""
+    upd = spark.createDataFrame(
+        [(12, "early", 1.0, 3, 1), (12, "late", 2.0, 1, 2), (200, "new", 1.0, 0, 1)],
+        "id long, name string, v double, part int, updated_at long",
+    )
+    target = store.read("t")
+    plain = scd1_merge(target, upd, ["id"], updated_at_col="updated_at")
+    pruned = scd1_merge(target, upd, ["id"], updated_at_col="updated_at",
+                        partition_col="part")
+    assert isinstance(pruned, MergeResult)
+    assert sorted(pruned.touched) == [0, 1, 3]
+    assert _rows(pruned) == _rows(plain)
+    v = store.write(pruned, "t", partition_by=["part"])
+    assert _linked(store, "t", v) == {"part=2"}
+    assert _rows(store.read("t")) == _rows(plain)
+    assert [tuple(r) for r in store.read("t").filter("id = 12").select(*COLS).collect()] == [
+        (12, "early", 1.0, 3)
+    ]
+
+
 @pytest.mark.parametrize("commit", sorted(COMMITS))
 def test_committed_files_are_zstd(spark, store, commit):
     """Every parquet file a commit writes (not the ones it hard-links from

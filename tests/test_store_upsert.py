@@ -159,12 +159,12 @@ def test_null_bucket_upsert(spark, tmp_path, case):
 
 # Spark jobs of the second batch below, per caller (the first builds the store)
 SECOND_BATCH_JOBS = {
-    "bm25_postings": 18,
-    "corpus_members": 31,
-    "embedding_vecs": 16,
-    "image_fps": 25,
-    "ivf_vectors": 7,
-    "minhash_sigs": 27,
+    "bm25_postings": 17,
+    "corpus_members": 29,
+    "embedding_vecs": 13,
+    "image_fps": 22,
+    "ivf_vectors": 5,
+    "minhash_sigs": 24,
     "paragraph_paras": 24,
 }
 
@@ -181,7 +181,9 @@ def test_second_batch_jobs(spark, tmp_path, jobs_in_group, case):
     assert jobs_in_group(case, lambda: ingest(obj, batch, 2)) == SECOND_BATCH_JOBS[case]
 
 
-@pytest.mark.parametrize("observed, want", [(False, 29), (True, 33)])
+@pytest.mark.parametrize(
+    "observed, want", [(False, 26), (True, 30)], ids=["plain", "observed"]
+)
 def test_minhash_second_ingest_jobs(spark, tmp_path, jobs_in_group, observed, want):
     """The Spark jobs of a toy second ``MinhashSignatureStore.ingest``. The
     touched-bucket facts take their counts from the upserts' touched
