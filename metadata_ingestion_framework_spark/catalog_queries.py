@@ -2396,7 +2396,7 @@ def q_decontam_triage_indexed(spark, sf_dir):
         "doc_id",
     ).persist()  # consumed by doc_stats AND the serve scan (self-join rule)
     stats = bucket_stats_of(
-        doc_stats_of(train.select("doc_id"), merged, "doc_id", w, nb)
+        doc_stats_of(train, merged, "doc_id", "text", w, nb)
     )
     out = triage_served(
         merged, stats, train, evals, ntb,
@@ -6338,7 +6338,7 @@ def q_hybrid_served(spark, sf_dir):
     # consumed by doc_stats_of AND the serve scan (self-join rule)
     posts = build_postings(docs, "doc_id", "text", w, nb, ntb).persist()
     stats = bucket_stats_of(
-        doc_stats_of(docs.select("doc_id"), posts, "doc_id", w, nb)
+        doc_stats_of(docs, posts, "doc_id", "text", w, nb)
     )
     lex = serve_topk(
         posts, stats, queries.select("query_id", "text"), ntb, k=20
@@ -7181,12 +7181,10 @@ def q_bm25_index_serve(spark, sf_dir):
         batch.select("doc_id"),
         "doc_id",
     ).persist()  # consumed by doc_stats AND the serve scan (self-join rule)
-    ids = (
-        stored.join(reing.select("doc_id"), "doc_id", "left_anti")
-        .select("doc_id")
-        .unionByName(batch.select("doc_id"))
+    ids = stored.join(reing.select("doc_id"), "doc_id", "left_anti").unionByName(
+        batch
     )
-    stats = bucket_stats_of(doc_stats_of(ids, merged, "doc_id", w, nb))
+    stats = bucket_stats_of(doc_stats_of(ids, merged, "doc_id", "text", w, nb))
     queries = docs.filter(F.col("doc_id") < 3).select(
         F.col("doc_id").alias("query_id"), "text"
     ).unionByName(

@@ -36,6 +36,20 @@ the reference's manual partition pruning
 (Utility.scala:339-348). Transitive cluster resolution composes
 downstream: feed the emitted pairs to
 ``operators/cluster.py::connected_components``.
+
+Every dedup store here (minhash, embedding, image and audio, paragraph,
+cross-modal) opens and ingests through one lifecycle,
+:class:`_IngestLifecycle` (the reference's ``Task`` wrapper,
+Task.scala:52-142): config guard and ledger on open; per ingest the
+ledger no-op, the batch-side persist released in ``finally`` (owned drop
+sets on failure), the run record after the last table write, then the
+facts. A store supplies its feature kernel, its drop rule and its tables
+in order. The two banded stores (:class:`_BandedStore`) share the pruned
+store sides and one band commit: upsert; on the first ingest a write of
+the batch's bands; after a crash that left the primary table without its
+bands, a rebuild from the primary table. An SCD1 table dedups a batch
+with :func:`_dedup_ids`, which keeps every NULL-id row (NULL is not an
+identity).
 """
 
 from __future__ import annotations
@@ -227,9 +241,9 @@ def _upsert_touched(
     schema-inference job runs, and the column types hold when the NULL
     partition is the only one touched. NULL ids are not an identity: the
     anti-join never matches them, so a NULL-id row lands beside the stored
-    ones. SCD1 tables dedup ``rows`` first (``scd1_merge(None, ...)``) and
-    pass the undeduped frame as ``batch``, so the touched collect does not
-    run the dedup shuffle.
+    ones. SCD1 tables dedup ``rows`` first (:func:`_dedup_ids`) and pass
+    the undeduped frame as ``batch``, so the touched collect does not run
+    the dedup shuffle.
 
     Returns the partitions the commit rewrote: the touched set, or for a
     new table the partitions ``rows`` created (read from the written
@@ -253,12 +267,25 @@ def _upsert_touched(
     return touched
 
 
+def _dedup_ids(rows: DataFrame, keys: list[str]) -> DataFrame:
+    """The SCD1 dedup of a batch's rows before their upsert: one row per
+    ``keys`` among the numbered ids (``scd1_merge``'s dedup window), and
+    every NULL-id row kept. NULL is not an identity: the window would put
+    every NULL id (``keys[0]``) in one group and store one of several
+    NULL-id docs that all survived their ingest."""
+    numbered = F.col(keys[0]).isNotNull()
+    return scd1_merge(None, rows.filter(numbered), keys).unionByName(
+        rows.filter(F.col(keys[0]).isNull())
+    )
+
+
 def _emit_ingest_facts(
     store,
     run_id: str,
-    n_batch: int,
-    dropped: dict[str, int],
+    n_batch,
+    dropped: dict,
     buckets: dict[str, int],
+    extra: dict[str, int] | None = None,
 ) -> None:
     """Land one ingest's decision summary as K7 fact rows (r17, VERDICT
     r16 item 6 — the reference's status/fact pattern, Task.scala:76-99,
@@ -272,22 +299,208 @@ def _emit_ingest_facts(
     without an :class:`~..observability.ObservabilityStore`; every
     count lands on frames the ingest already materialized (persisted
     drop sets, the batch's cached feature frame), so the facts cost no
-    extra pass over the corpus."""
+    extra pass over the corpus. ``n_batch`` and the ``dropped`` values
+    are counts or frames, counted here; ``extra`` facts land last."""
     obs = getattr(store, "observability", None)
     if obs is None:
         return
+
+    def n_of(x) -> int:
+        return x.count() if isinstance(x, DataFrame) else int(x)
+
     task = f"{type(store).__name__}:{run_id}"
     pid = store.pipeline_id
-    obs.write_fact(pid, task, "ingest.n_batch", int(n_batch))
+    n_batch = n_of(n_batch)
+    obs.write_fact(pid, task, "ingest.n_batch", n_batch)
     for modality, n in sorted(dropped.items()):
-        obs.write_fact(pid, task, f"ingest.n_dropped.{modality}", int(n))
-        rate = (int(n) * 1_000_000) // int(n_batch) if n_batch else 0
-        obs.write_fact(
-            pid, task, f"ingest.drop_rate_ppm.{modality}", int(rate)
+        n = n_of(n)
+        obs.write_fact(pid, task, f"ingest.n_dropped.{modality}", n)
+        rate = (n * 1_000_000) // n_batch if n_batch else 0
+        obs.write_fact(pid, task, f"ingest.drop_rate_ppm.{modality}", rate)
+    for name, n in [
+        *((f"buckets_touched.{t}", n) for t, n in sorted(buckets.items())),
+        *(extra or {}).items(),
+    ]:
+        obs.write_fact(pid, task, f"ingest.{name}", int(n))
+
+
+class _IngestLifecycle(RunLedger):
+    """The one lifecycle every dedup store opens and ingests through (the
+    reference's ``Task`` wrapper, Task.scala:52-142, which records each
+    node's status and facts around its body). A store supplies only its
+    feature kernel, its drop rule and its tables in their order; the
+    ledger, the persist hygiene and the facts are written here once.
+
+    :meth:`_open` sets the session, the ``VersionedParquetStore``, the
+    ``_runs.json`` ledger, the observability sink (K7 facts; not layout,
+    so it stays out of the config guard) and the pipeline id, then adopts
+    an older config (``_ADOPTED_KEYS``) and runs the layout guard."""
+
+    # config keys added after a store kind first shipped: a stored config
+    # lacking exactly these keys is an older store of the same row layout,
+    # stamped in place (after ``_adopt_older_layout``) instead of failing
+    # the exact-equality guard
+    _ADOPTED_KEYS: tuple[str, ...] = ()
+
+    def _open(
+        self,
+        spark: SparkSession,
+        root: str,
+        config: dict,
+        observability,
+        pipeline_id: str,
+    ) -> None:
+        self.spark = spark
+        self.store = VersionedParquetStore(spark, root)
+        self._ledger_path = os.path.join(root, "_runs.json")
+        self.observability = observability
+        self.pipeline_id = pipeline_id
+        self._adopt_config(root, config)
+        _check_store_config(root, config)
+
+    def _adopt_config(self, root: str, config: dict) -> None:
+        """Stamp ``config`` over a stored one that differs only by missing
+        every ``_ADOPTED_KEYS`` key; any other mismatch is left for the
+        guard to name."""
+        path = os.path.join(root, "_config.json")
+        if not self._ADOPTED_KEYS or not os.path.exists(path):
+            return
+        with open(path) as f:
+            stored = json.load(f)
+        if stored == config or any(k in stored for k in self._ADOPTED_KEYS):
+            return
+        if {**stored, **{k: config[k] for k in self._ADOPTED_KEYS}} != config:
+            return
+        self._adopt_older_layout()
+        _atomic_write(path, json.dumps(config))
+
+    def _adopt_older_layout(self) -> None:
+        """Rewrite what an adopted older store lays out differently."""
+
+    def _run_ingest(
+        self, batch: DataFrame, run_id: str, features, step, n_batch=None
+    ) -> DataFrame | None:
+        """Run one ingest of ``batch`` as ``run_id``: None (store untouched)
+        when the ledger already holds the run; else persist the batch-side
+        frames ``features()`` returns, call ``step(*frames, hold)``, record
+        the run after its last table write, then emit the facts.
+
+        ``step`` decides the drops and writes the store's tables in order;
+        it returns ``(out, facts)``, ``facts`` being the keyword arguments
+        of :func:`_emit_ingest_facts` (``n_batch``, when given there, wins
+        over the caller's count, else the batch's). ``hold(frame)``
+        persists a frame this ingest owns: it is released if the ingest
+        fails; on success the step hands it out (``out._persisted_deps``)
+        or releases it.
+        The features are released either way — a failed store write must
+        not pin cached blocks in a long-lived foreachBatch session."""
+        if run_id in self.ingested_runs():
+            return None
+        frames = [f.persist() for f in features()]
+        held = []
+
+        def hold(frame: DataFrame) -> DataFrame:
+            held.append(frame.persist())
+            return frame
+
+        try:
+            out, facts = step(*frames, hold)
+            self._record_run(run_id)
+            # facts AFTER the ledger record (best-effort telemetry): a
+            # crash between the two loses one run's rows, where the other
+            # order would double-count the run on replay
+            if self.observability is not None:
+                facts.setdefault("n_batch", batch if n_batch is None else n_batch)
+                _emit_ingest_facts(self, run_id, **facts)
+            return out
+        except BaseException:
+            for frame in held:
+                frame.unpersist()
+            raise
+        finally:
+            for frame in frames:
+                frame.unpersist()
+
+    def _survivors(self, batch: DataFrame, drops: DataFrame) -> DataFrame:
+        """The batch rows whose id is not in the (persisted) drop set; they
+        carry it for ``dedup.unpersist_deps``."""
+        out = batch.join(F.broadcast(drops), self.id_col, "left_anti")
+        out._persisted_deps = [drops]
+        return out
+
+
+class _BandedStore(_IngestLifecycle):
+    """A store of one primary table (``_PRIMARY``: id-keyed features) and
+    a ``BANDS`` table of its LSH band rows (``_band_rows``, partitioned by
+    ``_BAND_PARTS``, whose last column is the band-hash ``bucket``). Bands
+    are a pure function of the primary table, committed after it."""
+
+    BANDS = "bands"
+    _PRIMARY: str
+    _BAND_PARTS: list[str]
+
+    def _band_rows(self, feats: DataFrame) -> DataFrame:
+        raise NotImplementedError
+
+    def _store_sides(
+        self, feats: DataFrame, new_bands: DataFrame
+    ) -> tuple[DataFrame | None, DataFrame | None, list]:
+        """The pruned store-side frames the ingest drop join consumes
+        (r16, shared with :class:`CrossModalPairStore` so it runs the
+        IDENTICAL pruning): ``(stored, store_bands, batch_buckets)`` — the
+        primary table minus the batch's own ids (replay safety), the band
+        table pruned to the batch's own band-hash buckets (manual-DPP
+        shape, operators/joins.py:66; the ``buckets_touched.bands`` fact),
+        and ``store_bands`` None when the table is absent (the drop join
+        then derives the stored bands in-plan)."""
+        if not self.store.exists(self._PRIMARY):
+            return None, None, []
+        batch_ids = feats.select(self.id_col)
+        stored = self.store.read(self._PRIMARY).join(
+            batch_ids, self.id_col, "left_anti"
         )
-    for table, n in sorted(buckets.items()):
-        obs.write_fact(
-            pid, task, f"ingest.buckets_touched.{table}", int(n)
+        batch_buckets = distinct_values(new_bands, "bucket")
+        store_bands = None
+        if self.store.exists(self.BANDS):
+            store_bands = (
+                self.store.read(self.BANDS)
+                .filter(F.col("bucket").isin(batch_buckets))
+                .join(batch_ids, self.id_col, "left_anti")
+            )
+        return stored, store_bands, batch_buckets
+
+    def _commit_bands(
+        self,
+        rows: DataFrame,
+        new_bands: DataFrame,
+        touched: list,
+        had_primary: bool,
+    ) -> None:
+        """The band commit, after the primary table's: ``rows`` (the
+        batch's band rows as stored) upsert the ``touched`` partitions of
+        the first band column. With the band table missing, the first
+        ingest writes the batch's ``new_bands``; beside a primary table
+        that held rows before this ingest (``had_primary``: a crash
+        between the two writes, r11 review) the table is rebuilt from the
+        primary table instead, or every earlier id would stay bandless."""
+        if self.store.exists(self.BANDS):
+            _upsert_touched(
+                self.store, self.BANDS, rows, self.id_col, self._BAND_PARTS,
+                touched=touched, batch=new_bands,
+            )
+        elif had_primary:
+            self.rebuild_bands()
+        else:
+            self.store.write(new_bands, self.BANDS, partition_by=self._BAND_PARTS)
+
+    def rebuild_bands(self) -> None:
+        """Regenerate the band table from the primary table, reaping any
+        ghost band rows — the OPTIMIZE/auto-compact analog for a banded
+        store, and the heal of a missing band table."""
+        self.store.write(
+            self._band_rows(self.store.read(self._PRIMARY)),
+            self.BANDS,
+            partition_by=self._BAND_PARTS,
         )
 
 
@@ -426,7 +639,7 @@ def minhash_batch_pairs(
     return intra_pairs.unionByName(store_pairs)
 
 
-class MinhashSignatureStore(RunLedger):
+class MinhashSignatureStore(_BandedStore):
     """Durable cross-run minhash dedup state.
 
     Tables (both ``VersionedParquetStore`` snapshots under ``root``):
@@ -458,7 +671,8 @@ class MinhashSignatureStore(RunLedger):
     """
 
     SIGS = "sigs"
-    BANDS = "bands"
+    _PRIMARY = SIGS
+    _BAND_PARTS = ["bucket"]
 
     def __init__(
         self,
@@ -476,8 +690,6 @@ class MinhashSignatureStore(RunLedger):
         observability=None,
         pipeline_id: str = "ingest",
     ):
-        self.spark = spark
-        self.store = VersionedParquetStore(spark, root)
         self.id_col = id_col
         self.text_col = text_col
         self.num_hashes = num_hashes
@@ -487,12 +699,8 @@ class MinhashSignatureStore(RunLedger):
         self.jaccard_threshold = jaccard_threshold
         self.n_buckets = n_buckets
         self.sig_bucket_width = sig_bucket_width
-        # K7 decision-fact sink (r17) — observability is NOT layout, so
-        # it stays out of the _check_store_config dict
-        self.observability = observability
-        self.pipeline_id = pipeline_id
-        self._ledger_path = os.path.join(root, "_runs.json")
-        _check_store_config(
+        self._open(
+            spark,
             root,
             {
                 "kind": "minhash_sigs",
@@ -504,6 +712,8 @@ class MinhashSignatureStore(RunLedger):
                 "n_buckets": n_buckets,
                 "sig_bucket_width": sig_bucket_width,
             },
+            observability,
+            pipeline_id,
         )
 
     # -- signature plumbing ------------------------------------------------
@@ -558,33 +768,6 @@ class MinhashSignatureStore(RunLedger):
             self._with_sig_bucket(sigs), self.SIGS, partition_by=["sig_bucket"]
         )
 
-    def _store_sides(
-        self, sigs_new: DataFrame, new_bands: DataFrame
-    ) -> tuple[DataFrame | None, DataFrame | None, list]:
-        """The pruned store-side frames the ingest drop join consumes
-        (r16, factored out so :class:`CrossModalPairStore` runs the
-        IDENTICAL pruning): ``(store_sigs, store_bands, batch_buckets)``
-        — stored signatures minus the batch's own ids (replay safety),
-        the band table pruned to the batch's own band-hash buckets (the
-        list is also the band write's partition-delta touched set), and
-        ``store_bands`` None when the table is absent (the heal path
-        derives bands in-plan)."""
-        if not self.store.exists(self.SIGS):
-            return None, None, []
-        batch_ids = sigs_new.select(self.id_col)
-        store_sigs = self.store.read(self.SIGS).join(
-            batch_ids, self.id_col, "left_anti"
-        )
-        batch_buckets = distinct_values(new_bands, "bucket")
-        store_bands = None
-        if self.store.exists(self.BANDS):
-            store_bands = (
-                self.store.read(self.BANDS)
-                .filter(F.col("bucket").isin(batch_buckets))
-                .join(batch_ids, self.id_col, "left_anti")
-            )
-        return store_sigs, store_bands, batch_buckets
-
     # -- the operation -----------------------------------------------------
     def ingest(
         self,
@@ -611,121 +794,67 @@ class MinhashSignatureStore(RunLedger):
         (the releasable-state form; a long-running foreachBatch stream
         would otherwise accumulate one pinned cache per micro-batch).
         """
-        if run_id in self.ingested_runs():
-            return None
-        sigs_new = (
-            signatures if signatures is not None else self._signatures(batch)
-        ).persist()
-        owned_drops = drops is None
-        # persist hygiene (r17, closing the gap the image twin fixed in
-        # r14): a failure between persist() and the trailing unpersist
-        # (e.g. a failed store write) must not leak cached blocks in a
-        # long-lived session — the Bm25Index.append try/finally
-        # convention. ``drops`` unpersists only on the exception path
-        # (and only if owned here): on success it is handed out live via
-        # ``_persisted_deps``.
-        try:
+        def step(sigs_new, hold):
             new_bands = self._band_rows(sigs_new)
-            # pruning factored into _store_sides (r16): store side excludes
-            # THIS batch's ids (replay safety) and the band scan directory-
-            # prunes to the batch's own buckets (manual-DPP shape,
-            # operators/joins.py:66); the heal path (BANDS absent with SIGS
-            # present, r11 review) rides store_bands=None.
             store_sigs, store_bands, batch_buckets = self._store_sides(
                 sigs_new, new_bands
             )
-            had_sigs = store_sigs is not None
-            if drops is None:
-                # materialize the (tiny) drop set now: the survivor plan must
-                # stay valid after sigs_new unpersists at the end of this
-                # call. persist(), NOT localCheckpoint: checkpoint blocks
-                # free only via JVM GC — the caller releases via
-                # unpersist_deps(survivors) (CLAUDE.md releasable-state rule).
-                # ``drops=`` (r16): a caller-provided PERSISTED set (the
-                # loser column of minhash_batch_pairs over _store_sides —
-                # the identical join) skips this pass instead of running it
-                # twice (the CrossModalPairStore composition).
-                drops = minhash_batch_drops(
-                    store_sigs,
-                    sigs_new,
-                    self.id_col,
-                    self.num_hashes,
-                    self.bands,
-                    self.jaccard_threshold,
-                    store_bands_df=store_bands,
-                ).persist()
-                drops.count()  # materialize while sigs_new is still cached
-            survivors = batch.join(F.broadcast(drops), self.id_col, "left_anti")
-            survivors._persisted_deps = [drops]
-
-            # durable state: SCD1-upsert ALL batch signatures (dropped docs
-            # included — see module docstring) and their band rows. The sigs
-            # table is partitioned by sig_bucket = f(id) (r9, VERDICT r8 item
-            # 1): only the batch ids' own buckets are rewritten, so the
-            # per-ingest write cost tracks the BATCH, not the store, and a
-            # re-ingested row lands exactly on top of its old partition.
+            # the (tiny) drop set is materialized while sigs_new is still
+            # cached: the survivor plan must stay valid after the
+            # lifecycle releases it. persist(), NOT localCheckpoint
+            # (checkpoint blocks free only via JVM GC; CLAUDE.md
+            # releasable-state rule). ``drops=`` (r16): a caller-provided
+            # PERSISTED set (the loser column of minhash_batch_pairs over
+            # _store_sides — the identical join) skips this pass.
+            dropped = drops
+            if dropped is None:
+                dropped = hold(
+                    minhash_batch_drops(
+                        store_sigs, sigs_new, self.id_col, self.num_hashes,
+                        self.bands, self.jaccard_threshold,
+                        store_bands_df=store_bands,
+                    )
+                )
+                dropped.count()
+            # durable state: upsert ALL batch signatures (dropped docs
+            # included — see module docstring) into the batch ids' own
+            # sig buckets (r9, VERDICT r8 item 1: a pure function of the
+            # id, so write cost tracks the BATCH and a re-ingested row
+            # lands on top of its old partition), then their band rows
+            # into the batch's own band-hash buckets (r8). Caveat, exactly
+            # like Delta tombstones: a RE-INGESTED doc whose band moves to
+            # another bucket leaves its old band row there as a GHOST —
+            # harmless (band rows only GENERATE candidates; verification
+            # scores against the SCD1-fresh sigs) and reaped by
+            # ``rebuild_bands``. Every old row of a batch id in the touched
+            # buckets goes (ADVICE r8), so a re-ingest reaps its own ghosts
+            # there.
             sigs_new_b = self._with_sig_bucket(sigs_new)
             sig_buckets = _upsert_touched(
-                self.store, self.SIGS,
-                scd1_merge(None, sigs_new_b, [self.id_col]),
+                self.store, self.SIGS, _dedup_ids(sigs_new_b, [self.id_col]),
                 self.id_col, "sig_bucket", batch=sigs_new_b,
             )
-            if self.store.exists(self.BANDS):
-                # band upsert on the batch's own band-hash buckets (r8).
-                # Caveat, exactly like Delta tombstones: if a RE-INGESTED
-                # doc's new text moves a band to a different bucket, its old
-                # band row survives in the untouched bucket as a GHOST.
-                # Ghost rows are harmless to results — band rows only
-                # GENERATE candidates and verification always scores
-                # against the (globally SCD1-fresh) sigs table — and
-                # ``rebuild_bands`` reaps them. Every old row of a batch id
-                # in the touched buckets goes (ADVICE r8: a merge on
-                # (id, band) alone would keep a ghost beside the current
-                # row), so a re-ingest reaps its own ghosts there.
-                _upsert_touched(
-                    self.store, self.BANDS,
-                    scd1_merge(None, new_bands, [self.id_col, "band"]),
-                    self.id_col, "bucket",
-                    touched=batch_buckets, batch=new_bands,
-                )
-            elif had_sigs:
-                # heal path (r11 review): SIGS pre-existed but BANDS was
-                # missing (first-ingest crash between the two writes) —
-                # writing only the BATCH's bands would leave every stored
-                # sig bandless forever; rebuild from the (now merged)
-                # sigs table instead.
-                self.rebuild_bands()
-            else:
-                self.store.write(new_bands, self.BANDS, partition_by=["bucket"])
-            self._record_run(run_id)
-            # facts AFTER the ledger record (best-effort telemetry —
-            # the crash-replay never double-counts a run). n_batch is
-            # the BATCH's doc count, not the signature-row count: docs
-            # shorter than shingle_n produce no signature but are still
-            # batch members (and survive), so the sig count would skew
-            # the drop-rate denominator.
-            if self.observability is not None:
-                _emit_ingest_facts(
-                    self,
-                    run_id,
-                    # n_batch threads in from a composite that already
-                    # counted the batch (ADVICE r17: counting here would
-                    # re-run the unpersisted batch's upstream lineage)
-                    n_batch=n_batch if n_batch is not None
-                    else batch.count(),
-                    dropped={"text": drops.count()},
-                    buckets={
-                        "sigs": len(sig_buckets),
-                        "bands": len(batch_buckets),
-                    },
-                )
-            return survivors
-        except BaseException:
-            if drops is not None and owned_drops:
-                drops.unpersist()
-            raise
-        finally:
-            sigs_new.unpersist()
+            self._commit_bands(
+                _dedup_ids(new_bands, [self.id_col, "band"]), new_bands,
+                batch_buckets, store_sigs is not None,
+            )
+            # n_batch is the BATCH's doc count (the lifecycle's rule), not
+            # the signature-row count: docs shorter than shingle_n produce
+            # no signature but are still batch members (and survive)
+            return self._survivors(batch, dropped), {
+                "dropped": {"text": dropped},
+                "buckets": {"sigs": len(sig_buckets), "bands": len(batch_buckets)},
+            }
+
+        return self._run_ingest(
+            batch,
+            run_id,
+            lambda: [
+                signatures if signatures is not None else self._signatures(batch)
+            ],
+            step,
+            n_batch,
+        )
 
     def retire_ids_below(self, cutoff_id: int) -> None:
         """Retention/lifecycle delete: drop every doc with ``id <
@@ -751,14 +880,6 @@ class MinhashSignatureStore(RunLedger):
             self.id_col, cutoff_id, "sig_bucket",
         ):
             self.rebuild_bands()
-
-    def rebuild_bands(self) -> None:
-        """Maintenance compaction: regenerate the band table from the sigs
-        table (bands are a pure function of signatures), reaping any ghost
-        rows left by partition-delta ingests — the OPTIMIZE/auto-compact
-        analog for this store."""
-        sigs = self.store.read(self.SIGS)
-        self.store.write(self._band_rows(sigs), self.BANDS, partition_by=["bucket"])
 
 
 def embedding_batch_drops(
@@ -837,7 +958,7 @@ def embedding_batch_drops(
     )
 
 
-class EmbeddingDedupStore(RunLedger):
+class EmbeddingDedupStore(_IngestLifecycle):
     """Durable cross-run SEMANTIC dedup state — the embedding twin of
     :class:`MinhashSignatureStore`: a recurring ingest dedups today's
     batch of vectors against everything already ingested without
@@ -898,13 +1019,9 @@ class EmbeddingDedupStore(RunLedger):
             _resolve_centroids,
         )
 
-        self.spark = spark
-        self.store = VersionedParquetStore(spark, root)
         self.id_col = id_col
         self.vec_col = vec_col
         self.threshold = threshold
-        self.observability = observability
-        self.pipeline_id = pipeline_id
         # Trained coarse quantizer (kmeans_fit(...).unit_centroids) or the
         # data-blind random fallback — resolved by the shared similarity.py
         # helper (r11 review: the inline copy drifted from it). Must stay
@@ -914,8 +1031,8 @@ class EmbeddingDedupStore(RunLedger):
         self.centroids = _resolve_centroids(centroids, dim, n_cells, seed)
         self.n_buckets = n_buckets
         self.vec_bucket_width = vec_bucket_width
-        self._ledger_path = os.path.join(root, "_runs.json")
-        _check_store_config(
+        self._open(
+            spark,
             root,
             {
                 "kind": "embedding_vecs",
@@ -930,6 +1047,8 @@ class EmbeddingDedupStore(RunLedger):
                     [float(x) for x in c] for c in self.centroids
                 ],
             },
+            observability,
+            pipeline_id,
         )
 
     def _with_vec_bucket(self, df: DataFrame) -> DataFrame:
@@ -964,14 +1083,7 @@ class EmbeddingDedupStore(RunLedger):
         columns). None (store untouched) when ``run_id`` already ran.
         The result carries its persisted drop set via ``_persisted_deps``
         — release with ``dedup.unpersist_deps`` once consumed."""
-        if run_id in self.ingested_runs():
-            return None
-        assigned = self._assign(batch).persist()
-        # persist hygiene (r17 — the minhash/image twins' try/finally
-        # convention): a failed store write must not pin assigned/drops
-        # in a long-lived foreachBatch session
-        drops = None
-        try:
+        def step(assigned, hold):
             store_pruned = None
             if self.store.exists(self.VECS):
                 batch_ids = assigned.select(self.id_col)
@@ -988,14 +1100,14 @@ class EmbeddingDedupStore(RunLedger):
                     .filter(partition_in_filter(batch_cells, "cell", None))
                     .join(batch_ids, self.id_col, "left_anti")
                 )
-            # persist(), NOT localCheckpoint (CLAUDE.md releasable-state rule,
-            # r11 review): the caller releases via unpersist_deps(survivors)
-            drops = embedding_batch_drops(
-                store_pruned, assigned, self.id_col, self.vec_col, self.threshold
-            ).persist()
-            drops.count()  # materialize while assigned is still cached
-            survivors = batch.join(F.broadcast(drops), self.id_col, "left_anti")
-            survivors._persisted_deps = [drops]
+            # materialized while assigned is still cached
+            drops = hold(
+                embedding_batch_drops(
+                    store_pruned, assigned, self.id_col, self.vec_col,
+                    self.threshold,
+                )
+            )
+            drops.count()
             # vector upsert (r8; r10 layout): unlike band rows, stale
             # VECTORS are not candidates-only — drops score directly
             # against stored embeddings, so a ghost would be a correctness
@@ -1007,31 +1119,17 @@ class EmbeddingDedupStore(RunLedger):
             # and monotone ingest ids keep the write O(batch) at any store
             # size.
             vec_buckets = _upsert_touched(
-                self.store, self.VECS,
-                scd1_merge(None, assigned, [self.id_col]),
+                self.store, self.VECS, _dedup_ids(assigned, [self.id_col]),
                 self.id_col, ["vec_bucket", "cell"], batch=assigned,
             )
-            self._record_run(run_id)
-            # facts AFTER the ledger record (best-effort telemetry —
-            # the crash-replay never double-counts a run); n_batch is
-            # the batch's own row count, not the assigned-vector count
-            if self.observability is not None:
-                _emit_ingest_facts(
-                    self,
-                    run_id,
-                    # caller-threaded count when available (ADVICE r17)
-                    n_batch=n_batch if n_batch is not None
-                    else batch.count(),
-                    dropped={"embedding": drops.count()},
-                    buckets={"vecs": len(vec_buckets)},
-                )
-            return survivors
-        except BaseException:
-            if drops is not None:
-                drops.unpersist()
-            raise
-        finally:
-            assigned.unpersist()
+            return self._survivors(batch, drops), {
+                "dropped": {"embedding": drops},
+                "buckets": {"vecs": len(vec_buckets)},
+            }
+
+        return self._run_ingest(
+            batch, run_id, lambda: [self._assign(batch)], step, n_batch
+        )
 
     def retire_ids_below(self, cutoff_id: int) -> None:
         """Retention/lifecycle delete: drop every vector with ``id <
@@ -1361,7 +1459,7 @@ def media_frame_batch_drops(
     return intra_drops.union(store_drops).distinct()
 
 
-class ImageHashStore(RunLedger):
+class ImageHashStore(_BandedStore):
     """Durable cross-run PERCEPTUAL image dedup state (r13) — the media
     twin of :class:`MinhashSignatureStore` (text) and
     :class:`EmbeddingDedupStore` (vectors): a recurring ingest dedups
@@ -1390,7 +1488,8 @@ class ImageHashStore(RunLedger):
       tracks the batch, not the store. Re-ingested ids' old band rows
       vacate in their own fp_bucket's rewrite (bands are as fresh as
       fps); ghosts arise only from a crash between the two writes,
-      which the heal path rebuilds, and the Hamming verify reads fresh
+      which the shared band heal (``_BandedStore._commit_bands``)
+      rebuilds, and the Hamming verify reads fresh
       ``fps`` by id regardless. Retention drops whole fp_bucket dirs.
 
     Dropped (deduped-away) images keep their fingerprints, same as both
@@ -1418,8 +1517,15 @@ class ImageHashStore(RunLedger):
     """
 
     FPS = "fps"
-    BANDS = "bands"
+    _PRIMARY = FPS
+    _BAND_PARTS = ["fp_bucket", "bucket"]
     _KIND = "image_fps"  # config-guard kind; AudioHashStore overrides
+    # r14: the band_layout key is NOT part of the fingerprint space — only
+    # of the band table's directory layout — so a pre-r14 store (same
+    # config minus that key) migrates in place (its bands rebuilt) instead
+    # of failing the exact-equality guard (r14 ADVICE: __init__ used to
+    # raise before rebuild_bands was reachable, stranding old stores)
+    _ADOPTED_KEYS = ("band_layout",)
 
     def __init__(
         self,
@@ -1439,13 +1545,9 @@ class ImageHashStore(RunLedger):
         observability=None,
         pipeline_id: str = "ingest",
     ):
-        self.spark = spark
-        self.store = VersionedParquetStore(spark, root)
         self.id_col = id_col
         self.payload_col = payload_col
         self.hash_col = hash_col
-        self.observability = observability
-        self.pipeline_id = pipeline_id
         self.max_hamming = max_hamming
         self.blocks = blocks
         self.n_buckets = n_buckets
@@ -1454,18 +1556,11 @@ class ImageHashStore(RunLedger):
         self.frames = frames
         self.every_ms = every_ms
         self.min_matching_frames = min_matching_frames
-        self._ledger_path = os.path.join(root, "_runs.json")
         # hash_col/blocks/band buckets shape WHICH fingerprints are
         # stored and how candidates band/partition — mismatched reopens
         # would verify new batches against incomparable state or prune
         # away stored band rows; max_hamming / min_matching_frames are
-        # tunable query thresholds and deliberately excluded. The r14
-        # band_layout key is NOT part of the fingerprint space — only of
-        # the band table's directory layout — so a pre-r14 store (same
-        # config minus that key) migrates in place below instead of
-        # failing the exact-equality guard (r14 ADVICE: __init__ used to
-        # raise before rebuild_bands was reachable, stranding old
-        # stores).
+        # tunable query thresholds and deliberately excluded.
         cfg = {
             "kind": "media_frame_fps" if frames else self._KIND,
             "id_col": id_col,
@@ -1483,29 +1578,13 @@ class ImageHashStore(RunLedger):
         }
         if frames:
             cfg["every_ms"] = every_ms
-        self._migrate_band_layout(root, cfg)
-        _check_store_config(root, cfg)
+        self._open(spark, root, cfg, observability, pipeline_id)
 
-    def _migrate_band_layout(self, root: str, cfg: dict) -> None:
-        """In-place pre-r14 -> r14 band-layout migration: a stored config
-        identical to ``cfg`` except for the MISSING ``band_layout`` key
-        is the old single-level hash layout — same fingerprint space, so
-        the fps table carries over verbatim; only the band table's
-        directory shape changed. Rewrite it from fps (rebuild_bands) and
-        stamp the config. Any OTHER mismatch still fails loudly in
-        ``_check_store_config``."""
-        path = os.path.join(root, "_config.json")
-        if not os.path.exists(path):
-            return
-        with open(path) as f:
-            stored = json.load(f)
-        if stored == cfg or "band_layout" in stored:
-            return
-        if {**stored, "band_layout": cfg["band_layout"]} != cfg:
-            return  # a real mismatch — let the guard name the keys
+    def _adopt_older_layout(self) -> None:
+        """A pre-r14 store's bands lie in the old single-level hash
+        layout; its fps carry over verbatim, so rewrite the bands."""
         if self.store.exists(self.FPS):
             self.rebuild_bands()
-        _atomic_write(path, json.dumps(cfg))
 
     def _fingerprints(self, batch: DataFrame) -> DataFrame:
         from metadata_ingestion_framework_spark.operators.multimodal import (
@@ -1553,7 +1632,7 @@ class ImageHashStore(RunLedger):
             )
             # duplicate-batch-id tolerance (r14 ADVICE): the image face
             # collapses a batch carrying the same id twice via
-            # scd1_merge's pre-merge dedup; the frames face must do the
+            # _dedup_ids; the frames face must do the
             # same per (id, frame_ts) or the duplicate fp rows persist
             # and inflate media_frame_batch_drops' frame-match counts
             # multiplicatively through the (id, ts) re-attach joins
@@ -1583,33 +1662,6 @@ class ImageHashStore(RunLedger):
             extra_cols=extras + ("fp_bucket",),
         )
 
-    def _store_sides(
-        self, fps: DataFrame, new_bands: DataFrame
-    ) -> tuple[DataFrame | None, DataFrame | None, list]:
-        """The pruned store-side frames the ingest drop join consumes
-        (r16, factored out so :class:`CrossModalPairStore` runs the
-        IDENTICAL pruning): ``(store_fps, store_bands, batch_buckets)``
-        — store fingerprints minus the batch's own ids (replay safety),
-        the band table directory-pruned to the batch's own band buckets
-        (the ``ingest.buckets_touched.bands`` fact), and ``store_bands``
-        None when the table is absent (the first-ingest-crash heal path
-        derives bands in-plan)."""
-        if not self.store.exists(self.FPS):
-            return None, None, []
-        batch_ids = fps.select(self.id_col)
-        store_fps = self.store.read(self.FPS).join(
-            batch_ids, self.id_col, "left_anti"
-        )
-        batch_buckets = distinct_values(new_bands, "bucket")
-        store_bands = None
-        if self.store.exists(self.BANDS):
-            store_bands = (
-                self.store.read(self.BANDS)
-                .filter(F.col("bucket").isin(batch_buckets))
-                .join(batch_ids, self.id_col, "left_anti")
-            )
-        return store_fps, store_bands, batch_buckets
-
     def ingest(
         self,
         batch: DataFrame,
@@ -1631,46 +1683,29 @@ class ImageHashStore(RunLedger):
         :meth:`_store_sides` — the identical join) — the candidate +
         verify pass is then skipped instead of run twice; the image
         face only (the frames drop rule differs)."""
-        if run_id in self.ingested_runs():
-            return None
         if drops is not None and self.frames:
             raise ValueError("drops= is image-face only (frames differ)")
-        fps = (
-            fingerprints
-            if fingerprints is not None
-            else self._fingerprints(batch)
-        ).persist()
-        owned_drops = drops is None
-        # persist hygiene (r14 ADVICE): any failure between persist()
-        # and the trailing unpersist (e.g. a failed store write) must
-        # not leak cached blocks in a long-lived session — the
-        # Bm25Index.append try/finally convention. ``drops`` unpersists
-        # only on the exception path (and only if owned here): on
-        # success it is handed out live via ``_persisted_deps``.
-        try:
+
+        def step(fps, hold):
             new_bands = self._band_rows(fps)
             store_fps, store_bands, batch_buckets = self._store_sides(
                 fps, new_bands
             )
-            if drops is None:
-                if self.frames:
-                    drops = media_frame_batch_drops(
+            dropped = drops
+            if dropped is None:
+                rule, kw = (
+                    (media_frame_batch_drops,
+                     {"min_matching_frames": self.min_matching_frames})
+                    if self.frames else (image_hash_batch_drops, {})
+                )
+                dropped = hold(
+                    rule(
                         store_fps, fps, self.id_col, self.hash_col,
                         self.max_hamming, self.blocks,
-                        store_bands_df=store_bands,
-                        min_matching_frames=self.min_matching_frames,
-                    ).persist()
-                else:
-                    drops = image_hash_batch_drops(
-                        store_fps, fps, self.id_col, self.hash_col,
-                        self.max_hamming, self.blocks,
-                        store_bands_df=store_bands,
-                    ).persist()
-                drops.count()  # materialize while fps is still cached
-            survivors = batch.join(
-                F.broadcast(drops), self.id_col, "left_anti"
-            )
-            survivors._persisted_deps = [drops]
+                        store_bands_df=store_bands, **kw,
+                    )
+                )
+                dropped.count()  # materialize while fps is still cached
             # fingerprint upsert on the batch ids' RANGE buckets. Frames
             # face: one row per (id, frame_ts) — an SCD1 keyed on id would
             # collapse a video to one frame, and the upsert drops EVERY old
@@ -1678,68 +1713,38 @@ class ImageHashStore(RunLedger):
             # frames).
             fp_buckets = _upsert_touched(
                 self.store, self.FPS,
-                fps if self.frames else scd1_merge(None, fps, [self.id_col]),
+                fps if self.frames else _dedup_ids(fps, [self.id_col]),
                 self.id_col, "fp_bucket", batch=fps,
             )
-            if store_fps is not None and self.store.exists(self.BANDS):
-                # band upsert on the same id-range buckets (r14): a
-                # band-hash-keyed delta degenerates to a full band-table
-                # rewrite the moment a batch spans more distinct
-                # (blk, blk_val) values than there are buckets (always,
-                # for a few hundred images) — the r9 minhash hash-bucket
-                # lesson, measured 10.3s of a 27.7s ingest at a 50k store.
-                # Re-ingested ids' old band rows vacate in the same rewrite
-                # (bands are exactly as fresh as fps; ghosts only arise
-                # from a crash between the two writes, which the heal path
-                # rebuilds).
-                _upsert_touched(
-                    self.store, self.BANDS, new_bands, self.id_col,
-                    ["fp_bucket", "bucket"], touched=fp_buckets,
-                )
-            else:
-                # first ingest, or the heal path (BANDS missing beside
-                # stored fps): derive bands from the written fps table
-                self.rebuild_bands()
-            self._record_run(run_id)
-            # facts AFTER the ledger record (best-effort telemetry —
-            # the crash-replay never double-counts a run). n_batch is
-            # the BATCH's media count, not the fingerprint-row count:
-            # undecodable payloads produce no fingerprint but are still
-            # batch members, and the frames face fingerprints per
-            # (id, frame_ts) while drops are media ids.
-            if self.observability is not None:
-                _emit_ingest_facts(
-                    self,
-                    run_id,
-                    # caller-threaded count when available (ADVICE r17)
-                    n_batch=n_batch if n_batch is not None
-                    else batch.count(),
-                    dropped={
-                        ("frames" if self.frames else "media"): drops.count()
-                    },
-                    buckets={
-                        "fps": len(fp_buckets),
-                        "bands": len(batch_buckets),
-                    },
-                )
-            return survivors
-        except BaseException:
-            if drops is not None and owned_drops:
-                drops.unpersist()
-            raise
-        finally:
-            fps.unpersist()
+            # band upsert on the same id-range buckets (r14): a
+            # band-hash-keyed delta degenerates to a full band-table
+            # rewrite the moment a batch spans more distinct (blk, blk_val)
+            # values than there are buckets (always, for a few hundred
+            # images) — the r9 minhash hash-bucket lesson, measured 10.3s
+            # of a 27.7s ingest at a 50k store. Re-ingested ids' old band
+            # rows vacate in the same rewrite (bands are exactly as fresh
+            # as fps).
+            self._commit_bands(
+                new_bands, new_bands, fp_buckets, store_fps is not None
+            )
+            # n_batch is the BATCH's media count (the lifecycle's rule),
+            # not the fingerprint-row count: undecodable payloads produce
+            # no fingerprint but are still batch members, and the frames
+            # face fingerprints per (id, frame_ts) while drops are media ids
+            return self._survivors(batch, dropped), {
+                "dropped": {("frames" if self.frames else "media"): dropped},
+                "buckets": {"fps": len(fp_buckets), "bands": len(batch_buckets)},
+            }
 
-    def rebuild_bands(self) -> None:
-        """Rebuild the band table from the always-fresh fps table — the
-        minhash-store maintenance op. Since r14 re-ingests vacate their
-        own stale band rows (id-range delta), so this is only needed to
-        heal a crash between the fps and band writes or to migrate a
-        band-parameter change."""
-        self.store.write(
-            self._band_rows(self.store.read(self.FPS)),
-            self.BANDS,
-            partition_by=["fp_bucket", "bucket"],
+        return self._run_ingest(
+            batch,
+            run_id,
+            lambda: [
+                fingerprints if fingerprints is not None
+                else self._fingerprints(batch)
+            ],
+            step,
+            n_batch,
         )
 
     def retire_ids_below(self, cutoff_id: int) -> None:
@@ -1831,7 +1836,7 @@ def paragraph_batch_removals(
     return dups.unionByName(store_hits).distinct()
 
 
-class ParagraphHashStore(RunLedger):
+class ParagraphHashStore(_IngestLifecycle):
     """Durable cross-run PARAGRAPH dedup state — the CCNet first stage
     (Wenzek et al. 2020 dedup paragraph hashes against previous crawl
     shards; Penedo et al. 2023 keep it before fuzzy dedup) as a store:
@@ -1887,6 +1892,10 @@ class ParagraphHashStore(RunLedger):
 
     PARAS = "paras"
     BLOOM = "parbloom"
+    # a pre-r16 store (config without the bloom keys, r16 review) has the
+    # same row layout and no ``parbloom`` table yet, so ANY bloom geometry
+    # is adoptable: the sidecar builds lazily on the next ingest
+    _ADOPTED_KEYS = ("bloom_bits", "bloom_hashes")
 
     def __init__(
         self,
@@ -1901,17 +1910,12 @@ class ParagraphHashStore(RunLedger):
         observability=None,
         pipeline_id: str = "ingest",
     ):
-        self.spark = spark
-        self.store = VersionedParquetStore(spark, root)
         self.id_col = id_col
         self.text_col = text_col
         self.n_buckets = n_buckets
         self.par_bucket_width = par_bucket_width
-        self.observability = observability
-        self.pipeline_id = pipeline_id
         self.bloom_bits = int(bloom_bits)
         self.bloom_hashes = int(bloom_hashes)
-        self._ledger_path = os.path.join(root, "_runs.json")
         cfg = {
             "kind": "paragraph_hashes",
             "id_col": id_col,
@@ -1923,32 +1927,7 @@ class ParagraphHashStore(RunLedger):
             "bloom_bits": self.bloom_bits,
             "bloom_hashes": self.bloom_hashes,
         }
-        self._migrate_bloom_config(root, cfg)
-        _check_store_config(root, cfg)
-
-    def _migrate_bloom_config(self, root: str, cfg: dict) -> None:
-        """In-place pre-r16 config migration (the ImageHashStore
-        ``_migrate_band_layout`` precedent — r16 review): a stored
-        config identical to ``cfg`` except for the MISSING bloom keys is
-        a pre-sidecar store — same row layout, no ``parbloom`` table
-        yet, so ANY bloom geometry is adoptable (the sidecar builds
-        lazily on the next ingest). Stamp the keys instead of bricking
-        every pre-r16 store on the exact-equality guard. Any other
-        mismatch still fails loudly in ``_check_store_config``."""
-        path = os.path.join(root, "_config.json")
-        if not os.path.exists(path):
-            return
-        with open(path) as f:
-            stored = json.load(f)
-        if stored == cfg or "bloom_bits" in stored:
-            return
-        if {
-            **stored,
-            "bloom_bits": cfg["bloom_bits"],
-            "bloom_hashes": cfg["bloom_hashes"],
-        } != cfg:
-            return  # a real mismatch — let the guard name the keys
-        _atomic_write(path, json.dumps(cfg))
+        self._open(spark, root, cfg, observability, pipeline_id)
 
     # -- bloom sidecar -----------------------------------------------------
     def _bloom_positions(self, gh_rows: DataFrame) -> DataFrame:
@@ -2022,16 +2001,7 @@ class ParagraphHashStore(RunLedger):
             _paragraph_rows,
         )
 
-        if run_id in self.ingested_runs():
-            return None
-        paras_new = _paragraph_rows(
-            batch, self.text_col, self.id_col
-        ).persist()
-        # persist hygiene (r17 — the minhash/image twins' try/finally
-        # convention): a failed store write must not pin paras_new/dups
-        # in a long-lived foreachBatch session
-        dups = None
-        try:
+        def step(paras_new, hold):
             batch_ids = batch.select(self.id_col).distinct()
             store_paras = None
             if self.store.exists(self.PARAS):
@@ -2053,9 +2023,9 @@ class ParagraphHashStore(RunLedger):
                     )
             # materialize the (batch-bounded) removal set while paras_new is
             # cached; persist(), not localCheckpoint (releasable-state rule)
-            dups = paragraph_batch_removals(
-                store_paras, paras_new, self.id_col
-            ).persist()
+            dups = hold(
+                paragraph_batch_removals(store_paras, paras_new, self.id_col)
+            )
             dups.count()
             rm = F.broadcast(
                 dups.groupBy(self.id_col).agg(
@@ -2065,6 +2035,7 @@ class ParagraphHashStore(RunLedger):
             out = _apply_paragraph_removals(
                 batch, rm, self.text_col, self.id_col
             )
+            out._persisted_deps = [dups]
 
             # durable state: the surviving rows only — each batch hash keeps
             # exactly one owner row (the removed copies are reproducible from
@@ -2119,33 +2090,26 @@ class ParagraphHashStore(RunLedger):
                     self.BLOOM,
                     partition_by=["par_bucket"],
                 )
-            self._record_run(run_id)
-            # facts AFTER the ledger record (best-effort telemetry —
-            # the crash-replay never double-counts a run). The counts
-            # are paragraph-grain (this store's decision unit); the
-            # touched-bucket fact is the buckets the write physically
-            # rewrote (``_upsert_touched``'s return). On a later write
-            # that is the BATCH IDS' bucket set, not the surviving rows'
-            # (a fully-deduped re-ingest still rewrites its bucket, which
-            # is exactly the write amplification the metric watches); on
-            # the first write it is the buckets the surviving rows
-            # created, so a doc deduped away inside that batch adds none.
-            if self.observability is not None:
-                _emit_ingest_facts(
-                    self,
-                    run_id,
-                    n_batch=paras_new.count(),
-                    dropped={"paragraph": dups.count()},
-                    buckets={"paras": len(buckets)},
-                )
-            out._persisted_deps = [dups]
-            return out
-        except BaseException:
-            if dups is not None:
-                dups.unpersist()
-            raise
-        finally:
-            paras_new.unpersist()
+            # The counts are paragraph-grain (this store's decision unit).
+            # The touched-bucket fact is the buckets the write physically
+            # rewrote (``_upsert_touched``'s return). On a later write that
+            # is the BATCH IDS' bucket set, not the surviving rows' (a
+            # fully-deduped re-ingest still rewrites its bucket, which is
+            # exactly the write amplification the metric watches); on the
+            # first write it is the buckets the surviving rows created, so
+            # a doc deduped away inside that batch adds none.
+            return out, {
+                "n_batch": paras_new,
+                "dropped": {"paragraph": dups},
+                "buckets": {"paras": len(buckets)},
+            }
+
+        return self._run_ingest(
+            batch,
+            run_id,
+            lambda: [_paragraph_rows(batch, self.text_col, self.id_col)],
+            step,
+        )
 
     def retire_ids_below(self, cutoff_id: int) -> None:
         """Retention: drop every doc's paragraph rows below the id cutoff
@@ -2225,7 +2189,7 @@ def crossmodal_pair_decisions(
     )
 
 
-class CrossModalPairStore(RunLedger):
+class CrossModalPairStore(_IngestLifecycle):
     """Durable cross-run (caption, image) PAIR dedup state — the LAION/
     DataComp curation rule applied ACROSS ingests (r16, VERDICT r15
     item 4): a training pair is a duplicate candidate when its IMAGE is
@@ -2275,10 +2239,22 @@ class CrossModalPairStore(RunLedger):
         observability=None,
         pipeline_id: str = "ingest",
     ):
-        self.spark = spark
         self.id_col = id_col
-        self.observability = observability
-        self.pipeline_id = pipeline_id
+        self._open(
+            spark,
+            root,
+            {
+                "kind": "crossmodal_pairs",
+                "id_col": id_col,
+                # thresholds shape the DECISIONS this store has already
+                # emitted — reopening under different rules would mix
+                # incomparable decision histories
+                "max_hamming": max_hamming,
+                "jaccard_threshold": jaccard_threshold,
+            },
+            observability,
+            pipeline_id,
+        )
         self.img = ImageHashStore(
             spark,
             os.path.join(root, "image"),
@@ -2309,19 +2285,6 @@ class CrossModalPairStore(RunLedger):
             observability=observability,
             pipeline_id=pipeline_id,
         )
-        self._ledger_path = os.path.join(root, "_runs.json")
-        _check_store_config(
-            root,
-            {
-                "kind": "crossmodal_pairs",
-                "id_col": id_col,
-                # thresholds shape the DECISIONS this store has already
-                # emitted — reopening under different rules would mix
-                # incomparable decision histories
-                "max_hamming": max_hamming,
-                "jaccard_threshold": jaccard_threshold,
-            },
-        )
 
     def ingest(self, batch: DataFrame, run_id: str) -> DataFrame | None:
         """Decide ``batch``'s pairs against both stores and itself;
@@ -2333,18 +2296,7 @@ class CrossModalPairStore(RunLedger):
             unpersist_deps,
         )
 
-        if run_id in self.ingested_runs():
-            return None
-        fps = self.img._fingerprints(batch).persist()
-        sigs = self.txt._signatures(batch).persist()
-        # persist hygiene (r17 ADVICE): ip/tp/img_drops/txt_drops/
-        # decisions must unpersist on ANY failure path — an exception
-        # between their persists and the sub-store merges would
-        # otherwise pin up to five cached frames per failed micro-batch
-        # in a long-lived foreachBatch session. On success, decisions is
-        # the only survivor (handed out via _persisted_deps).
-        ip = tp = img_drops = txt_drops = decisions = None
-        try:
+        def step(fps, sigs, hold):
             # store sides via each face's OWN pruning helper (r16 review
             # — one code path, no drift), pairs via the pair primitives,
             # and the per-modality drop sets derived as the pairs' loser
@@ -2353,38 +2305,38 @@ class CrossModalPairStore(RunLedger):
             store_fps, store_ibands, _ = self.img._store_sides(
                 fps, self.img._band_rows(fps)
             )
-            ip = image_hash_batch_pairs(
-                store_fps, fps, self.id_col, self.img.hash_col,
-                self.img.max_hamming, self.img.blocks,
-                store_bands_df=store_ibands,
-            ).persist()
+            ip = hold(
+                image_hash_batch_pairs(
+                    store_fps, fps, self.id_col, self.img.hash_col,
+                    self.img.max_hamming, self.img.blocks,
+                    store_bands_df=store_ibands,
+                )
+            )
             store_sigs, store_tbands, _ = self.txt._store_sides(
                 sigs, self.txt._band_rows(sigs)
             )
-            tp = minhash_batch_pairs(
-                store_sigs, sigs, self.id_col, self.txt.num_hashes,
-                self.txt.bands, self.txt.jaccard_threshold,
-                store_bands_df=store_tbands,
-            ).persist()
-            img_drops = (
-                ip.select(F.col("__loser").alias(self.id_col))
-                .distinct()
-                .persist()
+            tp = hold(
+                minhash_batch_pairs(
+                    store_sigs, sigs, self.id_col, self.txt.num_hashes,
+                    self.txt.bands, self.txt.jaccard_threshold,
+                    store_bands_df=store_tbands,
+                )
             )
-            txt_drops = (
-                tp.select(F.col("__loser").alias(self.id_col))
-                .distinct()
-                .persist()
+            img_drops = hold(
+                ip.select(F.col("__loser").alias(self.id_col)).distinct()
             )
-            decisions = crossmodal_pair_decisions(tp, ip).persist()
+            txt_drops = hold(
+                tp.select(F.col("__loser").alias(self.id_col)).distinct()
+            )
+            decisions = hold(crossmodal_pair_decisions(tp, ip))
             # materialize while fps/sigs are cached; keep the counts —
             # the K7 facts need them AFTER the sub-store ingests (whose
-            # finally blocks unpersist fps/sigs — a later fps.count()
-            # would re-run the image-decode kernel) and after the drop
-            # frames are released
+            # lifecycles release fps/sigs — a later fps.count() would
+            # re-run the image-decode kernel) and after the drop frames
+            # are released. n_batch is the batch doc count, not the fps
+            # row count (undecodable payloads produce no fingerprint but
+            # are still batch members).
             n_pairs = decisions.count()
-            # batch doc count, not fps row count (undecodable payloads
-            # produce no fingerprint but are still batch members)
             n_batch = batch.count()
             n_img_drops = img_drops.count()
             n_txt_drops = txt_drops.count()
@@ -2399,54 +2351,31 @@ class CrossModalPairStore(RunLedger):
             # survivors' _persisted_deps; on the crash-heal replay (the
             # sub-store ledger already has run_id, ingest returns None)
             # nothing carries them, so release directly (r17 ADVICE).
-            s_img = self.img.ingest(
-                batch, run_id, fingerprints=fps, drops=img_drops,
-                n_batch=n_batch,
-            )
-            if s_img is not None:
-                unpersist_deps(s_img)
-            else:
-                img_drops.unpersist()
-            s_txt = self.txt.ingest(
-                batch, run_id, signatures=sigs, drops=txt_drops,
-                n_batch=n_batch,
-            )
-            if s_txt is not None:
-                unpersist_deps(s_txt)
-            else:
-                txt_drops.unpersist()
-            self._record_run(run_id)
-            # facts AFTER the ledger record (best-effort telemetry): a
-            # crash between record and facts loses one run's rows, but
-            # a crash the other way around would double-count the run
-            # on replay — the ledger stays the source of truth
-            if self.observability is not None:
-                _emit_ingest_facts(
-                    self,
-                    run_id,
-                    n_batch=n_batch,
-                    dropped={
-                        "image": n_img_drops,
-                        "caption": n_txt_drops,
-                    },
-                    buckets={},
+            for face, kernel, drops in (
+                (self.img, {"fingerprints": fps}, img_drops),
+                (self.txt, {"signatures": sigs}, txt_drops),
+            ):
+                merged = face.ingest(
+                    batch, run_id, drops=drops, n_batch=n_batch, **kernel
                 )
-                self.observability.write_fact(
-                    self.pipeline_id,
-                    f"{type(self).__name__}:{run_id}",
-                    "ingest.n_pairs",
-                    int(n_pairs),
-                )
+                if merged is not None:
+                    unpersist_deps(merged)
+                else:
+                    drops.unpersist()
             decisions._persisted_deps = [decisions]
-            return decisions
-        except BaseException:
-            for frame in (ip, tp, img_drops, txt_drops, decisions):
-                if frame is not None:
-                    frame.unpersist()
-            raise
-        finally:
-            fps.unpersist()
-            sigs.unpersist()
+            return decisions, {
+                "n_batch": n_batch,
+                "dropped": {"image": n_img_drops, "caption": n_txt_drops},
+                "buckets": {},
+                "extra": {"n_pairs": n_pairs},
+            }
+
+        return self._run_ingest(
+            batch,
+            run_id,
+            lambda: [self.img._fingerprints(batch), self.txt._signatures(batch)],
+            step,
+        )
 
     def retire_ids_below(self, cutoff_id: int) -> None:
         """Retention delegates to both faces (zero-rewrite bucket drops

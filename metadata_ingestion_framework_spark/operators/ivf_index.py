@@ -44,13 +44,13 @@ from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.functions.sampling import hash_key60
 from metadata_ingestion_framework_spark.operators.incremental import (
+    _dedup_ids,
     _retire_range_ids_below,
     _upsert_touched,
     range_bucket_expr,
 )
 from metadata_ingestion_framework_spark.operators.joins import distinct_values
 from metadata_ingestion_framework_spark.operators.kmeans import kmeans_fit
-from metadata_ingestion_framework_spark.operators.merge import scd1_merge
 from metadata_ingestion_framework_spark.operators.similarity import (
     _topk,
     cosine,
@@ -372,7 +372,7 @@ class IvfIndex:
         try:
             _upsert_touched(
                 self.store, self.VECS,
-                scd1_merge(None, assigned, [self.id_col]),
+                _dedup_ids(assigned, [self.id_col]),
                 self.id_col, self._part_cols(), batch=assigned,
             )
         finally:

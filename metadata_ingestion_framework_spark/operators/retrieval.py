@@ -38,6 +38,7 @@ from pyspark.sql import functions as F
 
 from metadata_ingestion_framework_spark.operators.incremental import (
     _check_store_config,
+    _dedup_ids,
     _retire_range_ids_below,
     _upsert_touched,
     range_bucket_expr,
@@ -46,7 +47,6 @@ from metadata_ingestion_framework_spark.operators.joins import (
     distinct_values,
     partition_in_filter,
 )
-from metadata_ingestion_framework_spark.operators.merge import scd1_merge
 from metadata_ingestion_framework_spark.operators.similarity import _topk
 
 
@@ -499,28 +499,36 @@ def build_postings(
 
 
 def doc_stats_of(
-    ids: DataFrame,
+    docs: DataFrame,
     postings: DataFrame,
     id_col: str,
+    text_col: str,
     doc_bucket_width: int,
     n_buckets: int,
 ) -> DataFrame:
-    """``(doc_id, __dl, doc_bucket)`` for EVERY doc in ``ids`` — derived
-    from the postings (no second tokenize pass; ``__dl`` rides every
-    posting row) left-joined so token-less docs appear with ``__dl = 0``
-    (they count in N and avgdl's denominator — the bm25_topk
-    contract)."""
-    # eqNullSafe join key (CLAUDE.md): a NULL-id doc HAS posting rows
-    # (groupBy groups NULL keys) — a plain equi-join would miss them and
-    # silently zero its dl, skewing avgdl away from the fresh-bm25 value
-    dls = postings.groupBy(id_col).agg(F.min("__dl").alias("__dl")).select(
-        F.col(id_col).alias("__dls_id"), "__dl"
+    """``(doc_id, __dl, doc_bucket)`` for EVERY doc in ``docs`` — a
+    numbered doc's ``__dl`` comes from its postings (no second tokenize
+    pass; ``__dl`` rides every posting row), left-joined so token-less
+    docs appear with ``__dl = 0`` (they count in N and avgdl's
+    denominator — the bm25_topk contract). NULL is not an identity: the
+    postings of every NULL-id doc share one id group, so a NULL-id doc
+    tokenizes its own ``text_col`` (only those rows do)."""
+    numbered = F.col(id_col).isNotNull()
+    dls = (
+        postings.filter(numbered)
+        .groupBy(id_col)
+        .agg(F.min("__dl").alias("__dl"))
     )
     out = (
-        ids.select(id_col)
-        .join(dls, F.col(id_col).eqNullSafe(F.col("__dls_id")), "left")
-        .drop("__dls_id")
-        .withColumn("__dl", F.coalesce(F.col("__dl"), F.lit(0)))
+        docs.select(
+            id_col,
+            F.when(~numbered, F.size(_terms(text_col))).alias("__own_dl"),
+        )
+        .join(dls, id_col, "left")
+        .select(
+            id_col,
+            F.coalesce("__own_dl", "__dl", F.lit(0)).alias("__dl"),
+        )
     )
     return out.withColumn(
         "doc_bucket",
@@ -687,8 +695,8 @@ class Bm25Index:
 
     def build(self, corpus: DataFrame) -> None:
         """One tokenize pass writes the postings; doc stats derive from
-        the WRITTEN postings (read-back — no second tokenize) plus an
-        id-only corpus scan for token-less docs.
+        the WRITTEN postings (read-back — no second tokenize) plus a
+        corpus scan for token-less and NULL-id docs (``doc_stats_of``).
 
         When ``n_term_buckets`` was not given, it is sized HERE from the
         build corpus's distinct-term count (``sized_term_buckets``) and
@@ -714,9 +722,9 @@ class Bm25Index:
             partition_by=["doc_bucket", "term_bucket"],
         )
         stats = doc_stats_of(
-            corpus.select(self.id_col),
+            corpus,
             self.store.read(self.POSTINGS),
-            self.id_col, self.doc_bucket_width, self.n_buckets,
+            self.id_col, self.text_col, self.doc_bucket_width, self.n_buckets,
         )
         self.store.write(stats, self.DOC_STATS, partition_by=["doc_bucket"])
         self.store.write(
@@ -732,15 +740,15 @@ class Bm25Index:
         size.
 
         NULL ids are NOT an identity: merge keys never match on NULL
-        (SQL MERGE semantics, the scd1_merge convention), so a NULL-id
+        (SQL MERGE semantics, the ``_dedup_ids`` convention), so a NULL-id
         row in the batch APPENDS a new doc rather than replacing a
         stored NULL-id row."""
         if not self.store.exists(self.POSTINGS):
             return self.build(batch)
         posts_b = self._postings(batch).persist()
         stats_b = doc_stats_of(
-            batch.select(self.id_col), posts_b,
-            self.id_col, self.doc_bucket_width, self.n_buckets,
+            batch, posts_b,
+            self.id_col, self.text_col, self.doc_bucket_width, self.n_buckets,
         ).persist()  # consumed: touched collect + both upserts
         try:
             # the touched buckets and vacated ids come from the doc stats
@@ -750,13 +758,9 @@ class Bm25Index:
                 self.store, self.POSTINGS, posts_b, self.id_col,
                 ["doc_bucket", "term_bucket"], batch=stats_b,
             )
-            # dedup the numbered ids only: the dedup window would fold
-            # every NULL-id doc into one doc-stats row while the postings
-            # keep them all
-            ided = F.col(self.id_col).isNotNull()
-            stats = scd1_merge(
-                None, stats_b.filter(ided), [self.id_col]
-            ).unionByName(stats_b.filter(~ided))
+            # numbered ids only: every NULL-id doc keeps its stats row,
+            # as the postings keep its rows
+            stats = _dedup_ids(stats_b, [self.id_col])
             _upsert_touched(
                 self.store, self.DOC_STATS, stats,
                 self.id_col, "doc_bucket", touched=touched, batch=stats_b,

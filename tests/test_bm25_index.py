@@ -263,7 +263,8 @@ def test_null_id_docs_survive_lifecycle(spark, tmp_path):
 def test_append_counts_every_null_id_doc(spark, tmp_path):
     """Two NULL-id docs in one append are two docs, as in the postings
     and as a build of the same docs counts them: the NULL bucket's
-    ``n_docs`` reads 2."""
+    ``n_docs`` reads 2, and each doc keeps its own length, so its
+    ``total_dl`` is 2 + 3."""
     ddl = "doc_id long, text string"
     first = [(0, "spark engine"), (1, "spark data")]
     batch = [(None, "ghost one"), (None, "ghost two words"), (5, "spark late")]
@@ -273,12 +274,12 @@ def test_append_counts_every_null_id_doc(spark, tmp_path):
     fresh = _idx(spark, tmp_path, "fresh")
     fresh.build(spark.createDataFrame(first + batch, ddl))
 
-    def n_docs(index):
+    def stats(index):
         rows = index.store.read(Bm25Index.BUCKET_STATS).collect()
-        return {r.doc_bucket: r.n_docs for r in rows}
+        return {r.doc_bucket: (r.n_docs, r.total_dl) for r in rows}
 
-    assert n_docs(idx)[None] == 2
-    assert n_docs(idx) == n_docs(fresh)
+    assert stats(idx)[None] == (2, 5)
+    assert stats(idx) == stats(fresh)
 
 
 def test_config_guard(spark, tmp_path):

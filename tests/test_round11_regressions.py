@@ -91,44 +91,85 @@ def test_ivf_append_releases_assigned_persist(spark, tmp_path):
     assert got == list(range(24))
 
 
-def test_minhash_store_heals_missing_bands_table(spark, tmp_path):
-    """r11 review: a first-ingest crash between the sigs and bands writes
-    leaves SIGS committed and BANDS absent — the retry (and any later
-    ingest) must heal by deriving the store side in-plan and rebuilding
-    the bands table, not raise FileNotFoundError."""
+def _heal_docs(spark, rows):
+    return spark.createDataFrame(
+        [(i, "the quick brown fox jumps over the lazy dog and then naps " * 5
+          if same else "entirely different unrelated words " * 10)
+         for i, same in rows],
+        "doc_id long, text string",
+    )
+
+
+def _heal_media(spark, rows):
+    import numpy as np
+
+    from metadata_ingestion_framework_spark.operators.codecs import encode_bmp
+
+    def px(same):
+        y, x, c = np.ogrid[0:16, 0:16, 0:3]
+        k = 1 if same else 5
+        return ((y * 13 * k + x * 17 + c * 29 * k) % 256).astype(np.uint8)
+
+    return spark.createDataFrame(
+        [(i, encode_bmp(px(same))) for i, same in rows],
+        "media_id long, payload binary",
+    )
+
+
+def _heal_minhash(spark, root):
+    from metadata_ingestion_framework_spark.operators.incremental import (
+        MinhashSignatureStore,
+    )
+
+    return MinhashSignatureStore(spark, root, jaccard_threshold=0.5)
+
+
+def _heal_image(spark, root):
+    from metadata_ingestion_framework_spark.operators.incremental import (
+        ImageHashStore,
+    )
+
+    return ImageHashStore(spark, root)
+
+
+@pytest.mark.parametrize(
+    "make, frame, id_col",
+    [
+        (_heal_minhash, _heal_docs, "doc_id"),
+        (_heal_image, _heal_media, "media_id"),
+    ],
+    ids=["minhash", "image"],
+)
+def test_minhash_store_heals_missing_bands_table(
+    spark, tmp_path, make, frame, id_col
+):
+    """r11 review: a first-ingest crash between the primary (sigs, fps)
+    and bands writes leaves the primary table committed and BANDS absent
+    — the retry (and any later ingest) of either banded store must heal
+    by deriving the store side in-plan and rebuilding the bands table,
+    not raise FileNotFoundError."""
     import shutil
 
     from metadata_ingestion_framework_spark.operators.dedup import (
         unpersist_deps,
     )
-    from metadata_ingestion_framework_spark.operators.incremental import (
-        MinhashSignatureStore,
-    )
 
-    base = "the quick brown fox jumps over the lazy dog and then naps " * 5
-    store = MinhashSignatureStore(
-        spark, str(tmp_path / "heal"), jaccard_threshold=0.5
-    )
-    docs1 = spark.createDataFrame([(1, base)], "doc_id long, text string")
-    s1 = store.ingest(docs1, "r1")
+    store = make(spark, str(tmp_path / "heal"))
+    s1 = store.ingest(frame(spark, [(1, True)]), "r1")
     s1.count()
     unpersist_deps(s1)
-    # simulate the crash aftermath: BANDS table gone, SIGS intact
+    # simulate the crash aftermath: BANDS table gone, primary intact
     shutil.rmtree(str(tmp_path / "heal" / store.BANDS))
-    assert store.store.exists(store.SIGS)
+    assert store.store.exists(store._PRIMARY)
     assert not store.store.exists(store.BANDS)
     # near-dup of the stored doc must STILL drop (store side derived
-    # in-plan), and the bands table must be rebuilt covering doc 1
-    docs2 = spark.createDataFrame(
-        [(2, base), (3, "entirely different unrelated words " * 10)],
-        "doc_id long, text string",
-    )
-    s2 = store.ingest(docs2, "r2")
-    got = {r.doc_id for r in s2.collect()}
+    # in-plan), and the bands table must be rebuilt covering id 1
+    s2 = store.ingest(frame(spark, [(2, True), (3, False)]), "r2")
+    got = {r[id_col] for r in s2.collect()}
     unpersist_deps(s2)
     assert got == {3}
     bands = store.store.read(store.BANDS)
-    assert bands.filter("doc_id = 1").count() > 0  # rebuilt, not batch-only
+    assert bands.filter(f"{id_col} = 1").count() > 0  # rebuilt, not batch-only
 
 
 def test_store_config_guard_refuses_layout_drift(spark, tmp_path):

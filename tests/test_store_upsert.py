@@ -133,11 +133,13 @@ def _inodes(store, table, version, part_dir):
 
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_null_bucket_upsert(spark, tmp_path, case):
-    """A store holding a NULL-id row ingests another NULL-id row and a
-    re-ingested id. NULL is not an identity, so both NULL-id rows stay;
-    the re-ingested id keeps exactly one set of rows (its new payload has
-    the old one's shape); the bucket the batch did not touch carries into
-    the new version as the same inodes."""
+    """A store holding a NULL-id row ingests two more NULL-id rows and a
+    re-ingested id. NULL is not an identity, so every NULL-id row stays,
+    the two of one batch included; the re-ingested id keeps exactly one
+    set of rows (its new payload has the old one's shape); the bucket the
+    batch did not touch carries into the new version as the same inodes.
+    BM25 postings group a doc's terms by (id, length, term), so two NULL-id
+    docs of one text length share their rows: its batch holds one."""
     make, frame, ingest, table, id_col, bucket_col = CASES[case]
     obj = make(spark, str(tmp_path / case))
     ingest(obj, frame(spark, [(i, i) for i in range(8)] + [(None, 50)]), 1)
@@ -149,31 +151,56 @@ def test_null_bucket_upsert(spark, tmp_path, case):
 
     before, v1 = counts(), store.current_version(table)
     assert before[None] >= 1 and before[1] >= 1
-    ingest(obj, frame(spark, [(None, 60), (1, 101)]), 2)
+    nulls = [(None, 60)] if case == "bm25_postings" else [(None, 60), (None, 61)]
+    ingest(obj, frame(spark, nulls + [(1, 101)]), 2)
     after, v2 = counts(), store.current_version(table)
     assert v2 == v1 + 1
-    assert after == {**before, None: 2 * before[None]}
+    assert after == {**before, None: (1 + len(nulls)) * before[None]}
     untouched = _inodes(store, table, v1, f"{bucket_col}=1")
     assert untouched and _inodes(store, table, v2, f"{bucket_col}=1") == untouched
 
 
 # Spark jobs of the second batch below, per caller (the first builds the store)
 SECOND_BATCH_JOBS = {
-    "bm25_postings": 17,
+    "bm25_postings": 16,
     "corpus_members": 29,
     "embedding_vecs": 13,
-    "image_fps": 22,
+    "image_fps": 23,
     "ivf_vectors": 5,
     "minhash_sigs": 24,
     "paragraph_paras": 24,
 }
 
 
+# Spark jobs of the first batch below, per caller (it creates the store)
+FIRST_BATCH_JOBS = {
+    "bm25_postings": 11,
+    "corpus_members": 19,
+    "embedding_vecs": 9,
+    "image_fps": 17,
+    "ivf_vectors": 8,
+    "minhash_sigs": 15,
+    "paragraph_paras": 10,
+}
+
+
+@pytest.mark.parametrize("case", sorted(CASES))
+def test_first_batch_jobs(spark, tmp_path, jobs_in_group, case):
+    """The Spark jobs of each caller's toy first batch, the one that
+    creates every table of the store."""
+    make, frame, ingest, *_ = CASES[case]
+    obj = make(spark, str(tmp_path / case))
+    batch = frame(spark, [(i, i) for i in range(40)] + [(None, 50)])
+    assert jobs_in_group(case, lambda: ingest(obj, batch, 1)) == FIRST_BATCH_JOBS[case]
+
+
 @pytest.mark.parametrize("case", sorted(CASES))
 def test_second_batch_jobs(spark, tmp_path, jobs_in_group, case):
     """The Spark jobs of each caller's toy second batch. The upsert reads
     its old rows with the table's schema, so no caller pays a
-    schema-inference job for them."""
+    schema-inference job for them. A store's own reads of a table version
+    are cached, so a first batch that read a table back saves the second
+    its schema-inference job."""
     make, frame, ingest, *_ = CASES[case]
     obj = make(spark, str(tmp_path / case))
     ingest(obj, frame(spark, [(i, i) for i in range(40)] + [(None, 50)]), 1)
