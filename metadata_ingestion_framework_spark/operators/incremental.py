@@ -439,9 +439,6 @@ class _BandedStore(_IngestLifecycle):
     _PRIMARY: str
     _BAND_PARTS: list[str]
 
-    def _band_rows(self, feats: DataFrame) -> DataFrame:
-        raise NotImplementedError
-
     def _store_sides(
         self, feats: DataFrame, new_bands: DataFrame
     ) -> tuple[DataFrame | None, DataFrame | None, list]:
