@@ -45,11 +45,11 @@ ledger no-op, the batch-side persist released in ``finally`` (owned drop
 sets on failure), the run record after the last table write, then the
 facts. A store supplies its feature kernel, its drop rule and its tables
 in order. The two banded stores (:class:`_BandedStore`) share the pruned
-store sides and one band commit: upsert; on the first ingest a write of
-the batch's bands; after a crash that left the primary table without its
-bands, a rebuild from the primary table. An SCD1 table dedups a batch
-with :func:`_dedup_ids`, which keeps every NULL-id row (NULL is not an
-identity).
+store sides and one band commit: upsert the band table, or, when it is
+missing (the first ingest, or a crash that left the primary table
+without its bands), rebuild it from the primary table. An SCD1 table
+dedups a batch with :func:`_dedup_ids`, which keeps every NULL-id row
+(NULL is not an identity).
 """
 
 from __future__ import annotations
@@ -300,7 +300,8 @@ def _emit_ingest_facts(
     count lands on frames the ingest already materialized (persisted
     drop sets, the batch's cached feature frame), so the facts cost no
     extra pass over the corpus. ``n_batch`` and the ``dropped`` values
-    are counts or frames, counted here; ``extra`` facts land last."""
+    are counts or frames; a frame is counted here, so an unobserved
+    store counts nothing. ``extra`` facts land last."""
     obs = getattr(store, "observability", None)
     if obs is None:
         return
@@ -377,18 +378,15 @@ class _IngestLifecycle(RunLedger):
     def _adopt_older_layout(self) -> None:
         """Rewrite what an adopted older store lays out differently."""
 
-    def _run_ingest(
-        self, batch: DataFrame, run_id: str, features, step, n_batch=None
-    ) -> DataFrame | None:
-        """Run one ingest of ``batch`` as ``run_id``: None (store untouched)
+    def _run_ingest(self, run_id: str, features, step) -> DataFrame | None:
+        """Run one ingest as ``run_id``: None (store untouched)
         when the ledger already holds the run; else persist the batch-side
         frames ``features()`` returns, call ``step(*frames, hold)``, record
         the run after its last table write, then emit the facts.
 
         ``step`` decides the drops and writes the store's tables in order;
         it returns ``(out, facts)``, ``facts`` being the keyword arguments
-        of :func:`_emit_ingest_facts` (``n_batch``, when given there, wins
-        over the caller's count, else the batch's). ``hold(frame)``
+        of :func:`_emit_ingest_facts`, ``n_batch`` included. ``hold(frame)``
         persists a frame this ingest owns: it is released if the ingest
         fails; on success the step hands it out (``out._persisted_deps``)
         or releases it.
@@ -409,9 +407,7 @@ class _IngestLifecycle(RunLedger):
             # facts AFTER the ledger record (best-effort telemetry): a
             # crash between the two loses one run's rows, where the other
             # order would double-count the run on replay
-            if self.observability is not None:
-                facts.setdefault("n_batch", batch if n_batch is None else n_batch)
-                _emit_ingest_facts(self, run_id, **facts)
+            _emit_ingest_facts(self, run_id, **facts)
             return out
         except BaseException:
             for frame in held:
@@ -471,24 +467,26 @@ class _BandedStore(_IngestLifecycle):
         rows: DataFrame,
         new_bands: DataFrame,
         touched: list,
-        had_primary: bool,
+        created: DataFrame | None,
     ) -> None:
         """The band commit, after the primary table's: ``rows`` (the
         batch's band rows as stored) upsert the ``touched`` partitions of
-        the first band column. With the band table missing, the first
-        ingest writes the batch's ``new_bands``; beside a primary table
-        that held rows before this ingest (``had_primary``: a crash
-        between the two writes, r11 review) the table is rebuilt from the
-        primary table instead, or every earlier id would stay bandless."""
+        the first band column. A missing band table — the first ingest, or
+        a crash between the two writes (r11 review) — is built from the
+        primary table as stored, so every stored id has its bands.
+        ``created`` is the frame this ingest created the primary table
+        from (None when the table existed): the primary is first read
+        with its schema, a cached read, so neither the rebuild nor the
+        next ingest's :meth:`_store_sides` runs a schema-inference job."""
         if self.store.exists(self.BANDS):
             _upsert_touched(
                 self.store, self.BANDS, rows, self.id_col, self._BAND_PARTS,
                 touched=touched, batch=new_bands,
             )
-        elif had_primary:
-            self.rebuild_bands()
-        else:
-            self.store.write(new_bands, self.BANDS, partition_by=self._BAND_PARTS)
+            return
+        if created is not None:
+            self.store.read(self._PRIMARY, schema=created.schema)
+        self.rebuild_bands()
 
     def rebuild_bands(self) -> None:
         """Regenerate the band table from the primary table, reaping any
@@ -827,30 +825,31 @@ class MinhashSignatureStore(_BandedStore):
             # buckets goes (ADVICE r8), so a re-ingest reaps its own ghosts
             # there.
             sigs_new_b = self._with_sig_bucket(sigs_new)
+            rows = _dedup_ids(sigs_new_b, [self.id_col])
             sig_buckets = _upsert_touched(
-                self.store, self.SIGS, _dedup_ids(sigs_new_b, [self.id_col]),
-                self.id_col, "sig_bucket", batch=sigs_new_b,
+                self.store, self.SIGS, rows, self.id_col, "sig_bucket",
+                batch=sigs_new_b,
             )
             self._commit_bands(
                 _dedup_ids(new_bands, [self.id_col, "band"]), new_bands,
-                batch_buckets, store_sigs is not None,
+                batch_buckets, rows if store_sigs is None else None,
             )
-            # n_batch is the BATCH's doc count (the lifecycle's rule), not
-            # the signature-row count: docs shorter than shingle_n produce
-            # no signature but are still batch members (and survive)
+            # n_batch is the BATCH's doc count (the caller's, else counted
+            # from the batch), not the signature-row count: docs shorter
+            # than shingle_n produce no signature but are still batch
+            # members (and survive)
             return self._survivors(batch, dropped), {
+                "n_batch": batch if n_batch is None else n_batch,
                 "dropped": {"text": dropped},
                 "buckets": {"sigs": len(sig_buckets), "bands": len(batch_buckets)},
             }
 
         return self._run_ingest(
-            batch,
             run_id,
             lambda: [
                 signatures if signatures is not None else self._signatures(batch)
             ],
             step,
-            n_batch,
         )
 
     def retire_ids_below(self, cutoff_id: int) -> None:
@@ -1120,13 +1119,12 @@ class EmbeddingDedupStore(_IngestLifecycle):
                 self.id_col, ["vec_bucket", "cell"], batch=assigned,
             )
             return self._survivors(batch, drops), {
+                "n_batch": batch if n_batch is None else n_batch,
                 "dropped": {"embedding": drops},
                 "buckets": {"vecs": len(vec_buckets)},
             }
 
-        return self._run_ingest(
-            batch, run_id, lambda: [self._assign(batch)], step, n_batch
-        )
+        return self._run_ingest(run_id, lambda: [self._assign(batch)], step)
 
     def retire_ids_below(self, cutoff_id: int) -> None:
         """Retention/lifecycle delete: drop every vector with ``id <
@@ -1484,10 +1482,14 @@ class ImageHashStore(_BandedStore):
       (the minhash-store manual-DPP shape), so the candidate shuffle
       tracks the batch, not the store. Re-ingested ids' old band rows
       vacate in their own fp_bucket's rewrite (bands are as fresh as
-      fps); ghosts arise only from a crash between the two writes,
-      which the shared band heal (``_BandedStore._commit_bands``)
-      rebuilds, and the Hamming verify reads fresh
-      ``fps`` by id regardless. Retention drops whole fp_bucket dirs.
+      fps). Ghosts arise from a crash between the two writes, which the
+      shared band heal (``_BandedStore._commit_bands``) rebuilds, and
+      from a later batch that carries one id twice with different
+      payloads: fps keep one payload, the band upsert takes both
+      payloads' band rows (the first ingest builds its bands from the
+      stored fps, so it stores none). ``rebuild_bands`` reaps them, and
+      the Hamming verify reads fresh ``fps`` by id regardless.
+      Retention drops whole fp_bucket dirs.
 
     Dropped (deduped-away) images keep their fingerprints, same as both
     sibling stores: a future near-dup of a dropped image must still
@@ -1708,10 +1710,9 @@ class ImageHashStore(_BandedStore):
             # collapse a video to one frame, and the upsert drops EVERY old
             # frame row of a re-ingested id (the new cut may sample other
             # frames).
+            rows = fps if self.frames else _dedup_ids(fps, [self.id_col])
             fp_buckets = _upsert_touched(
-                self.store, self.FPS,
-                fps if self.frames else _dedup_ids(fps, [self.id_col]),
-                self.id_col, "fp_bucket", batch=fps,
+                self.store, self.FPS, rows, self.id_col, "fp_bucket", batch=fps,
             )
             # band upsert on the same id-range buckets (r14): a
             # band-hash-keyed delta degenerates to a full band-table
@@ -1722,26 +1723,27 @@ class ImageHashStore(_BandedStore):
             # rows vacate in the same rewrite (bands are exactly as fresh
             # as fps).
             self._commit_bands(
-                new_bands, new_bands, fp_buckets, store_fps is not None
+                new_bands, new_bands, fp_buckets,
+                rows if store_fps is None else None,
             )
-            # n_batch is the BATCH's media count (the lifecycle's rule),
-            # not the fingerprint-row count: undecodable payloads produce
-            # no fingerprint but are still batch members, and the frames
-            # face fingerprints per (id, frame_ts) while drops are media ids
+            # n_batch is the BATCH's media count (the caller's, else counted
+            # from the batch), not the fingerprint-row count: undecodable
+            # payloads produce no fingerprint but are still batch members,
+            # and the frames face fingerprints per (id, frame_ts) while
+            # drops are media ids
             return self._survivors(batch, dropped), {
+                "n_batch": batch if n_batch is None else n_batch,
                 "dropped": {("frames" if self.frames else "media"): dropped},
                 "buckets": {"fps": len(fp_buckets), "bands": len(batch_buckets)},
             }
 
         return self._run_ingest(
-            batch,
             run_id,
             lambda: [
                 fingerprints if fingerprints is not None
                 else self._fingerprints(batch)
             ],
             step,
-            n_batch,
         )
 
     def retire_ids_below(self, cutoff_id: int) -> None:
@@ -2102,7 +2104,6 @@ class ParagraphHashStore(_IngestLifecycle):
             }
 
         return self._run_ingest(
-            batch,
             run_id,
             lambda: [_paragraph_rows(batch, self.text_col, self.id_col)],
             step,
@@ -2368,7 +2369,6 @@ class CrossModalPairStore(_IngestLifecycle):
             }
 
         return self._run_ingest(
-            batch,
             run_id,
             lambda: [self.img._fingerprints(batch), self.txt._signatures(batch)],
             step,

@@ -508,11 +508,12 @@ def doc_stats_of(
 ) -> DataFrame:
     """``(doc_id, __dl, doc_bucket)`` for EVERY doc in ``docs`` — a
     numbered doc's ``__dl`` comes from its postings (no second tokenize
-    pass; ``__dl`` rides every posting row), left-joined so token-less
-    docs appear with ``__dl = 0`` (they count in N and avgdl's
-    denominator — the bm25_topk contract). NULL is not an identity: the
-    postings of every NULL-id doc share one id group, so a NULL-id doc
-    tokenizes its own ``text_col`` (only those rows do)."""
+    pass; ``__dl`` rides every posting row) over an id-only scan of the
+    numbered docs, left-joined so token-less docs appear with ``__dl =
+    0`` (they count in N and avgdl's denominator — the bm25_topk
+    contract). NULL is not an identity: the postings of every NULL-id doc
+    share one id group, so a NULL-id doc tokenizes its own ``text_col``
+    (only those rows read the text)."""
     numbered = F.col(id_col).isNotNull()
     dls = (
         postings.filter(numbered)
@@ -520,14 +521,14 @@ def doc_stats_of(
         .agg(F.min("__dl").alias("__dl"))
     )
     out = (
-        docs.select(
-            id_col,
-            F.when(~numbered, F.size(_terms(text_col))).alias("__own_dl"),
-        )
+        docs.filter(numbered)
+        .select(id_col)
         .join(dls, id_col, "left")
-        .select(
-            id_col,
-            F.coalesce("__own_dl", "__dl", F.lit(0)).alias("__dl"),
+        .select(id_col, F.coalesce("__dl", F.lit(0)).alias("__dl"))
+        .unionByName(
+            docs.filter(~numbered).select(
+                id_col, F.size(_terms(text_col)).alias("__dl")
+            )
         )
     )
     return out.withColumn(
@@ -695,8 +696,9 @@ class Bm25Index:
 
     def build(self, corpus: DataFrame) -> None:
         """One tokenize pass writes the postings; doc stats derive from
-        the WRITTEN postings (read-back — no second tokenize) plus a
-        corpus scan for token-less and NULL-id docs (``doc_stats_of``).
+        the WRITTEN postings (read-back — no second tokenize) plus an
+        id-only corpus scan for token-less docs; only NULL-id docs read
+        their text (``doc_stats_of``).
 
         When ``n_term_buckets`` was not given, it is sized HERE from the
         build corpus's distinct-term count (``sized_term_buckets``) and

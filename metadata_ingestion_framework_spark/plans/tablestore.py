@@ -246,20 +246,29 @@ class VersionedParquetStore:
         return out
 
     # -- IO -----------------------------------------------------------------
-    def read(self, table: str, version: int | None = None) -> DataFrame:
+    def read(
+        self,
+        table: str,
+        version: int | None = None,
+        schema: StructType | None = None,
+    ) -> DataFrame:
         """Read a version (current by default), CACHED per (table, version):
         a path read builds a fresh file index per call, an O(#partition dirs)
         driver-side listing (r15: 3.4 s per read of a 10x image band table).
         Versions are immutable, so the cached frame never goes stale. A
         version this store commits is usually cached at commit time
-        (``_cache_commit``), so its first read runs no Spark job either."""
+        (``_cache_commit``), so its first read runs no Spark job either.
+        ``schema`` (the version's, partition columns included; e.g. the
+        frame that created the table) skips the schema-inference job of a
+        read that is not cached yet; a cached read is returned as it is."""
         v = version if version is not None else self.current_version(table)
         if v is None:
             raise FileNotFoundError(f"table {table} does not exist in {self.root}")
         key = (table, v)
         df = self._read_cache.get(key)
         if df is None:
-            df = self.spark.read.parquet(self._version_path(table, v))
+            reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+            df = reader.parquet(self._version_path(table, v))
             self._read_cache[key] = df
         return df
 

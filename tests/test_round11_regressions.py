@@ -172,6 +172,30 @@ def test_minhash_store_heals_missing_bands_table(
     assert bands.filter(f"{id_col} = 1").count() > 0  # rebuilt, not batch-only
 
 
+@pytest.mark.parametrize(
+    "make, frame",
+    [(_heal_minhash, _heal_docs), (_heal_image, _heal_media)],
+    ids=["minhash", "image"],
+)
+def test_first_ingest_bands_follow_the_stored_rows(spark, tmp_path, make, frame):
+    """A first batch that carries one id twice with different payloads
+    stores one of them in the primary table (sigs, fps); the band table,
+    built from the primary table as stored, holds that payload's band
+    rows and none of the other's."""
+    from metadata_ingestion_framework_spark.operators.dedup import (
+        unpersist_deps,
+    )
+
+    store = make(spark, str(tmp_path / "dup"))
+    unpersist_deps(store.ingest(frame(spark, [(1, True), (1, False)]), "r1"))
+    bands = store.store.read(store.BANDS)
+    cols = sorted(bands.columns)  # a partitioned read puts them last
+    want = store._band_rows(store.store.read(store._PRIMARY))
+    assert sorted(map(tuple, bands.select(*cols).collect())) == sorted(
+        map(tuple, want.select(*cols).collect())
+    )
+
+
 def test_store_config_guard_refuses_layout_drift(spark, tmp_path):
     """r11 review: reopening a store with different LAYOUT-defining
     parameters must refuse loudly — a silently different bucket width
