@@ -100,20 +100,15 @@ class ObservabilityStore:
         pipeline_id: str,
         task_name: str,
         status: str,
-        offset_ranges: DataFrame | list[tuple] | None = None,
+        offset_ranges: list[tuple] | None = None,
         batch_id: int = -1,
         run_id: str = "",
         message: str = "",
     ) -> None:
-        """One status row per offset range, each ``(topic, partition,
-        startOffset, endOffset)``. ``offset_ranges`` is a DataFrame with
-        those columns (collected once; one row per source partition) or a
-        list of such tuples. No or empty offsets still land one row, with
-        null offsets."""
-        if isinstance(offset_ranges, DataFrame):
-            offset_ranges = offset_ranges.select(
-                "topic", "partition", "startOffset", "endOffset"
-            ).collect()
+        """One status row per offset range: ``offset_ranges`` is a list of
+        driver-side ``(topic, partition, startOffset, endOffset)`` tuples,
+        one per source partition. No or empty offsets still land one row,
+        with null offsets."""
         offsets = offset_ranges or [(None, None, None, None)]
         now = datetime.now(timezone.utc)
         self._write_rows(

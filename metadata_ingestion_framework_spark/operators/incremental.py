@@ -830,8 +830,10 @@ class MinhashSignatureStore(_BandedStore):
                 self.store, self.SIGS, rows, self.id_col, "sig_bucket",
                 batch=sigs_new_b,
             )
+            # the band rows of the sigs as stored: a dedup of their own
+            # could keep another duplicate's row for some band
             self._commit_bands(
-                _dedup_ids(new_bands, [self.id_col, "band"]), new_bands,
+                self._band_rows(rows), new_bands,
                 batch_buckets, rows if store_sigs is None else None,
             )
             # n_batch is the BATCH's doc count (the caller's, else counted

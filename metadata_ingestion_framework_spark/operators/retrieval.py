@@ -483,14 +483,18 @@ def build_postings(
     """ONE tokenize pass -> the partitioned posting rows
     ``(doc_id, term, tf, __dl, doc_bucket, term_bucket)``. Token-less
     (NULL/empty) docs produce no posting rows — they still count in N
-    via ``doc_stats_of``."""
+    via ``doc_stats_of``. NULL is not an identity: each NULL-id doc
+    counts its terms in a group of its own (``__doc``), so two NULL-id
+    docs never share a postings row."""
+    doc = F.when(F.col(id_col).isNull(), F.monotonically_increasing_id())
     toks = docs.select(
-        F.col(id_col), _terms(text_col).alias("__toks")
+        F.col(id_col), doc.alias("__doc"), _terms(text_col).alias("__toks")
     ).withColumn("__dl", F.size("__toks"))
     tf = (
-        toks.select(id_col, "__dl", F.explode("__toks").alias("term"))
-        .groupBy(id_col, "__dl", "term")
+        toks.select(id_col, "__doc", "__dl", F.explode("__toks").alias("term"))
+        .groupBy(id_col, "__doc", "__dl", "term")
         .agg(F.count(F.lit(1)).alias("tf"))
+        .drop("__doc")
     )
     return tf.withColumn(
         "doc_bucket",

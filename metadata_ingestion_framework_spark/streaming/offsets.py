@@ -2,31 +2,46 @@
 
 Checkpointing is the primary exactly-once mechanism; the status-table offset
 trail is observability plus the reference's resume path
-(``startingOffsets`` JSON rebuilt from the status table).
+(``startingOffsets`` JSON rebuilt from the status table). A micro-batch's
+offset ranges are aggregated on the driver (:func:`offset_ranges_for_batch`),
+so the guard's bookkeeping costs one shuffle-free Spark job.
 """
 
 from __future__ import annotations
 
 import json
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
+_OffsetRange = Row("topic", "partition", "startOffset", "endOffset", "rows")
 
-def offset_ranges_for_batch(batch: DataFrame) -> DataFrame:
-    """Per-(topic, partition) offset ranges of one Kafka micro-batch, with
+
+def offset_ranges_for_batch(batch: DataFrame) -> list[Row]:
+    """Per-(topic, partition) offset ranges of one Kafka micro-batch, as
+    driver rows ``(topic, partition, startOffset, endOffset, rows)`` with
     the range's row count as ``rows``.
 
-    Parity: Task.scala:99-100 (A1) — groupBy(topic, partition) min/max offset.
-    The counts sum to the batch's row count (NULL topic and partition form
-    one range of their own), so ``guarded_batch_fn`` takes its
-    ``input_rows`` fact from the same collect instead of a ``count()``.
+    Parity: Task.scala:99-100 (A1) — the rows equal a collect of
+    ``groupBy(topic, partition).agg(min(offset), max(offset),
+    count(lit(1)))``: NULL topic and partition form one range of their
+    own, a NULL offset counts in ``rows`` but not in the range, and the
+    values come back typed as a Row collect types them. The counts sum to
+    the batch's row count, so ``guarded_batch_fn`` takes its
+    ``input_rows`` fact from them instead of a ``count()``.
+
+    One Spark job with no exchange: ``toArrow`` ships the three columns
+    and pyarrow groups them on the driver (the ``joins.distinct_values``
+    trade). The Spark ``groupBy`` is a map-stage job plus a result job
+    under AQE. The driver receives one small row per record, bounded by
+    the stream's ``maxOffsetsPerTrigger``.
     """
-    return batch.groupBy("topic", "partition").agg(
-        F.min("offset").alias("startOffset"),
-        F.max("offset").alias("endOffset"),
-        F.count(F.lit(1)).alias("rows"),
+    table = batch.select("topic", "partition", "offset").toArrow()
+    agg = table.group_by(["topic", "partition"]).aggregate(
+        [("offset", "min"), ("offset", "max"), ([], "count_all")]
     )
+    cols = ["topic", "partition", "offset_min", "offset_max", "count_all"]
+    return [_OffsetRange(*r) for r in zip(*(agg.column(c).to_pylist() for c in cols))]
 
 
 def recover_starting_offsets(

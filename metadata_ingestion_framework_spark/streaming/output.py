@@ -54,7 +54,7 @@ def guarded_batch_fn(
     obs,
     pipeline_id: str,
     task_name: str,
-    offset_fn: Callable[[DataFrame], DataFrame] | None = None,
+    offset_fn: Callable[[DataFrame], list[tuple]] | None = None,
 ) -> Callable[[DataFrame, int], None]:
     """Wrap a foreachBatch function with the reference's error/status flow.
 
@@ -64,27 +64,23 @@ def guarded_batch_fn(
     with the stacktrace, writes an Error status, and re-raises (the stream
     stops, matching the reference's fail-fast behavior).
 
-    The offset ranges are collected once, after ``batch_fn``. When they
-    carry a per-range ``rows`` count (``offset_ranges_for_batch`` does), the
-    ``input_rows`` fact is their sum; only without ``offset_fn``, or with
-    ranges that have no count, does the guard run ``batch.count()``.
+    ``offset_fn`` (``offset_ranges_for_batch``) returns driver rows
+    ``(topic, partition, startOffset, endOffset, rows)``, taken once after
+    ``batch_fn``: the first four fields are the status offsets and the
+    ``input_rows`` fact is the sum of ``rows``. Only a guard without
+    ``offset_fn`` runs ``batch.count()``.
     """
 
     def run(batch: DataFrame, batch_id: int) -> None:
         try:
             batch_fn(batch, batch_id)
-            offsets = n_in = None
-            if offset_fn is not None:
-                ranges_df = offset_fn(batch)
-                ranges = ranges_df.collect()
-                offsets = [
-                    (r["topic"], r["partition"], r["startOffset"], r["endOffset"])
-                    for r in ranges
-                ]
-                if "rows" in ranges_df.columns:
-                    n_in = sum(r["rows"] for r in ranges)
-            if n_in is None:
+            offsets = None
+            if offset_fn is None:
                 n_in = batch.count()
+            else:
+                ranges = offset_fn(batch)
+                offsets = [r[:4] for r in ranges]
+                n_in = sum(r[4] for r in ranges)
             obs.write_status(
                 pipeline_id, task_name, "Finished",
                 offset_ranges=offsets, batch_id=batch_id,

@@ -520,20 +520,13 @@ def test_status_and_fact_writes_run_no_spark_job(spark, tmp_path, jobs_in_group)
         [("k", p, o) for p in range(2) for o in range(5)],
         "topic string, partition int, offset long",
     )
-    # DataFrame offsets cost exactly the one collect of their own plan
-    collect_only = jobs_in_group(
-        "obs-offsets-ref",
-        lambda: offset_ranges_for_batch(batch).select(
-            "topic", "partition", "startOffset", "endOffset"
-        ).collect(),
-    )
+    # the offsets are driver rows: landing them runs no job
+    ranges = [r[:4] for r in offset_ranges_for_batch(batch)]
     with_offsets = jobs_in_group(
         "obs-offsets",
-        lambda: obs.write_status(
-            "p", "t", "Finished", offset_ranges=offset_ranges_for_batch(batch), batch_id=1
-        ),
+        lambda: obs.write_status("p", "t", "Finished", offset_ranges=ranges, batch_id=1),
     )
-    assert with_offsets == collect_only >= 1
+    assert with_offsets == 0
     got = {
         (r.partition, r.startOffset, r.endOffset)
         for r in obs.read_status().filter("batch_id = 1").collect()
@@ -542,7 +535,7 @@ def test_status_and_fact_writes_run_no_spark_job(spark, tmp_path, jobs_in_group)
 
 
 def test_guard_takes_input_rows_from_the_offsets_collect(spark, tmp_path, jobs_in_group):
-    """With ``offset_ranges_for_batch`` the guard runs one offsets collect
+    """With ``offset_ranges_for_batch`` the guard runs one offsets job
     besides ``batch_fn``'s jobs and sums its per-range counts into
     ``input_rows``; without ``offset_fn`` it counts the batch."""
     from metadata_ingestion_framework_spark.streaming.offsets import (
@@ -560,12 +553,12 @@ def test_guard_takes_input_rows_from_the_offsets_collect(spark, tmp_path, jobs_i
 
     obs = ObservabilityStore(spark, str(tmp_path / "obs"))
     fn_jobs = jobs_in_group("guard-fn", lambda: batch_fn(batch, 0))
-    collect_jobs = jobs_in_group("guard-ranges", lambda: offset_ranges_for_batch(batch).collect())
     count_jobs = jobs_in_group("guard-count", batch.count)
-    assert fn_jobs >= 1 and collect_jobs >= 1
+    assert fn_jobs >= 1
+    assert jobs_in_group("guard-ranges", lambda: offset_ranges_for_batch(batch)) == 1
 
     guarded = guarded_batch_fn(batch_fn, obs, "p", "t", offset_fn=offset_ranges_for_batch)
-    assert jobs_in_group("guard", lambda: guarded(batch, 3)) == fn_jobs + collect_jobs
+    assert jobs_in_group("guard", lambda: guarded(batch, 3)) == fn_jobs + 1
     plain = guarded_batch_fn(batch_fn, obs, "p", "t")
     assert jobs_in_group("guard-plain", lambda: plain(batch, 4)) == fn_jobs + count_jobs
 

@@ -37,10 +37,7 @@ def test_salted_join_rejects_other_preserving_modes(spark):
 
 def test_status_row_survives_empty_offsets(spark, tmp_path):
     obs = ObservabilityStore(spark, str(tmp_path / "obs"))
-    empty_offsets = spark.createDataFrame(
-        [], "topic string, partition int, startOffset long, endOffset long"
-    )
-    obs.write_status("p1", "t1", "Finished", offset_ranges=empty_offsets, batch_id=3)
+    obs.write_status("p1", "t1", "Finished", offset_ranges=[], batch_id=3)
     rows = obs.read_status().collect()
     assert len(rows) == 1 and rows[0]["status"] == "Finished"
     assert rows[0]["topic"] is None

@@ -196,6 +196,39 @@ def test_first_ingest_bands_follow_the_stored_rows(spark, tmp_path, make, frame)
     )
 
 
+def test_later_ingest_bands_follow_the_stored_rows(spark, tmp_path, monkeypatch):
+    """The second-batch twin of the test above: a later minhash batch that
+    carries one id twice with different texts upserts the band rows of the
+    signature the sigs table keeps, and none of the other text's. Which
+    duplicate the SCD1 dedup keeps is arbitrary (``row_number`` over tied
+    keys); here it keeps the one of largest row hash, so the choice for a
+    band row is made apart from the choice for its signature."""
+    from pyspark.sql import Window
+    from pyspark.sql import functions as F
+
+    from metadata_ingestion_framework_spark.operators import incremental
+    from metadata_ingestion_framework_spark.operators.dedup import (
+        unpersist_deps,
+    )
+
+    def by_row_hash(rows, keys):
+        numbered = F.col(keys[0]).isNotNull()
+        w = Window.partitionBy(*keys).orderBy(F.xxhash64(*rows.columns).desc())
+        kept = rows.filter(numbered).withColumn("__rn", F.row_number().over(w))
+        return kept.filter("__rn = 1").drop("__rn").unionByName(rows.filter(~numbered))
+
+    monkeypatch.setattr(incremental, "_dedup_ids", by_row_hash)
+    store = _heal_minhash(spark, str(tmp_path / "dup"))
+    unpersist_deps(store.ingest(_heal_docs(spark, [(2, False)]), "r1"))
+    unpersist_deps(store.ingest(_heal_docs(spark, [(1, True), (1, False)]), "r2"))
+    bands = store.store.read(store.BANDS)
+    cols = sorted(bands.columns)
+    want = store._band_rows(store.store.read(store.SIGS))
+    assert sorted(map(tuple, bands.select(*cols).collect())) == sorted(
+        map(tuple, want.select(*cols).collect())
+    )
+
+
 def test_store_config_guard_refuses_layout_drift(spark, tmp_path):
     """r11 review: reopening a store with different LAYOUT-defining
     parameters must refuse loudly — a silently different bucket width

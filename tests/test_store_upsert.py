@@ -137,9 +137,7 @@ def test_null_bucket_upsert(spark, tmp_path, case):
     re-ingested id. NULL is not an identity, so every NULL-id row stays,
     the two of one batch included; the re-ingested id keeps exactly one
     set of rows (its new payload has the old one's shape); the bucket the
-    batch did not touch carries into the new version as the same inodes.
-    BM25 postings group a doc's terms by (id, length, term), so two NULL-id
-    docs of one text length share their rows: its batch holds one."""
+    batch did not touch carries into the new version as the same inodes."""
     make, frame, ingest, table, id_col, bucket_col = CASES[case]
     obj = make(spark, str(tmp_path / case))
     ingest(obj, frame(spark, [(i, i) for i in range(8)] + [(None, 50)]), 1)
@@ -151,7 +149,7 @@ def test_null_bucket_upsert(spark, tmp_path, case):
 
     before, v1 = counts(), store.current_version(table)
     assert before[None] >= 1 and before[1] >= 1
-    nulls = [(None, 60)] if case == "bm25_postings" else [(None, 60), (None, 61)]
+    nulls = [(None, 60), (None, 61)]
     ingest(obj, frame(spark, nulls + [(1, 101)]), 2)
     after, v2 = counts(), store.current_version(table)
     assert v2 == v1 + 1

@@ -102,13 +102,50 @@ def test_offset_bookkeeping_roundtrip(spark):
     )
     ranges = offset_ranges_for_batch(batch)
     got = {(r["topic"], r["partition"]): (r["startOffset"], r["endOffset"])
-           for r in ranges.collect()}
+           for r in ranges}
     assert got[("t1", 0)] == (5, 9) and got[("t1", 1)] == (3, 3)
 
-    status = ranges
+    status = spark.createDataFrame(
+        ranges, "topic string, partition int, startOffset long, endOffset long, rows long"
+    )
     js = recover_starting_offsets(status, "t1")
     assert json.loads(js) == {"t1": {"0": 10, "1": 4}}  # endOffset + 1
     assert recover_starting_offsets(status.filter("topic = 'zzz'"), "zzz") == "earliest"
+
+
+@pytest.mark.parametrize(
+    "rows, n_parts",
+    [
+        ([("t1", 0, 5), ("t1", 0, 9), ("t1", 2, 4), ("t2", 0, 1), ("t3", 7, 2)], 1),
+        ([(None, None, 4), (None, None, 8), ("t1", None, 3), (None, 0, 6), ("t1", 0, 1)], 1),
+        ([("t1", 0, None), ("t1", 0, 5), ("t1", 1, None), (None, None, None)], 1),
+        ([], 1),
+        ([(f"t{i % 3}", i % 5, i * 7 % 101) for i in range(200)] + [(None, None, 99)], 4),
+    ],
+    ids=["topics", "null_keys", "null_offset", "empty", "four_partitions"],
+)
+def test_offset_ranges_match_the_spark_group_by(spark, rows, n_parts):
+    """The driver-side ranges equal, value and Python type alike, the
+    collect of the Spark ``groupBy`` they replace."""
+    from collections import Counter
+
+    schema = "topic string, partition int, offset long"
+    batch = spark.createDataFrame(rows, schema).repartition(n_parts)
+    assert batch.rdd.getNumPartitions() == n_parts
+    want = batch.groupBy("topic", "partition").agg(
+        F.min("offset").alias("startOffset"),
+        F.max("offset").alias("endOffset"),
+        F.count(F.lit(1)).alias("rows"),
+    ).collect()
+
+    def typed(rs):
+        return Counter(tuple((type(v), v) for v in r) for r in rs)
+
+    got = offset_ranges_for_batch(batch)
+    assert typed(got) == typed(want)
+    fields = ["topic", "partition", "startOffset", "endOffset", "rows"]
+    assert all(list(r.asDict()) == fields for r in got + want)
+    assert sum(r["rows"] for r in got) == len(rows)
 
 
 def test_bucketed_table_join_is_shuffle_free_on_bucket_side(spark, store, emp):
