@@ -28,7 +28,16 @@ Scale posture (100 TB):
   (Delta's touched-files-only rewrite); any other consumer sees the full
   state;
 - the join itself is a plain equi/theta join Catalyst can plan (sort-merge
-  w/ AQE skew splitting; broadcast when the update batch is small).
+  w/ AQE skew splitting; broadcast when the update batch is small);
+- a small batch needs no join at all: an SCD1 merge with the default
+  clauses on one ``=`` key, whose batch Spark's optimizer estimates within
+  ``autoBroadcastJoinThreshold``, is "delete the batch's keys, insert its
+  deduped rows" (``_delete_insert``). The batch is collected once with
+  ``toArrow``; its touched partitions and key set come from that table,
+  and it re-enters as a one-partition local relation. A bulk batch then
+  costs the collect, the store's clustering exchange and the write: 3
+  Spark jobs, not 5. The driver holds the batch, bounded by the same
+  threshold that bounds a broadcast (10 MB by default).
 
 MERGE precondition (same as Delta): each target row matches at most one
 update row — guaranteed by the pre-merge dedup on the join keys.
@@ -46,6 +55,8 @@ from metadata_ingestion_framework_spark.operators.joins import (
     _parse_key,
     build_inner_join_condition,
     collect_partition_values,
+    in_list,
+    in_list_type,
     partition_in_filter,
 )
 
@@ -331,6 +342,69 @@ def _dedup_updates(
     return dedup_window(updates, keys, order or keys)
 
 
+def _delete_insert(
+    target: DataFrame,
+    updates: DataFrame,
+    join_key: str,
+    updated_at_col: str | None,
+    partition_col: str | None,
+) -> DataFrame | None:
+    """SCD1 with the default clauses as "delete the batch's keys, insert
+    its rows", from one collect of the batch; None (nothing run) when the
+    batch does not qualify. Under unconditional updateAll + insertAll a
+    matched and an inserted key both become the deduped update row, so no
+    per-key match result is needed, and so no join.
+
+    It qualifies when ``join_key`` is one ``=`` key of an int or a string
+    type on both sides, the target's columns are all in the batch, Arrow
+    can carry the batch's schema, and Spark's optimizer estimate of the
+    batch is within the session's ``autoBroadcastJoinThreshold`` (-1 turns
+    the plan off; a source with no size estimate, such as an RDD, reports
+    the largest size). The batch is collected once with ``toArrow``; the
+    touched partitions and the non-NULL key set come from that table, and
+    the table re-enters as a one-partition local relation, whose dedup
+    window needs no exchange. A NULL key never matches: target rows with a
+    NULL key stay and the deduped NULL-key row is inserted, as in the join.
+    """
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    ukey, sym, tkey = _parse_key(join_key)
+    if sym != "=" or ukey not in updates.columns or tkey not in target.columns:
+        return None
+    kind = in_list_type(updates.schema[ukey].dataType)
+    if kind is None or kind is not in_list_type(target.schema[tkey].dataType):
+        return None
+    if not set(target.columns) <= set(updates.columns):
+        return None
+    spark = updates.sparkSession
+    limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+    if limit < 0 or updates._jdf.queryExecution().optimizedPlan().stats().sizeInBytes() > limit:
+        return None
+    try:
+        to_arrow_schema(updates.schema)
+    except Exception:
+        return None
+
+    import pyarrow.compute as pc
+
+    table = updates.toArrow()
+    local = spark.createDataFrame(table, schema=updates.schema).coalesce(1)
+    rows = _dedup_updates(local, [join_key], updated_at_col).select(*target.columns)
+    keys = pc.unique(table.column(ukey).drop_null()).to_pylist()
+    kept = target.filter(~F.coalesce(in_list(tkey, keys), F.lit(False)))
+    touched = (
+        collect_partition_values(updates, partition_col, table=table)
+        if partition_col
+        else None
+    )
+    if touched is None:
+        return kept.unionByName(rows)
+    affected = F.coalesce(partition_in_filter(touched, partition_col, None), F.lit(False))
+    changed = kept.filter(affected).unionByName(rows)
+    full = target.filter(~affected).unionByName(changed)
+    return MergeResult.of(full, target, partition_col, touched, changed)
+
+
 def scd1_merge(
     target: DataFrame | None,
     updates: DataFrame,
@@ -349,15 +423,23 @@ def scd1_merge(
     updateAll/insertAll). A ``grouping_jk`` column, when present on both
     sides, is appended to the join keys (Utility.scala:417-421) — it is a
     bounded hash bucket that tightens the shuffle key and prunes skew.
+
+    A merge with the default clauses on one key whose batch Spark
+    estimates small enough to broadcast takes ``_delete_insert``, which
+    gives the same rows and touched partitions from one collect of the
+    batch and no join; every other merge joins (``merge_apply``).
     """
-    u = _dedup_updates(updates, join_keys, updated_at_col)
     if target is None:
-        return u
+        return _dedup_updates(updates, join_keys, updated_at_col)
     keys = list(join_keys)
-    if grouping_key_col in u.columns and grouping_key_col in target.columns:
+    if grouping_key_col in updates.columns and grouping_key_col in target.columns:
         keys.append(grouping_key_col)
+    if len(keys) == 1 and clauses is None and not (extra_join_condition or allow_schema_evolution):
+        out = _delete_insert(target, updates, keys[0], updated_at_col, partition_col)
+        if out is not None:
+            return out
     return merge_apply(
-        target, u, keys, clauses,
+        target, _dedup_updates(updates, join_keys, updated_at_col), keys, clauses,
         extra_join_condition=extra_join_condition, partition_col=partition_col,
         allow_schema_evolution=allow_schema_evolution, batch=updates,
     )

@@ -446,7 +446,7 @@ def _score_qterms_scored(
 #: documented r14 gap was tiny mostly-empty leaves (a 31-word synthetic
 #: corpus under 64 buckets; dense serves pay per-file open costs for
 #: files that hold nothing). Growing BEYOND 64 was A/B'd at 1x/10x
-#: (PROBE.md r15) and bought nothing: a bounded query of T distinct
+#: (round 15) and bought nothing: a bounded query of T distinct
 #: terms touches min(T, n) buckets either way — T is the binding term
 #: for every realistic batch — while build cost and leaf-file count
 #: (leaves = doc_buckets x term_buckets) grow with the grid; the

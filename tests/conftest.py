@@ -18,6 +18,27 @@ def spark():
     return get_spark(shuffle_partitions=4)
 
 
+@pytest.fixture(scope="session")
+def broadcast_off(spark):
+    """``with broadcast_off():`` runs its block with the session's
+    ``autoBroadcastJoinThreshold`` at -1, which also turns off the small
+    batch SCD1 plan (``operators/merge.py::_delete_insert``)."""
+    from contextlib import contextmanager
+
+    key = "spark.sql.autoBroadcastJoinThreshold"
+
+    @contextmanager
+    def off():
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            yield
+        finally:
+            spark.conf.set(key, old)
+
+    return off
+
+
 @pytest.fixture()
 def emp(spark):
     """The reference's emp fixture (src/test/resources/emp.csv — 5 rows,

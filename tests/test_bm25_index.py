@@ -395,7 +395,7 @@ def test_sized_term_buckets_rule(spark, tmp_path):
     )
 
     # the rule itself: pow2 of vocab/512, clamped [8, 64] — the cap is
-    # the proven fixed default (growing past it A/B'd worse; PROBE.md r15)
+    # the proven fixed default (growing past it A/B'd worse in round 15)
     assert sized_term_buckets(0) == 8
     assert sized_term_buckets(31) == 8       # the synthetic corpus
     assert sized_term_buckets(512 * 16) == 16

@@ -485,36 +485,80 @@ def _bulk_batch(spark, path, rows):
     return spark.read.parquet(path).withColumn("part", F.expr("id div 10"))
 
 
-def test_partitioned_scd1_merge_and_write_job_count(spark, tmp_path, jobs_in_group):
-    """A toy bulk batch (duplicate keys, a NULL partition) merges into a
-    partitioned table and commits its touched partitions in 5 Spark jobs:
-    1 for the touched-partition collect, a shuffle-free scan of the raw
-    batch, and 4 for the merge write. A collect that runs the dedup window
-    or a distinct exchange raises the count."""
-    s = VersionedParquetStore(spark, str(tmp_path / "bulk"))
-    s.write(
+def _bulk_target(spark, store):
+    store.write(
         spark.createDataFrame(
             [(i, f"n{i}", float(i), 0) for i in range(50)] + [(None, "z", 0.0, 0)],
             BULK_DDL,
         ).withColumn("part", F.expr("id div 10")),
         "t", partition_by=["part"],
     )
+
+
+def _bulk_rows(b):
+    """ids in partitions 0-2 (every other one twice), a new partition 6
+    and a NULL id."""
+    rows = [(i, f"u{b}{i}", float(b), b + 1) for i in range(b, 30, 7)]
+    rows += [(i, f"d{b}{i}", float(b), b + 2) for i in range(b, 30, 14)]
+    return rows + [(60 + b, "new", 0.0, 1), (None, "n", 0.0, 9)]
+
+
+def _bulk_commits(spark, tmp_path, jobs_in_group) -> list[int]:
+    """Two toy bulk batches read from parquet, merged into a partitioned
+    table and committed: the Spark jobs of each merge and commit. Each
+    commit rewrites only its touched partitions."""
+    s = VersionedParquetStore(spark, str(tmp_path / "bulk"))
+    _bulk_target(spark, s)
+    out = []
     for b in range(2):
-        # ids in partitions 0-2 (every other one twice), a new partition 6
-        rows = [(i, f"u{b}{i}", float(b), b + 1) for i in range(b, 30, 7)]
-        rows += [(i, f"d{b}{i}", float(b), b + 2) for i in range(b, 30, 14)]
-        rows += [(60 + b, "new", 0.0, 1), (None, "n", 0.0, 9)]
-        upd = _bulk_batch(spark, str(tmp_path / f"in{b}"), rows)
+        upd = _bulk_batch(spark, str(tmp_path / f"in{b}"), _bulk_rows(b))
         target = s.read("t")
-        jobs = jobs_in_group(f"scd1-commit-{b}", lambda: s.write(
+        out.append(jobs_in_group(f"scd1-commit-{b}", lambda: s.write(
             scd1_merge(target, upd, ["id"], updated_at_col="updated_at",
                        partition_col="part"),
-            "t", partition_by=["part"]))
-        assert jobs == 5
+            "t", partition_by=["part"])))
         assert _linked(s, "t", s.current_version("t")) == {"part=3", "part=4"}
     got = s.read("t")
     assert got.count() == 55  # 50 ids + 2 new ids + 3 NULL-id rows
     assert got.filter("id = 14").collect()[0]["name"] == "u014"  # earliest wins
+    return out
+
+
+def test_partitioned_scd1_merge_and_write_job_count(spark, tmp_path, jobs_in_group):
+    """A toy bulk batch (duplicate keys, a NULL partition), within the
+    broadcast threshold, merges and commits in 3 Spark jobs: one collect
+    of the raw batch (touched partitions, key set and rows), then the
+    clustering map stage and the write of the touched slice. A plan that
+    joins, or a second pass over the batch, raises the count."""
+    assert _bulk_commits(spark, tmp_path, jobs_in_group) == [3, 3]
+
+
+def test_partitioned_scd1_join_plan_job_count(
+    spark, tmp_path, jobs_in_group, broadcast_off
+):
+    """The same batches with the broadcast threshold at -1 take the join
+    plan, in 5 Spark jobs: the touched-partition collect, a shuffle-free
+    scan of the raw batch, and 4 for the merge write. A collect that runs
+    the dedup window or a distinct exchange raises the count."""
+    with broadcast_off():
+        assert _bulk_commits(spark, tmp_path, jobs_in_group) == [5, 5]
+
+
+def test_rdd_batch_keeps_the_join_plan(spark, tmp_path, jobs_in_group):
+    """A batch built from a Python list is an RDD scan, for which Spark has
+    no size estimate: it merges through the join (5 jobs, as with the
+    threshold off) and commits the same rows and carry."""
+    s = VersionedParquetStore(spark, str(tmp_path / "bulk"))
+    _bulk_target(spark, s)
+    upd = spark.createDataFrame(_bulk_rows(0), BULK_DDL).withColumn(
+        "part", F.expr("id div 10"))
+    target = s.read("t")
+    jobs = jobs_in_group("scd1-rdd", lambda: s.write(
+        scd1_merge(target, upd, ["id"], updated_at_col="updated_at", partition_col="part"),
+        "t", partition_by=["part"]))
+    assert jobs == 5
+    assert _linked(s, "t", 2) == {"part=3", "part=4"}
+    assert s.read("t").count() == 53
 
 
 def test_duplicate_key_across_partitions_pruned_equals_unpruned(spark, store):
